@@ -12,8 +12,12 @@ window and cost the round its externally-recorded bench number):
                   latency percentiles (same document as the sidecar)
   stdout line 2:  ONE SHORT summary line, always last:
     {"metric": "headline_total", "value": <warm-sum-sec>, "unit": "sec",
-     "cold_total": <cold-sum-sec>, "n_queries": N, "cpus": C, "sf": 0.1,
-     "detail": "BENCH_local_detail_c<C>.json"}
+     "cold_total": <cold-sum-sec>, "n_queries": N, "n_errors": E, "cpus": C,
+     "sf": 0.1, "detail": "BENCH_local_detail_c<C>.json"}
+
+A query that raises is recorded in the detail's ``errors`` map
+(``"<Type>: <msg>"``) and left out of the totals; the run goes on, prints
+the summary line, and then exits 1.
 
 The full detail is written to ``BENCH_local_detail_c{cpus}.json`` (per-run
 sidecar, r14: the driver's 8-core scaling run used to clobber the 32-core
@@ -335,6 +339,35 @@ def _host_control(spark) -> dict:
     }
 
 
+def time_query(spark, fn, sf_dir: str) -> dict:
+    """Time one headline query: ``{"runs": [sec, ...]}``, or
+    ``{"error": "<Type>: <msg>"}`` when it raises, so one failing query
+    costs its own row, not the whole headline. Tracked persists are
+    released either way — no cross-query cache borrowing or block leak.
+
+    Adaptive min-of-2/3: the third run exists ONLY to outvote the host's
+    multi-second CPU-throttle bursts (see module docstring). When runs 1-2
+    already agree within 25% no burst hit them and the min is trustworthy;
+    paying the third run anyway pushed the full 108-query session to ~10
+    min of wall clock, which risks any outer harness timeout for zero
+    information."""
+
+    def run() -> float:
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
+    try:
+        runs = [run(), run()]
+        if abs(runs[0] - runs[1]) > 0.25 * min(runs):
+            runs.append(run())
+        return {"runs": runs}
+    except Exception as exc:  # noqa: BLE001 — recorded, the bench goes on
+        return {"error": f"{type(exc).__name__}: {exc}"}
+    finally:
+        release_persisted()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("kinesis-demo-spark-bench")
@@ -350,26 +383,16 @@ def main() -> None:
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     medians: dict[str, float] = {}
+    errors: dict[str, str] = {}
     for name in HEADLINE:
         fn = registry.get(name)
         if fn is None:
             continue
-        # Adaptive min-of-2/3: the third run exists ONLY to outvote the
-        # host's multi-second CPU-throttle bursts (see module docstring).
-        # When runs 1-2 already agree within 25% no burst hit them and the
-        # min is trustworthy; paying the third run anyway pushed the full
-        # 108-query session to ~10 min of wall clock, which risks any
-        # outer harness timeout for zero information.
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        if abs(runs[0] - runs[1]) > 0.25 * min(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        release_persisted()  # no cross-query cache borrowing / block leak
+        res = time_query(spark, fn, sf_dir)
+        if "error" in res:
+            errors[name] = res["error"]
+            continue
+        runs = res["runs"]
         cold[name] = round(runs[0], 3)
         timings[name] = round(min(runs), 3)
         # median alongside min (VERDICT r9 #2): a host burst that distorts
@@ -414,6 +437,7 @@ def main() -> None:
         "queries": timings,
         "queries_cold": cold,
         "queries_median": medians,
+        "errors": errors,
         "cold_total": round(sum(cold.values()), 3),
         "serving": serving,
         "serving_sf1": serving_sf1,
@@ -442,12 +466,15 @@ def main() -> None:
                 "unit": "sec",
                 "cold_total": detail["cold_total"],
                 "n_queries": len(timings),
+                "n_errors": len(errors),
                 "cpus": cpus,
                 "sf": sf,
                 "detail": per_run,
             }
         )
     )
+    if errors:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

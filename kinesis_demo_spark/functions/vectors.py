@@ -86,6 +86,24 @@ def sign_bucket_band(a: Column | str, start: int, bits: int) -> Column:
     return out.cast("long")
 
 
+def sign_bands(a: Column | str, bits: int, tables: int) -> Column:
+    """The multi-table LSH index row generator: one exploded
+    ``struct(tbl, bucket)`` per table t, bucketing dims [t*bits, (t+1)*bits)
+    with ``sign_bucket_band``. Every banded index and the recall report
+    that audits it band through this one expression."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(t).alias("tbl"),
+                    sign_bucket_band(a, t * bits, bits).alias("bucket"),
+                )
+                for t in range(tables)
+            ]
+        )
+    )
+
+
 def sign_bucket_band_sql(a: str, start: int, bits: int) -> str:
     return " + ".join(
         f"(CASE WHEN {a}[{start + d + 1}] >= 0 THEN {1 << d} ELSE 0 END)"

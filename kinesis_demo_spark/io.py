@@ -10,6 +10,7 @@ partitioned lake path; nothing here assumes local files.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -147,6 +148,58 @@ def release_persisted() -> int:
     return n
 
 
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
+    *,
+    until: Callable[[DataFrame, DataFrame], bool] | None = None,
+    checkpoint_every: int = 1,
+    name: str,
+) -> DataFrame:
+    """The round driver for every driver-sequenced iterative operator:
+    ``state = step(state)`` for at most ``max_rounds`` rounds.
+
+    Lineage: round r (1-based) ends in ``track_checkpoint`` when r is a
+    multiple of ``checkpoint_every``, else in ``track_persist``. Unbroken,
+    each round's plan re-embeds every earlier round (exponentially when a
+    round reads its input twice, like k-core's semi-joins); larger
+    ``checkpoint_every`` runs several lazily persisted rounds as one DAG
+    between breaks (Drizzle-style group scheduling). The break is a
+    localCheckpoint, not a persist, by measurement (GRAPH_WATCH.json): at
+    sf0.1 persist-only rounds were within noise, but at sf1 they lost — LPA
+    0.78x, and k-core swung 6.5 / 11.6 / 52.4 s as nested lineage recomputed
+    rounds evicted under memory pressure — while the checkpoint form's worst
+    run was 8.7 s. On a cluster, ``checkpoint()`` to the lake instead.
+
+    Convergence: ``until(old, new)`` is a driver-scalar check after each
+    round; when it holds the loop returns ``new``, and if it never holds
+    within ``max_rounds`` the loop raises rather than return a partial
+    fixpoint. Without ``until`` the loop runs exactly ``max_rounds``.
+
+    Release: once an ``until`` check has materialised ``new``, a persisted
+    previous state is unpersisted; a checkpointed one has no lineage to
+    recompute from and stays for the caller's ``release_persisted``.
+    Fixed-round loops never release: their persists are still lazy."""
+    for rnd in range(1, max_rounds + 1):
+        new = step(state)
+        new = track_checkpoint(new) if rnd % checkpoint_every == 0 else track_persist(new)
+        if until is None:
+            state = new
+            continue
+        done = until(state, new)
+        if state.is_cached:
+            state.unpersist()
+        state = new
+        if done:
+            return state
+    if until is not None:
+        raise RuntimeError(
+            f"{name} did not converge within {max_rounds} rounds; raise its round budget"
+        )
+    return state
+
+
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Round-robin repartition before compute-heavy per-row stages — but ONLY
     when the input is under-parallel (fewer partitions than
@@ -187,13 +240,3 @@ def fan_out(df: DataFrame) -> DataFrame:
     Unlike ``spread`` this never inspects the plan, so it is safe after
     shuffles under AQE."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every fixture table as a temp view for spark.sql queries."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

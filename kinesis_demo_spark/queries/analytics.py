@@ -2172,10 +2172,10 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-occurrence lift already uses); each
     iteration is one (edge join ranks) shuffle on src + one dst-keyed
     aggregate, the textbook distributed PageRank round — now on plain
-    BIGINTs, cheaper per row than the previous decimal128 path. Ranks
-    persist per round (lineage O(iters), not O(iters^2)); only the
+    BIGINTs, cheaper per row than the previous decimal128 path. Rounds run
+    through io.iterate with a checkpoint every 4th round; only the
     iteration counter lives on the driver."""
-    from ..io import track_checkpoint, track_persist
+    from ..io import iterate, track_persist
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     edges_raw = _copurchase_weighted_edges(li)
@@ -2193,8 +2193,8 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_nodes = nodes.count()
     base9 = (2 * 150_000_000 + n_nodes) // (2 * n_nodes)
     init9 = (2 * PAGERANK_P9 + n_nodes) // (2 * n_nodes)
-    ranks = nodes.select("part", F.lit(init9).cast("long").alias("r"))
-    for it in range(PAGERANK_ITERS):
+
+    def power_step(ranks: DataFrame) -> DataFrame:
         contrib = (
             edges.join(ranks, edges.src == ranks.part)
             .select(
@@ -2206,34 +2206,21 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("c").alias("in9"))
         )
-        nxt = (
-            nodes.join(contrib, nodes.part == contrib.dst, "left_outer")
-            .select(
-                "part",
-                (
-                    F.lit(base9)
-                    + F.expr("(170 * coalesce(in9, 0) + 100) DIV 200")
-                ).cast("long").alias("r"),
-            )
+        return nodes.join(contrib, nodes.part == contrib.dst, "left_outer").select(
+            "part",
+            (
+                F.lit(base9)
+                + F.expr("(170 * coalesce(in9, 0) + 100) DIV 200")
+            ).cast("long").alias("r"),
         )
-        if (it + 1) % 4 == 0:
-            # Lineage truncation every 4 rounds (VERDICT r5 #3): the rank
-            # DataFrame otherwise unrolls every prior join into one growing
-            # plan, so an evicted cache block recomputes from round 0.
-            # localCheckpoint is eager — it IS the per-round materialization
-            # (on a real cluster, checkpoint() to the lake for executor-loss
-            # tolerance).
-            nxt = track_checkpoint(nxt)
-        else:
-            # persist WITHOUT an eager count (r13): each round's ranks have
-            # exactly one consumer (the next round's contrib join), so the
-            # cache fills on first use anyway — the former count() was one
-            # extra full-plan driver-blocking job per non-checkpoint round.
-            nxt = track_persist(nxt)
-        ranks = nxt
-    # caches stay tracked; the CALLER releases them after its action (the
-    # io.track_persist contract) — the returned plan reads the final
-    # persisted ranks directly
+
+    ranks = iterate(
+        nodes.select("part", F.lit(init9).cast("long").alias("r")),
+        power_step,
+        PAGERANK_ITERS,
+        checkpoint_every=4,
+        name="pagerank_copurchase",
+    )
     return ranks.select(
         "part",
         F.col("r").alias("pagerank_e9"),
@@ -3490,38 +3477,6 @@ LPA_ROUNDS = 3
 GRAPH_MAX_FIXPOINT_ROUNDS = 30
 
 
-def _round_break(df, lineage: str):
-    """Per-round lineage break for the fixed-round iterative-graph loops —
-    the two measured forms (VERDICT r10 #3, the iterative-family drift
-    probe):
-
-    - "checkpoint": eager localCheckpoint — truncates the LOGICAL plan to a
-      checkpoint leaf. Mandatory for the fixpoint variants (k-core's alive
-      set is referenced twice per round, so pure lineage doubles per round
-      — a 22-round fixpoint would hand the analyzer a ~4M-leaf plan), but
-      materializes every round's full set eagerly through the RDD path,
-      which is where the cross-session host/IO sensitivity concentrated.
-    - "cache": persist — lineage still nests (bounded: 2^ROUNDS leaves at
-      k-core's 4 rounds = 16 cached-relation hits, linear for LPA), but
-      execution computes each round once, AQE stays on for the whole plan,
-      and nothing is eagerly materialized per round.
-
-    tools/graph_watch.py times both forms head-to-head in one session
-    (results sealed in GRAPH_WATCH.json). MEASURED KEEP DECISION (r11):
-    checkpoint stays the registered default. At sf0.1 cache is 1.06-1.11x
-    faster on min-of-3 — inside run noise — but at sf1 the cache form
-    LOSES: LPA 0.78x on min, and k-core's cache runs swing 6.5/11.6/52.4 s
-    (the nested 2^rounds lineage recomputes when executor storage evicts a
-    round under memory pressure — precisely the failure a 1000-executor
-    run cannot afford), while the checkpoint form's worst run is 8.7 s.
-    The r9/r10 cross-session drift on this family is therefore host/IO
-    noise on the eager materialization, not a fixable plan defect; the
-    GRAPH_WATCH two-session min+median panel is the sealed reference band
-    for future regression claims."""
-    from ..io import track_checkpoint, track_persist
-
-    return track_checkpoint(df) if lineage == "checkpoint" else track_persist(df)
-
 # MATERIALIZED is load-bearing (the corpus.py BPE precedent): the edges CTE
 # is referenced by every unrolled round, and DuckDB would otherwise inline
 # and re-run the lineitem self-join once per round (~3x the whole oracle).
@@ -3564,8 +3519,7 @@ FROM l{LPA_ROUNDS} f JOIN sizes s ON s.lab = f.lab
 """,
 )
 def graph_label_propagation(
-    spark: SparkSession, sf_dir: str, fixpoint: bool = False,
-    lineage: str = "checkpoint",
+    spark: SparkSession, sf_dir: str, fixpoint: bool = False
 ) -> DataFrame:
     """Community detection by synchronous weighted label propagation
     (Raghavan et al. 2007) over the part co-purchase graph ({LPA_ROUNDS}
@@ -3580,8 +3534,8 @@ def graph_label_propagation(
 
     fixpoint=True switches from the fixed {LPA_ROUNDS}-round unroll (the
     oracle-matched registered shape) to loop-until-no-label-changes with a
-    {GRAPH_MAX_FIXPOINT_ROUNDS}-round budget, raising on non-convergence —
-    the dedup_clusters discipline. Synchronous LPA can 2-cycle on
+    {GRAPH_MAX_FIXPOINT_ROUNDS}-round budget; io.iterate raises on
+    non-convergence. Synchronous LPA can 2-cycle on
     pathological graphs; the raise makes that loud instead of returning a
     non-fixpoint labeling (measured: the fixture converges in 5 rounds at
     sf0.001, 7 at sf0.01 — tests/test_analytics.py pins budget headroom).
@@ -3590,13 +3544,13 @@ def graph_label_propagation(
 
     Scale: the graph is symmetric so every node appears as a dst — one
     vote-join (shuffle on src) + one (part, lab) aggregate + one argmax per
-    round, all map-side combinable; labels persist per round and the loop
-    count is fixed, so the DAG is {LPA_ROUNDS} joined stages, the same
+    round, all map-side combinable; labels are checkpointed per round and
+    the loop count is fixed, so the DAG is {LPA_ROUNDS} joined stages, the same
     batch-iterative shape as pagerank_copurchase. Hub skew lands on the
     vote aggregate key (dst, lab) — two-level, not per-dst — and AQE
     splits any residual hot key."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    from ..io import track_checkpoint, track_persist
+    from ..io import iterate, track_checkpoint, track_persist
 
     # repartition("src") before persist: the per-round vote join hashes on
     # src, so caching the edge list already src-partitioned means each round
@@ -3610,9 +3564,8 @@ def graph_label_propagation(
     )
     if fixpoint:
         labels = track_checkpoint(labels)
-    rounds = GRAPH_MAX_FIXPOINT_ROUNDS if fixpoint else LPA_ROUNDS
-    converged = not fixpoint
-    for _ in range(rounds):
+
+    def vote_round(labels: DataFrame) -> DataFrame:
         # One exchange per round, not two (VERDICT r13 #3, guide §2.4): the
         # vote aggregate keys on (dst, lab) and the argmax on dst — planned
         # naively that is Exchange(hash(dst,lab)) THEN Exchange(hash(dst)).
@@ -3620,9 +3573,8 @@ def graph_label_propagation(
         # distributions (hash(dst) clusters (dst, lab) too — subset-key
         # partitioning), so the vote sum and the argmax both run
         # partition-local after a single shuffle of the raw vote rows.
-        # Values are partitioning-independent (oracle-checked); measured
-        # same-session A/B below. AQE still coalesces the keyless-N
-        # repartition output.
+        # Values are partitioning-independent (oracle-checked). AQE still
+        # coalesces the keyless-N repartition output.
         votes = (
             edges.join(labels, edges.src == labels.part)
             .select("dst", "lab", "w")
@@ -3630,35 +3582,27 @@ def graph_label_propagation(
             .groupBy("dst", "lab")
             .agg(F.sum("w").alias("wv"))
         )
-        # per-round lineage break (labels feed the next round once, so the
-        # cache form's plan growth is LINEAR here); fixpoint keeps the
-        # eager checkpoint so the convergence count() per round stays cheap.
-        new_labels = _round_break(
+        return (
             votes.groupBy("dst")
             .agg(F.min(F.struct((-F.col("wv")).alias("nw"), F.col("lab").alias("l"))).alias("m"))
-            .select(F.col("dst").alias("part"), F.col("m.l").alias("lab")),
-            "checkpoint" if fixpoint else lineage,
+            .select(F.col("dst").alias("part"), F.col("m.l").alias("lab"))
         )
-        if fixpoint:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "part")
-                .filter(F.col("n.lab") != F.col("o.lab"))
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                converged = True
-                break
-        else:
-            labels = new_labels
-    if not converged:
-        raise RuntimeError(
-            f"graph_label_propagation did not reach a fixpoint within "
-            f"{GRAPH_MAX_FIXPOINT_ROUNDS} rounds — synchronous LPA can "
-            f"oscillate on pathological graphs; inspect the label 2-cycle "
-            f"or switch to the fixed-round variant"
-        )
+
+    def settled(old: DataFrame, new: DataFrame) -> bool:
+        return (
+            new.alias("n")
+            .join(old.alias("o"), "part")
+            .filter(F.col("n.lab") != F.col("o.lab"))
+            .count()
+        ) == 0
+
+    labels = iterate(
+        labels,
+        vote_round,
+        GRAPH_MAX_FIXPOINT_ROUNDS if fixpoint else LPA_ROUNDS,
+        until=settled if fixpoint else None,
+        name="graph_label_propagation",
+    )
     sizes = labels.groupBy("lab").agg(F.count(F.lit(1)).alias("community_size"))
     return labels.join(sizes, "lab").select(
         "part", F.col("lab").alias("community"), "community_size"
@@ -3783,8 +3727,7 @@ SELECT part, deg AS core_degree, kk.k AS k_threshold FROM a{KCORE_ROUNDS}, kk
 """,
 )
 def graph_kcore(
-    spark: SparkSession, sf_dir: str, fixpoint: bool = False,
-    lineage: str = "checkpoint",
+    spark: SparkSession, sf_dir: str, fixpoint: bool = False
 ) -> DataFrame:
     """K-core decomposition of the part co-purchase graph by synchronous
     peeling ({KCORE_ROUNDS} fixed rounds): drop every node whose degree in
@@ -3804,8 +3747,8 @@ def graph_kcore(
     rows after 4 rounds; fixpoints 192 / 1744 / 17732).
 
     fixpoint=True peels until no node drops (the TRUE k-core, convergence
-    certified) within a {GRAPH_MAX_FIXPOINT_ROUNDS}-round budget, raising
-    on non-convergence — the dedup_clusters discipline. The alive set
+    certified) within a {GRAPH_MAX_FIXPOINT_ROUNDS}-round budget; io.iterate
+    raises on non-convergence. The alive set
     shrinks monotonically, so one count() scalar per round detects the
     fixpoint (measured: 3 rounds at sf0.001, 20 at sf0.01, 22 at sf0.1 —
     inside the budget with headroom).
@@ -3821,7 +3764,7 @@ def graph_kcore(
     round — the classic batch-iterative shape shared with
     pagerank_copurchase. Peeling converges in O(degeneracy) rounds;
     production would loop to fixpoint with the same per-round plan."""
-    from ..io import track_checkpoint, track_persist
+    from ..io import iterate, track_persist
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # src-partitioned cache (the LPA/pagerank discipline): the first semi-join
@@ -3836,39 +3779,34 @@ def graph_kcore(
         ).alias("k")
     )
     alive = edges.select(F.col("src").alias("part")).distinct()
-    n_alive = alive.count() if fixpoint else None
-    converged = not fixpoint
-    for _ in range(GRAPH_MAX_FIXPOINT_ROUNDS if fixpoint else KCORE_ROUNDS):
+
+    def peel(alive: DataFrame) -> DataFrame:
         deg = (
             edges.join(alive.select(F.col("part").alias("src")), "src")
             .join(alive.select(F.col("part").alias("dst")), "dst")
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        # per-round lineage break: each round's alive set references the
-        # previous round TWICE (both semi-join sides), so pure lineage grows
-        # exponentially in rounds. The fixpoint path MUST checkpoint (22
-        # rounds -> ~4M-leaf plan otherwise); the fixed-round registered
-        # shape uses the measured winner of _round_break's two forms.
-        alive = _round_break(
+        return (
             deg.crossJoin(F.broadcast(k_row))
             .filter(F.col("deg") >= F.col("k"))
-            .select(F.col("src").alias("part"), "deg"),
-            "checkpoint" if fixpoint else lineage,
+            .select(F.col("src").alias("part"), "deg")
         )
-        if fixpoint:
-            n = alive.count()
-            if n == n_alive:
-                converged = True
-                break
-            n_alive = n
-    if not converged:
-        raise RuntimeError(
-            f"graph_kcore did not reach its peel fixpoint within "
-            f"{GRAPH_MAX_FIXPOINT_ROUNDS} rounds — the graph's degeneracy "
-            f"ordering is deeper than the budget; raise "
-            f"GRAPH_MAX_FIXPOINT_ROUNDS"
-        )
+
+    # the alive set only shrinks, so an unchanged count is the fixpoint
+    sizes = [alive.count()] if fixpoint else []
+
+    def peeled(_old: DataFrame, new: DataFrame) -> bool:
+        sizes.append(new.count())
+        return sizes[-1] == sizes[-2]
+
+    alive = iterate(
+        alive,
+        peel,
+        GRAPH_MAX_FIXPOINT_ROUNDS if fixpoint else KCORE_ROUNDS,
+        until=peeled if fixpoint else None,
+        name="graph_kcore",
+    )
     return alive.crossJoin(F.broadcast(k_row)).select(
         "part", F.col("deg").alias("core_degree"), F.col("k").cast("long").alias("k_threshold")
     )

@@ -42,7 +42,7 @@ from ..functions.hashing import (
     h60,
     h60_sql,
 )
-from ..io import fan_out, load_table, spread, track_checkpoint, track_persist
+from ..io import fan_out, iterate, load_table, spread, track_checkpoint, track_persist
 from ..registry import register
 
 JACCARD_THRESHOLD = 0.2
@@ -978,7 +978,7 @@ from ..functions.vectors import (  # noqa: E402  (shared with similarity.py)
     dot_fold,
     dot_fold_sql,
     sign_bucket,
-    sign_bucket_band,
+    sign_bands,
     sign_bucket_band_sql,
     sign_bucket_sql,
 )
@@ -1165,19 +1165,7 @@ def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the approximate variant stays value-hash checked."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     v = emb.select("vec_id", "embedding")
-    band_rows = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    sign_bucket_band(
-                        "embedding", t * COSINE_LSH_BAND_BITS, COSINE_LSH_BAND_BITS
-                    ).alias("bucket"),
-                )
-                for t in range(COSINE_LSH_TABLES)
-            ]
-        )
-    )
+    band_rows = sign_bands("embedding", COSINE_LSH_BAND_BITS, COSINE_LSH_TABLES)
     banded = v.select("vec_id", "embedding", band_rows.alias("b")).select(
         "vec_id", "embedding", "b.tbl", "b.bucket"
     )
@@ -1296,9 +1284,6 @@ def dedup_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MAX_CC_ITERATIONS = 20
-# Lineage-truncation cadence for iterative loops: any round whose number is a
-# multiple of this localCheckpoints its state, bounding both plan size and
-# the recompute blast radius to O(CC_CHECKPOINT_EVERY) rounds.
 CC_CHECKPOINT_EVERY = 2
 
 
@@ -1358,20 +1343,15 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # references the edge set, so an un-truncated edges lineage re-embeds
     # the whole inverted-index Jaccard pipeline once per round in the final
     # plan (that alone was ~200 audited shuffles), and an evicted cache
-    # block would recompute near-dup from the shingle scan. The checkpoint
-    # materializes the same rows the persist did and cuts the plan to a
-    # leaf. Checkpointed DataFrames are deliberately NOT unpersisted inside
-    # the loop — truncated lineage cannot be recomputed, so their blocks
-    # must outlive every descendant still in flight (GC reclaims them).
+    # block would recompute near-dup from the shingle scan.
     edges = track_checkpoint(
         fwd.union(jp.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
     )
     docs = _docs(spark, sf_dir).select("doc_id")
     labels = track_persist(docs.select("doc_id", F.col("doc_id").alias("cluster_id")))
     labels.count()
-    labels_is_ckpt = False
-    changed = -1
-    for rnd in range(MAX_CC_ITERATIONS):
+
+    def min_label_round(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges.v == labels.doc_id)
             .groupBy(F.col("u").alias("doc_id"))
@@ -1382,46 +1362,24 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # separate new-vs-old join for the convergence count re-shuffled
         # both label tables once per round; filtering the already-persisted
         # table costs one cached scan and no exchange.
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-                (F.col("nbr_min") < F.col("cluster_id")).alias("chg"),
-            )
+        return labels.join(neighbor_min, "doc_id", "left").select(
+            "doc_id",
+            F.least(
+                F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
+            ).alias("cluster_id"),
+            (F.col("nbr_min") < F.col("cluster_id")).alias("chg"),
         )
-        if (rnd + 1) % CC_CHECKPOINT_EVERY == 0:
-            # Truncate label lineage every CC_CHECKPOINT_EVERY rounds: the
-            # returned plan then carries at most that many rounds of joins
-            # over checkpoint leaves instead of the whole history, bounding
-            # both plan compilation and the recompute blast radius of an
-            # evicted block. On a real cluster swap for checkpoint() to the
-            # lake so executor loss cannot orphan the truncated lineage.
-            new_labels = track_checkpoint(new_labels)
-            new_is_ckpt = True
-        else:
-            new_labels = track_persist(new_labels)
-            new_is_ckpt = False
-        changed = new_labels.filter(F.col("chg")).count()
-        if not labels_is_ckpt:
-            # persisted intermediates can be dropped (lineage re-derives
-            # them); checkpointed ones cannot — descendants reference their
-            # blocks as leaves, so those are left for GC.
-            labels.unpersist()
-        labels, labels_is_ckpt = new_labels, new_is_ckpt
-        if changed == 0:
-            break
-    if changed != 0:
-        # A component with diameter > MAX_CC_ITERATIONS has not reached its
-        # fixpoint; silently returning partial labels would diverge from the
-        # recursive-CTE oracle, so fail loudly instead.
-        raise RuntimeError(
-            f"dedup_clusters did not converge within {MAX_CC_ITERATIONS} "
-            f"label-propagation rounds ({changed} labels still changing); "
-            "raise MAX_CC_ITERATIONS for graphs with larger diameters"
-        )
+
+    # past MAX_CC_ITERATIONS (a wider component) iterate raises: partial
+    # labels would diverge from the recursive-CTE oracle
+    labels = iterate(
+        labels,
+        min_label_round,
+        MAX_CC_ITERATIONS,
+        until=lambda _old, new: new.filter(F.col("chg")).count() == 0,
+        checkpoint_every=CC_CHECKPOINT_EVERY,
+        name="dedup_clusters",
+    )
     return labels.select("doc_id", "cluster_id")
 
 
@@ -1447,9 +1405,8 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     large-star: every node u hangs its larger neighbors onto
     m = min(N(u) ∪ u); small-star: each edge oriented toward its smaller
     endpoint, u hangs N(u) ∪ u onto the minimum. Edge sets are kept
-    canonical (a < b) and distinct; lineage is localCheckpointed per round
-    (star rounds REWRITE the whole edge set, so per-round truncation is the
-    O(1)-plan discipline; swap for lake checkpoint() on a cluster)."""
+    canonical (a < b) and distinct and checkpointed every round (star
+    rounds REWRITE the whole edge set)."""
     jp = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     # canonical undirected edge set: (a < b), distinct
     cur = track_checkpoint(
@@ -1457,8 +1414,8 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("doc_a", "doc_b").alias("a"), F.greatest("doc_a", "doc_b").alias("b")
         ).distinct()
     )
-    n_cur = cur.count()
-    for _ in range(MAX_STAR_ROUNDS):
+
+    def star_round(cur: DataFrame) -> DataFrame:
         # ---- large-star: both orientations; attach v > u to min(N(u), u)
         both = cur.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
             cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -1483,19 +1440,17 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("a") != F.col("b"))
         )
         ss_self = smins.select(F.col("m").alias("a"), F.col("u").alias("b"))
-        nxt = track_checkpoint(ss_neighbors.union(ss_self).distinct())
-        n_nxt = nxt.count()
+        return ss_neighbors.union(ss_self).distinct()
+
+    sizes = [cur.count()]
+
+    def unchanged(old: DataFrame, new: DataFrame) -> bool:
         # converged iff the canonical edge set is unchanged (both distinct:
         # equal counts + empty difference)
-        if n_nxt == n_cur and nxt.exceptAll(cur).count() == 0:
-            cur = nxt
-            break
-        cur, n_cur = nxt, n_nxt
-    else:
-        raise RuntimeError(
-            f"dedup_clusters_star did not converge within {MAX_STAR_ROUNDS} "
-            "large-star/small-star rounds"
-        )
+        sizes.append(new.count())
+        return sizes[-1] == sizes[-2] and new.exceptAll(old).count() == 0
+
+    cur = iterate(cur, star_round, MAX_STAR_ROUNDS, until=unchanged, name="dedup_clusters_star")
     # at the fixpoint every edge is (root, member); roots label themselves
     comp = cur.groupBy(F.col("b").alias("doc_id")).agg(F.min("a").alias("mn")).union(
         cur.groupBy(F.col("a").alias("doc_id")).agg(F.min("a").alias("mn"))

@@ -32,10 +32,10 @@ from ..functions.vectors import (
     dot_fold_sql,
     norm,
     norm_sql,
-    sign_bucket_band,
+    sign_bands,
     sign_bucket_band_sql,
 )
-from ..io import fan_out, load_table, spread, track_checkpoint, track_persist
+from ..io import fan_out, iterate, load_table, spread, track_persist
 from ..registry import register
 
 N_QUERIES = 5  # vec_id < 5 at every scale factor
@@ -133,19 +133,7 @@ def _lsh_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     v = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    sign_bucket_band(
-                        "embedding", t * ANN_LSH_BAND_BITS, ANN_LSH_BAND_BITS
-                    ).alias("bucket"),
-                )
-                for t in range(ANN_LSH_TABLES)
-            ]
-        )
-    )
+    bands = sign_bands("embedding", ANN_LSH_BAND_BITS, ANN_LSH_TABLES)
     slim = v.select("vec_id", bands.alias("b")).select("vec_id", "b.tbl", "b.bucket")
     q_slim = F.broadcast(
         slim.filter(F.col("vec_id") < N_QUERIES).select(
@@ -764,14 +752,14 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cid"),
         F.transform("embedding", lambda x: x.cast("double")).alias("c"),
     )
-    assign = None
-    for _ in range(KMEANS_ITERS - 1):
-        assign = _assign(vecs, cents)
-        # K-row centroid table: localCheckpoint per round truncates the
-        # otherwise per-iteration-growing lineage (VERDICT r5 #3) for the
-        # cost of materializing K rows — the next round's plan starts from a
-        # leaf instead of replaying every prior assign+update.
-        cents = track_checkpoint(_recompute_centroids(vecs, assign))
+    # K-row centroid table, checkpointed per round: the next round's plan
+    # starts from a leaf for the cost of materializing K rows
+    cents = iterate(
+        cents,
+        lambda c: _recompute_centroids(vecs, _assign(vecs, c)),
+        KMEANS_ITERS - 1,
+        name="kmeans_embeddings",
+    )
     final = _assign(vecs, cents)
     return final.select("vec_id", F.col("cid").alias("cluster_id"), "dist")
 
@@ -1631,19 +1619,7 @@ def mutual_nearest_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = track_persist(
         emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
     )
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    sign_bucket_band(
-                        "embedding", t * ANN_LSH_BAND_BITS, ANN_LSH_BAND_BITS
-                    ).alias("bucket"),
-                )
-                for t in range(ANN_LSH_TABLES)
-            ]
-        )
-    )
+    bands = sign_bands("embedding", ANN_LSH_BAND_BITS, ANN_LSH_TABLES)
     slim = v.select("vec_id", bands.alias("b")).select("vec_id", "b.tbl", "b.bucket")
     # Candidates are canonicalized to a < b BEFORE the distinct and each
     # unordered pair is scored ONCE; the reverse direction is re-derived by
@@ -1738,19 +1714,7 @@ def _exact_and_lsh_topk(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
     )
     exact_topk = _topk(scored_all)
 
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    sign_bucket_band(
-                        "embedding", t * ANN_LSH_BAND_BITS, ANN_LSH_BAND_BITS
-                    ).alias("bucket"),
-                )
-                for t in range(ANN_LSH_TABLES)
-            ]
-        )
-    )
+    bands = sign_bands("embedding", ANN_LSH_BAND_BITS, ANN_LSH_TABLES)
     slim = v.select("vec_id", bands.alias("b")).select("vec_id", "b.tbl", "b.bucket")
     q_slim = F.broadcast(
         slim.filter(F.col("vec_id") < N_QUERIES).select(

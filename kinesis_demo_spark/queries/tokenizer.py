@@ -34,11 +34,12 @@ reconstruction invariants.
 from __future__ import annotations
 
 from fractions import Fraction
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from ..io import load_table, spread, track_checkpoint, track_persist
+from ..io import iterate, load_table, spread, track_persist
 from ..registry import register
 
 UNI_MAX_PIECE = 6     # max piece length seeded from word substrings
@@ -382,14 +383,16 @@ def wordpiece_encode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("n_pieces"),
     )
     w_pick = Window.partitionBy("word").orderBy(F.col("plen").desc())
-    done_parts = []
-    for _rnd in range(int(max_len)):
+
+    def advance(state: DataFrame) -> DataFrame:
+        # rounds after the first carry the finished words forward
+        act = state if state is active else state.filter(F.col("pos") <= F.col("wlen"))
         # EQUI-join on the candidate substring, never a substring-match theta
         # join (a theta join plans as BroadcastNestedLoop — O(|active| x
         # |vocab|) row comparisons, which dies when both sides are large at
         # scale): each active word emits its <= {WP_MAX_PIECE} candidate
         # prefixes of the remainder, and the vocab lookup hashes on them.
-        cand = active.select(
+        cand = act.select(
             "word",
             "wlen",
             "pos",
@@ -400,7 +403,7 @@ def wordpiece_encode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("l"),
         ).withColumn("piece", F.expr("substring(word, pos, l)"))
         matched = cand.join(F.broadcast(vocab), "piece")
-        stepped = (
+        return (
             matched.withColumn("rn", F.row_number().over(w_pick))
             .filter(F.col("rn") == 1)
             .select(
@@ -413,22 +416,15 @@ def wordpiece_encode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("n_pieces") + 1).alias("n_pieces"),
             )
         )
-        # localCheckpoint, not persist: each round's plan references the
-        # previous round's, so without lineage truncation the FINAL plan
-        # re-embeds every round (the dedup_clusters lesson); the checkpoint
-        # cuts each round to a leaf and the output is a flat union.
-        stepped = track_checkpoint(stepped)
-        done_parts.append(stepped.filter(F.col("pos") > F.col("wlen")))
-        active = stepped.filter(F.col("pos") <= F.col("wlen"))
-        # one driver scalar per round (the sanctioned convergence-check
-        # collect class); also materializes this round's persist
-        if active.count() == 0:
-            break
-    else:
-        raise RuntimeError(
-            "wordpiece encode did not terminate within max word length rounds"
-        )
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.union(p)
+
+    done_parts = []
+
+    def all_done(_old: DataFrame, new: DataFrame) -> bool:
+        # each round's checkpoint holds the words it finished; the output is
+        # the flat union of those slices
+        done_parts.append(new.filter(F.col("pos") > F.col("wlen")))
+        return new.filter(F.col("pos") <= F.col("wlen")).count() == 0
+
+    iterate(active, advance, int(max_len), until=all_done, name="wordpiece_encode_words")
+    out = reduce(DataFrame.union, done_parts)
     return out.join(words, "word").select("word", "wcount", "n_pieces", "encoded")

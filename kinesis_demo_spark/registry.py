@@ -277,7 +277,7 @@ MAY_BE_EMPTY: dict[str, dict] = {
 # micro-fixture dir. Micro-fixtures are matched POSITIVELY by this marker
 # (or a well-known basename), never by "not under /root/testdata" — a
 # full-scale generated fixture (e.g. /tmp/sf1, used by the SCALING seals
-# and tools/graph_watch.py) must NOT inherit the micro allowance, or the
+# and the iterative-graph sf1 timings in GRAPH_WATCH.json) must NOT inherit the micro allowance, or the
 # vacuous-green guard silently evaporates at exactly the largest fixture
 # (ADVICE r11 #1).
 MICRO_MARKER = ".micro-fixture"

@@ -113,12 +113,12 @@ def test_banded_lsh_prunes_hard_in_true_neardup_regime(spark):
     pairs to keep recall (hence the wide 4-bit x 16-table fixture constants).
     This test pins the other regime: REAL near-duplicate embeddings (cosine
     >= 0.95, e.g. re-encodes of the same content) at 8 bits x 8 tables —
-    the same sign_bucket_band machinery — must reach near-perfect recall
+    the same sign_bands machinery — must reach near-perfect recall
     while collapsing the candidate set by an order of magnitude, which is
     the configuration a production corpus runs."""
     import numpy as np
 
-    from kinesis_demo_spark.functions.vectors import sign_bucket_band
+    from kinesis_demo_spark.functions.vectors import sign_bands
 
     rng = np.random.default_rng(7)
     base = rng.standard_normal((200, 64)).astype("float32")
@@ -136,18 +136,7 @@ def test_banded_lsh_prunes_hard_in_true_neardup_regime(spark):
     from pyspark.sql import functions as F
 
     B, L = 8, 8
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    sign_bucket_band("embedding", t * B, B).alias("bucket"),
-                )
-                for t in range(L)
-            ]
-        )
-    )
-    vb = df.select("vec_id", bands.alias("b")).select("vec_id", "b.tbl", "b.bucket")
+    vb = df.select("vec_id", sign_bands("embedding", B, L).alias("b")).select("vec_id", "b.tbl", "b.bucket")
     x = vb.select(F.col("vec_id").alias("va"), "tbl", "bucket")
     y = vb.select(F.col("vec_id").alias("vb"), "tbl", "bucket")
     cands = {

@@ -16,19 +16,32 @@ the properties the 100 TB story depends on:
 - ``global_sort``     — a rangepartitioning Exchange (the top-k smell when
   paired with a later limit)
 
+Two identity fields gate behaviour-neutral refactors: ``fingerprint``
+(sha256 of the optimized LOGICAL plan, per-session ids normalised) and
+``build_jobs`` (the session-global ids of the jobs fired while building the
+DataFrame — two audits in the same order agree iff every query fires the
+same jobs). Three fingerprints can change between sessions with no change
+to the query: Spark numbers a multi-DISTINCT aggregate's groups in hash
+order (``profile_events_columns``, ``tpch_q21_waiting_suppliers``), and
+``prf_query_expansion`` embeds the AQE plan of a cached index built by an
+earlier query.
+
 Output: one JSON line per query to stdout plus a sorted summary table to
 stderr; ``--json PATH`` writes the full map to a sidecar (PLANS.json) so
 plan-shape regressions show up in review diffs.
 
 Streaming-drain queries (they EXECUTE on construction) are audited on their
-batch-equivalent plans where construction is side-effect-free; the four
+batch-equivalent plans where construction is side-effect-free; the
 drain-to-memory queries are skipped with a note — their plan properties are
-pinned by tests/test_streaming*.py instead.
+pinned by tests/test_streaming*.py instead. Iterative queries run jobs
+while building and are audited; ``build_jobs`` records them. Tracked
+persists and checkpoints are released after each query.
 """
 
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import io
 import json
 import os
@@ -37,6 +50,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kinesis_demo_spark.io import release_persisted
 from kinesis_demo_spark.registry import all_queries
 from kinesis_demo_spark.session import get_spark
 
@@ -51,9 +65,6 @@ STREAM_DRAINS = {
     "streaming_hopping_counts",
     "sessionize_stateful_streaming",
     "streaming_outer_interval_join",
-    # driver-sequenced iteration: building the result runs the training loop
-    "bpe_train_merges",
-    "pagerank_copurchase",
     "python_datasource_stream_events",
     # driver-side eigensolve consumes collected moments on construction
     "pca_embedding_components",
@@ -103,6 +114,36 @@ def _count_nodes(plan: str, token: str, exclude: tuple = ()) -> int:
     return n
 
 
+_SESSION_IDS = (
+    (r"#\d+", "#"),
+    (r"plan_id=\d+", "plan_id="),
+    (r"QueryStage \d+", "QueryStage"),
+    (r"uuid\(Some\(-?\d+\)\)", "uuid(Some())"),
+)
+
+
+def fingerprint(df) -> str:
+    """sha256 of the optimized logical plan; expression, exchange and AQE
+    stage ids and ``uuid()`` seeds are normalised (they vary per session)."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for pattern, repl in _SESSION_IDS:
+        plan = re.sub(pattern, repl, plan)
+    return hashlib.sha256(plan.encode()).hexdigest()
+
+
+def build(spark, fn, sf_dir: str, name: str):
+    """Build one query's DataFrame under its own job group; returns the
+    DataFrame and the sorted ids of the jobs the build fired."""
+    sc = spark.sparkContext
+    group = f"plan-audit:{name}"
+    sc.setJobGroup(group, name)
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def audit_one(df) -> dict:
     simple = _plan(df, "simple")
     formatted = _plan(df, "formatted")
@@ -138,9 +179,16 @@ def main() -> None:
             report[name] = {"skipped": "stream-drain; plan pinned in streaming tests"}
             continue
         try:
-            report[name] = audit_one(fn(spark, sf_dir))
+            df, jobs = build(spark, fn, sf_dir, name)
+            report[name] = {
+                **audit_one(df),
+                "fingerprint": fingerprint(df),
+                "build_jobs": jobs,
+            }
         except Exception as exc:  # noqa: BLE001 — audit must cover the rest
             report[name] = {"error": f"{type(exc).__name__}: {exc}"}
+        finally:
+            release_persisted()  # checkpointed blocks must not pile up
 
     audited = {k: v for k, v in report.items() if "shuffles" in v}
     worst = sorted(audited.items(), key=lambda kv: -kv[1]["shuffles"])[:10]

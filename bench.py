@@ -59,7 +59,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from kinesis_demo_spark.io import release_persisted
+from kinesis_demo_spark.io import load_table, release_persisted
 from kinesis_demo_spark.registry import all_queries
 from kinesis_demo_spark.session import get_spark
 
@@ -374,9 +374,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
 
-    # Warm the JVM/codegen/parquet-reader paths once so per-query timings
-    # measure the queries, not session bring-up.
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+    # Warm the JVM/codegen/parquet-reader paths once, through the same table
+    # load the queries use, so per-query timings measure the queries, not
+    # session bring-up.
+    load_table(spark, sf_dir, "region").count()
 
     host_control = _host_control(spark)
 

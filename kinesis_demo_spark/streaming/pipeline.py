@@ -21,13 +21,15 @@ query, where the input is finite) would be the one non-scalable choice at
 
 from __future__ import annotations
 
+import fnmatch
+import os
 import re
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ..io import ensure_runtime_confs
+from ..io import _footer_schema, ensure_runtime_confs
 
 
 @contextmanager
@@ -271,12 +273,20 @@ def stream_events(
     fixture dir; tests streaming their own file sequences pass "*.parquet".
 
     Handles both event-time physical types batch ``load_table`` does: the
-    file schema is probed once (batch footer read under the same confs), and
-    a TIMESTAMP(NANOS) fixture — which scans as int64 under nanosAsLong —
+    schema of the first matching file in sorted order is read from its
+    footer on the driver, as ``load_table`` does (no Spark job; Spark's
+    inference when the footer is not recognised or no local file matches),
+    and a TIMESTAMP(NANOS) fixture — which scans as int64 under nanosAsLong —
     streams under a LongType schema and converts to TimestampType
     immediately after the source (integer DIV, exact above 2^53)."""
     ensure_runtime_confs(spark)
-    probed = spark.read.option("pathGlobFilter", glob).parquet(sf_dir).schema
+    names = sorted(
+        n for n in (os.listdir(sf_dir) if os.path.isdir(sf_dir) else ())
+        if fnmatch.fnmatchcase(n, glob) and not n.startswith(("_", "."))  # hidden to Spark
+    )
+    probed = _footer_schema(spark, os.path.join(sf_dir, names[0])) if names else None
+    if probed is None:
+        probed = spark.read.option("pathGlobFilter", glob).parquet(sf_dir).schema
     ts_is_nanos_long = any(
         f.name == "ts" and isinstance(f.dataType, T.LongType) for f in probed
     )

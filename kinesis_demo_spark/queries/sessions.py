@@ -16,7 +16,7 @@ from ..functions.timeutil import epoch_ms_sql
 from ..io import load_table
 from ..operators.sessionize import SESSION_GAP_MS, batch_sessionize, streaming_sessionize
 from ..registry import register
-from ..streaming.pipeline import stream_events
+from ..streaming.pipeline import drain, stream_events
 
 _SESSIONS_CTE = f"""
 o AS (
@@ -76,27 +76,11 @@ def sessionize_stateful_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
     from the oracle by construction)."""
     name = "stream_sessions_" + str(abs(hash(sf_dir)) % 10**6)
     sessions = streaming_sessionize(stream_events(spark, sf_dir))
-    # per-user session state commits dominate the bounded drain — scope the
-    # state partition count down (values are partitioning-independent; see
-    # streaming/pipeline.py::drain_state_partitions). n=8, not the default
-    # 4: applyInPandasWithState runs one Python worker per partition, so
-    # this drain is the one whose per-batch COMPUTE parallelism matters
-    # (r13 three-way A/B: 2.5 s at 8 vs 3.1 s at 4 vs 4.6 s at 2).
-    from ..streaming.pipeline import drain_state_partitions
-
-    with drain_state_partitions(spark, 8):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
+    # n=8, not drain's default 4: applyInPandasWithState runs one Python
+    # worker per partition, so this drain is the one whose per-batch COMPUTE
+    # parallelism matters (r13 three-way A/B: 2.5 s at 8 vs 3.1 s at 4 vs
+    # 4.6 s at 2).
+    return drain(sessions, name, "append", state_partitions=8)
 
 
 @register(

@@ -125,6 +125,31 @@ ANN_LSH_BAND_BITS = 4
 ANN_LSH_TABLES = 16
 
 
+def _band_rows(v: DataFrame) -> DataFrame:
+    """The slim (vec_id, tbl, bucket) band rows: one per vector per LSH
+    table, bucketed on the hyperplane signs of that table's band."""
+    bands = sign_bands("embedding", ANN_LSH_BAND_BITS, ANN_LSH_TABLES)
+    return v.select("vec_id", bands.alias("b")).select("vec_id", "b.tbl", "b.bucket")
+
+
+def _lsh_candidates(v: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id) LSH candidate pairs: the broadcast query band
+    rows equi-joined to the corpus band rows, self-pairs dropped. One row
+    per shared (table, bucket), so a pair colliding in several tables
+    repeats — callers dedup (DISTINCT or a semi-join) as their plan needs."""
+    slim = _band_rows(v)
+    q_slim = F.broadcast(
+        slim.filter(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("query_id"), "tbl", "bucket"
+        )
+    )
+    return (
+        q_slim.join(slim.select(F.col("vec_id").alias("neighbor_id"), "tbl", "bucket"), ["tbl", "bucket"])
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id")
+    )
+
+
 def _lsh_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared multi-table sign-LSH candidate generation + exact scoring
     (the plan body of ann_cosine_topk_lsh, reused verbatim by the
@@ -133,19 +158,7 @@ def _lsh_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     v = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    bands = sign_bands("embedding", ANN_LSH_BAND_BITS, ANN_LSH_TABLES)
-    slim = v.select("vec_id", bands.alias("b")).select("vec_id", "b.tbl", "b.bucket")
-    q_slim = F.broadcast(
-        slim.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), "tbl", "bucket"
-        )
-    )
-    cand = (
-        q_slim.join(slim.select(F.col("vec_id").alias("neighbor_id"), "tbl", "bucket"), ["tbl", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
+    cand = _lsh_candidates(v).distinct()
     qv = F.broadcast(
         v.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
@@ -1619,8 +1632,7 @@ def mutual_nearest_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = track_persist(
         emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
     )
-    bands = sign_bands("embedding", ANN_LSH_BAND_BITS, ANN_LSH_TABLES)
-    slim = v.select("vec_id", bands.alias("b")).select("vec_id", "b.tbl", "b.bucket")
+    slim = _band_rows(v)
     # Candidates are canonicalized to a < b BEFORE the distinct and each
     # unordered pair is scored ONCE; the reverse direction is re-derived by
     # a shuffle-free projection+union afterwards. Cosine is bit-symmetric
@@ -1714,22 +1726,9 @@ def _exact_and_lsh_topk(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
     )
     exact_topk = _topk(scored_all)
 
-    bands = sign_bands("embedding", ANN_LSH_BAND_BITS, ANN_LSH_TABLES)
-    slim = v.select("vec_id", bands.alias("b")).select("vec_id", "b.tbl", "b.bucket")
-    q_slim = F.broadcast(
-        slim.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), "tbl", "bucket"
-        )
+    lsh_topk = _topk(
+        scored_all.join(_lsh_candidates(v), ["query_id", "neighbor_id"], "left_semi")
     )
-    cand = (
-        q_slim.join(
-            slim.select(F.col("vec_id").alias("neighbor_id"), "tbl", "bucket"),
-            ["tbl", "bucket"],
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    lsh_topk = _topk(scored_all.join(cand, ["query_id", "neighbor_id"], "left_semi"))
     return exact_topk, lsh_topk
 
 

@@ -9,6 +9,7 @@ from pyspark.sql.window import Window
 
 from kinesis_demo_spark.io import load_table
 from kinesis_demo_spark.operators.sessionize import batch_sessionize, streaming_sessionize
+from kinesis_demo_spark.streaming.pipeline import drain, stream_events
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,22 +27,11 @@ def _closed_sessions_batch(spark):
 
 
 def _run_stream(spark, src_dir, max_files=None):
-    from kinesis_demo_spark.streaming.pipeline import stream_events
-
-    name = "t_sessions_stream"
-    q = (
-        streaming_sessionize(stream_events(spark, src_dir, max_files_per_trigger=max_files))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return drain(
+        streaming_sessionize(stream_events(spark, src_dir, max_files_per_trigger=max_files)),
+        "t_sessions_stream",
+        "append",
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 def test_streaming_sessions_match_batch_single_batch(spark):
@@ -89,18 +79,7 @@ def test_streaming_sessions_carry_state_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(flat))
     )
-    q = (
-        streaming_sessionize(reader)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain(streaming_sessionize(reader), name, "append")
     got = {tuple(r) for r in spark.table(name).collect()}
     want = {tuple(r) for r in _closed_sessions_batch(spark).collect()}
     assert got == want
@@ -239,18 +218,8 @@ def test_streaming_default_policy_survives_out_of_order_batch(spark, tmp_path):
         .parquet(str(flat))
     )
     name = "t_sessions_ooo"
-    q = (
-        streaming_sessionize(reader)  # default: drop-and-count
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()  # strict mode would raise inside batch 1 here
-    finally:
-        q.stop()
+    # default: drop-and-count; strict mode would raise inside batch 1 here
+    drain(streaming_sessionize(reader), name, "append")
     got = {tuple(r) for r in spark.table(name).collect()}
     want = {tuple(r) for r in _closed_sessions_batch(spark).collect()}
     assert got == want  # glitch row contributed nothing, nothing else lost

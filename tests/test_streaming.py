@@ -5,6 +5,11 @@ upsert)."""
 
 from __future__ import annotations
 
+import ast
+import os
+import tempfile
+
+import pytest
 from pyspark.sql import functions as F
 
 from kinesis_demo_spark.io import load_table
@@ -269,15 +274,7 @@ def test_transform_with_state_user_totals(spark):
         outputMode="Update",
         timeMode="None",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
+    P.drain(out, "tws_totals", "update")
     # latest emission per user == the running total after the last batch
     got = {
         r.user_id: (r.n_events, r.cents)
@@ -295,3 +292,64 @@ def test_transform_with_state_user_totals(spark):
         .collect()
     }
     assert got == want
+
+
+def test_drain_stops_query_and_restores_conf_when_it_raises(spark):
+    """drain's contract on failure: the error surfaces, no query is left
+    running in the session, and the shuffle-partition conf it scoped for the
+    drain is back at its previous value."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        # raise_error over a non-null column: fails inside the first batch
+        bad = P.stream_events(spark, SF).select(
+            F.raise_error(F.concat(F.lit("drain boom "), F.col("event_type"))).alias("x")
+        )
+        with pytest.raises(Exception, match="drain boom"):
+            P.drain(bad, "t_drain_raises", "append")
+        assert spark.streams.active == []
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_sentinel_drain_removes_its_stage_when_the_drain_raises(spark, monkeypatch):
+    def _stage_dirs():
+        return {n for n in os.listdir(tempfile.gettempdir()) if n.startswith("sentinel_stage_")}
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("drain failed")
+
+    before = _stage_dirs()
+    monkeypatch.setattr(P, "drain", boom)
+    with pytest.raises(RuntimeError, match="drain failed"):
+        P.run_stream_outer_join(spark, SF)
+    assert _stage_dirs() <= before
+
+
+def test_available_now_trigger_lives_only_in_the_drivers():
+    """The bounded availableNow run (start, await, stop) is written once:
+    ``drain`` for every memory-sink query, plus the checkpointed foreachBatch
+    sink of ``run_foreach_batch_upsert``."""
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(P.__file__)))
+    sites = set()
+    for root, _, files in os.walk(pkg):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for top in tree.body:
+                for node in ast.walk(top):
+                    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                        continue
+                    available_now = node.func.attr == "trigger" and any(
+                        k.arg == "availableNow" for k in node.keywords
+                    )
+                    if available_now or node.func.attr == "awaitTermination":
+                        sites.add((os.path.relpath(path, pkg), getattr(top, "name", None)))
+    assert sites == {
+        ("streaming/pipeline.py", "drain"),
+        ("streaming/pipeline.py", "run_foreach_batch_upsert"),
+    }

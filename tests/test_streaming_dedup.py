@@ -11,6 +11,8 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from kinesis_demo_spark.streaming.pipeline import drain
+
 
 def _write(spark, rows, path, seq):
     df = spark.createDataFrame(rows, "event_id bigint, ts timestamp, user_id bigint, value double")
@@ -41,17 +43,7 @@ def test_drop_duplicates_suppresses_cross_batch_redelivery(spark, tmp_path):
     )
     deduped = reader.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
     name = "t_stream_dedup"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain(deduped, name, "append")
 
     out = spark.table(name)
     assert out.count() == 30  # 20 + 10 new; 10 redeliveries suppressed

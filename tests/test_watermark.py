@@ -17,7 +17,7 @@ import os
 import shutil
 from datetime import datetime
 
-from kinesis_demo_spark.streaming.pipeline import windowed_aggregate
+from kinesis_demo_spark.streaming.pipeline import drain, windowed_aggregate
 
 
 def _write_batch(spark, rows, path, seq):
@@ -49,17 +49,7 @@ def test_watermark_finalizes_once_and_drops_post_finalization_rows(spark, tmp_pa
     )
     agg = windowed_aggregate(reader, window="1 minute", watermark="10 seconds")
     name = "t_watermark_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain(agg, name, "append")
 
     rows = [(str(r.window_start), r.cnt) for r in spark.table(name).orderBy("window_start").collect()]
     # pre-finalization late row merged; each window emitted exactly once;

@@ -4449,9 +4449,7 @@ DECOMP_MA = 25          # centered moving-average width (12 back, 12 ahead)
 DECOMP_PERIOD = 24      # hour-of-day seasonality
 
 
-@register(
-    "timeseries_classical_decomposition",
-    oracle=f"""
+_DECOMP_ORACLE = f"""
 WITH bounds AS (
   SELECT user_id, date_trunc('hour', min(ts)) AS h0, date_trunc('hour', max(ts)) AS h1
   FROM events GROUP BY user_id
@@ -4495,8 +4493,10 @@ SELECT m.user_id, m.hour,
          - CAST(({DECOMP_MA} * m.y - m.detr) AS DOUBLE) / {DECOMP_MA}.0
          - CAST(s.s_detr AS DOUBLE) / (s.n_hod * {DECOMP_MA}.0) AS remainder
 FROM mid m JOIN seas s ON s.user_id = m.user_id AND s.hod = CAST(hour(m.hour) AS INT)
-""",
-)
+"""
+
+
+@register("timeseries_classical_decomposition", oracle=_DECOMP_ORACLE)
 def timeseries_classical_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical additive seasonal decomposition (Hyndman & Athanasopoulos,
     FPP §3.4 — the moving-average method, the deterministic ancestor of
@@ -4624,53 +4624,7 @@ def timeseries_classical_decomposition(spark: SparkSession, sf_dir: str) -> Data
 
 @register(
     "timeseries_decomposition_sparse",
-    oracle=f"""
-WITH bounds AS (
-  SELECT user_id, date_trunc('hour', min(ts)) AS h0, date_trunc('hour', max(ts)) AS h1
-  FROM events GROUP BY user_id
-),
-grid AS (
-  SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour FROM bounds
-),
-agg AS (
-  SELECT user_id, date_trunc('hour', ts) AS hour,
-         sum(CAST(value AS DECIMAL(18,2))) AS y
-  FROM events GROUP BY 1, 2
-),
-dense AS (
-  SELECT g.user_id, g.hour,
-         coalesce(a.y, CAST(0 AS DECIMAL(18,2))) AS y
-  FROM grid g LEFT JOIN agg a ON a.user_id = g.user_id AND a.hour = g.hour
-),
-ma AS (
-  SELECT user_id, hour, y,
-         sum(y) OVER w AS trend_sum,
-         count(*) OVER w AS w_n
-  FROM dense
-  WINDOW w AS (PARTITION BY user_id ORDER BY hour
-               ROWS BETWEEN {DECOMP_MA // 2} PRECEDING AND {DECOMP_MA // 2} FOLLOWING)
-),
-mid AS (
-  SELECT user_id, hour, y,
-         CAST({DECOMP_MA} AS DECIMAL(4,0)) * y - trend_sum AS detr
-  FROM ma WHERE w_n = {DECOMP_MA}
-),
-seas AS (
-  SELECT user_id, CAST(hour(hour) AS INT) AS hod,
-         sum(detr) AS s_detr, CAST(count(*) AS BIGINT) AS n_hod
-  FROM mid GROUP BY 1, 2
-)
-SELECT m.user_id, m.hour,
-       CAST(m.y AS DOUBLE) AS y,
-       CAST(({DECOMP_MA} * m.y - m.detr) AS DOUBLE) / {DECOMP_MA}.0 AS trend,
-       CAST(s.s_detr AS DOUBLE) / (s.n_hod * {DECOMP_MA}.0) AS seasonal,
-       CAST(m.y AS DOUBLE)
-         - CAST(({DECOMP_MA} * m.y - m.detr) AS DOUBLE) / {DECOMP_MA}.0
-         - CAST(s.s_detr AS DOUBLE) / (s.n_hod * {DECOMP_MA}.0) AS remainder
-FROM mid m
-JOIN seas s ON s.user_id = m.user_id AND s.hod = CAST(hour(m.hour) AS INT)
-JOIN agg o ON o.user_id = m.user_id AND o.hour = m.hour
-""",
+    oracle=_DECOMP_ORACLE + "JOIN agg o ON o.user_id = m.user_id AND o.hour = m.hour\n",
 )
 def timeseries_decomposition_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse twin of timeseries_classical_decomposition (VERDICT r12 #5,

@@ -766,168 +766,31 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- SimHash ---------------------------------------------------------------------------
 
 
-_SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
+def _simhash_pairs(docs: DataFrame, bits: int, bands: int, max_hamming: int) -> DataFrame:
+    """(doc_a, doc_b, hamming) for every doc pair whose ``bits``-bit
+    tf-weighted SimHash signatures differ in at most ``max_hamming`` bits.
 
+    The signature is computed entirely as per-doc array expressions: one md5
+    per token into a hash array, then ONE aggregate-fold over that array
+    accumulating all ``bits`` signed bit-sums in one array state. Zero
+    shuffles — the alternative (explode tokens x bits and groupBy) pushes
+    |tokens| x bits rows through an exchange for the same answer. Bit
+    extraction is pure integer arithmetic on BOTH engines, exact at any
+    width (a double divide-then-truncate is not above 2^53): bit b of h
+    tests ``h % 2^(b+1) >= 2^b``, band bits via ``%`` + ``div``.
 
-def _simhash(docs: DataFrame) -> DataFrame:
-    """(doc_id, simhash): {SIMHASH_BITS}-bit tf-weighted SimHash over word
-    hashes, computed entirely as per-doc array expressions: one md5 per
-    token into a hash array, then ONE aggregate-fold over that array
-    accumulating all {SIMHASH_BITS} signed bit-sums. Zero shuffles — the alternative
-    (explode tokens x bits and groupBy) pushes |tokens| x {SIMHASH_BITS}
-    rows through an exchange for the same answer."""
+    Signatures are banded into ``bands`` x ``bits // bands``-bit keys;
+    max_hamming < bands guarantees at least one identical band
+    (pigeonhole), so the band join finds EVERY qualifying pair — LSH used as
+    an exact algorithm, never a cross join."""
+    band_w = bits // bands
     tok_h = spread(docs.select("doc_id", "text")).select(
-        "doc_id",
-        F.transform(
-            F.split("text", " "), lambda w: h60(w) % (1 << SIMHASH_BITS)
-        ).alias("hws"),
+        "doc_id", F.transform(F.split("text", " "), lambda w: h60(w) % (1 << bits)).alias("hws")
     )
-    # SINGLE fold over the token-hash array accumulating all bit sums in one
-    # 32-element array state (the former per-bit version built 32 separate
-    # aggregate folds — a 32x-larger expression tree Catalyst can't share,
-    # re-walking the array once per bit). Arithmetic is identical:
-    # contribution of hash h to bit b is 2*((h >> b) & 1) - 1, via the same
-    # double-divide-then-truncate as the DuckDB oracle's ``//``.
-    pow2 = F.array(*[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)])
+    pow2 = F.array(*[F.lit(1 << b).cast("long") for b in range(bits)])
     bit_sums = F.aggregate(
         F.col("hws"),
-        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
-        lambda acc, h: F.zip_with(acc, pow2, lambda s, p: s + 2 * ((h / p).cast("long") % 2) - 1),
-    )
-    simhash = F.aggregate(
-        F.zip_with(
-            bit_sums, pow2, lambda s, p: F.when(s > 0, p).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return tok_h.select("doc_id", simhash.alias("simhash"))
-
-
-_SIMHASH_ORACLE = f"""
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-),
-th AS (SELECT doc_id, {h60_sql('w')} % {1 << SIMHASH_BITS} AS hw FROM tok),
-bits AS (SELECT unnest(range({SIMHASH_BITS})) AS bit),
-per_bit AS (
-  SELECT doc_id, bit, sum(2 * ((hw // (1::BIGINT << CAST(bit AS INT))) % 2) - 1) AS s
-  FROM th CROSS JOIN bits GROUP BY 1, 2
-),
-sim AS (
-  SELECT doc_id, sum(CASE WHEN s > 0 THEN 1::BIGINT << CAST(bit AS INT) ELSE 0 END) AS simhash
-  FROM per_bit GROUP BY 1
-),
-bands AS (
-  SELECT doc_id, simhash, b.band,
-         (simhash // (1::BIGINT << CAST(b.band * {_SIMHASH_BAND_BITS} AS INT))) % {1 << _SIMHASH_BAND_BITS} AS band_bits
-  FROM sim CROSS JOIN (SELECT unnest(range({SIMHASH_BANDS})) AS band) b
-)
-SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-       bit_count(xor(x.simhash, y.simhash)) AS hamming
-FROM bands x JOIN bands y
-  ON x.band = y.band AND x.band_bits = y.band_bits AND x.doc_id < y.doc_id
-WHERE bit_count(xor(x.simhash, y.simhash)) <= {SIMHASH_MAX_HAMMING}
-"""
-
-
-@register("dedup_simhash", oracle=_SIMHASH_ORACLE)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup: {SIMHASH_BITS}-bit signatures, banded into
-    {SIMHASH_BANDS} x {_SIMHASH_BAND_BITS}-bit keys. hamming <= {SIMHASH_MAX_HAMMING}
-    < bands guarantees at least one identical band, so the band join finds
-    EVERY qualifying pair — LSH used as an exact algorithm, never a
-    cross join."""
-    sim = _simhash(_docs(spark, sf_dir))
-    band_rows = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(band).alias("band"),
-                    (
-                        (F.col("simhash") / (1 << (band * _SIMHASH_BAND_BITS))).cast("long")
-                        % (1 << _SIMHASH_BAND_BITS)
-                    ).alias("band_bits"),
-                )
-                for band in range(SIMHASH_BANDS)
-            ]
-        )
-    )
-    # persist: both self-join sides consume the banded signatures; without
-    # caching the whole per-token SimHash fold runs twice (see _shingled)
-    bands = track_persist(
-        sim.select("doc_id", "simhash", band_rows.alias("b")).select(
-            "doc_id", "simhash", "b.band", "b.band_bits"
-        )
-    )
-    x = bands.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "band", "band_bits")
-    y = bands.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "band", "band_bits")
-    hamming = F.bit_count(F.expr("sim_a ^ sim_b"))
-    return (
-        x.join(y, ["band", "band_bits"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .distinct()
-    )
-
-
-# --- wide SimHash (the scale-path variant) -----------------------------------------
-
-# 60-bit signatures (h60's native width): 6 bands x 10 bits = 1024 bucket
-# values per band vs the 32-bit variant's 256 — finer candidate buckets, and
-# hamming <= 5 over 60 bits is a stricter near-dup test than 3 over 32.
-SIMHASH_WIDE_BITS = 60
-SIMHASH_WIDE_BANDS = 6
-_WIDE_BAND_BITS = SIMHASH_WIDE_BITS // SIMHASH_WIDE_BANDS
-SIMHASH_WIDE_MAX_HAMMING = 5  # <= bands - 1 keeps the band join exact
-
-_SIMHASH_WIDE_ORACLE = f"""
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-),
-th AS (SELECT doc_id, {h60_sql('w')} AS hw FROM tok),
-bits AS (SELECT unnest(range({SIMHASH_WIDE_BITS})) AS bit),
-per_bit AS (
-  SELECT doc_id, bit, sum(2 * ((hw // (1::BIGINT << CAST(bit AS INT))) % 2) - 1) AS s
-  FROM th CROSS JOIN bits GROUP BY 1, 2
-),
-sim AS (
-  SELECT doc_id, sum(CASE WHEN s > 0 THEN 1::BIGINT << CAST(bit AS INT) ELSE 0 END) AS simhash
-  FROM per_bit GROUP BY 1
-),
-bands AS (
-  SELECT doc_id, simhash, b.band,
-         (simhash // (1::BIGINT << CAST(b.band * {_WIDE_BAND_BITS} AS INT))) % {1 << _WIDE_BAND_BITS} AS band_bits
-  FROM sim CROSS JOIN (SELECT unnest(range({SIMHASH_WIDE_BANDS})) AS band) b
-)
-SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-       bit_count(xor(x.simhash, y.simhash)) AS hamming
-FROM bands x JOIN bands y
-  ON x.band = y.band AND x.band_bits = y.band_bits AND x.doc_id < y.doc_id
-WHERE bit_count(xor(x.simhash, y.simhash)) <= {SIMHASH_WIDE_MAX_HAMMING}
-"""
-
-
-@register("dedup_simhash_wide", oracle=_SIMHASH_WIDE_ORACLE)
-def dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SimHash variant sized for 100 TB: full 60-bit h60 signatures in
-    {SIMHASH_WIDE_BANDS} x {_WIDE_BAND_BITS}-bit bands. The 32-bit variant's
-    8-bit bands give only 256 bucket values per band — at billions of docs
-    every bucket is huge; 10-bit bands quadruple the bucket space and the
-    wider signature makes hamming <= {SIMHASH_WIDE_MAX_HAMMING} a stricter
-    test. Above 2^53 a double divide-then-truncate no longer equals integer
-    shift, so bit extraction here is pure integer arithmetic on BOTH engines:
-    bit b of h tests ``h % 2^(b+1) >= 2^b``, band bits via ``%`` + ``div``.
-    Still exact (hamming bound < band count, pigeonhole), still one fold per
-    doc, zero shuffles before the band join."""
-    tok_h = spread(_docs(spark, sf_dir).select("doc_id", "text")).select(
-        "doc_id", F.transform(F.split("text", " "), lambda w: h60(w)).alias("hws")
-    )
-    pow2 = F.array(*[F.lit(1 << b).cast("long") for b in range(SIMHASH_WIDE_BITS)])
-    bit_sums = F.aggregate(
-        F.col("hws"),
-        F.array_repeat(F.lit(0).cast("long"), SIMHASH_WIDE_BITS),
+        F.array_repeat(F.lit(0).cast("long"), bits),
         lambda acc, h: F.zip_with(
             acc,
             pow2,
@@ -946,28 +809,92 @@ def dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(
                     F.lit(band).alias("band"),
                     F.expr(
-                        f"(simhash % {1 << ((band + 1) * _WIDE_BAND_BITS)}) "
-                        f"div {1 << (band * _WIDE_BAND_BITS)}"
+                        f"(simhash % {1 << ((band + 1) * band_w)}) div {1 << (band * band_w)}"
                     ).alias("band_bits"),
                 )
-                for band in range(SIMHASH_WIDE_BANDS)
+                for band in range(bands)
             ]
         )
     )
-    bands = track_persist(
+    # persist: both self-join sides consume the banded signatures; without
+    # caching the whole per-token SimHash fold runs twice (see _shingled)
+    banded = track_persist(
         sim.select("doc_id", "simhash", band_rows.alias("b")).select(
             "doc_id", "simhash", "b.band", "b.band_bits"
         )
     )
-    x = bands.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "band", "band_bits")
-    y = bands.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "band", "band_bits")
+    x = banded.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "band", "band_bits")
+    y = banded.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "band", "band_bits")
     hamming = F.bit_count(F.expr("sim_a ^ sim_b"))
     return (
         x.join(y, ["band", "band_bits"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= SIMHASH_WIDE_MAX_HAMMING)
+        .filter(F.col("hamming") <= max_hamming)
         .distinct()
+    )
+
+
+def _simhash_oracle(bits: int, bands: int, max_hamming: int) -> str:
+    """DuckDB mirror of ``_simhash_pairs`` (integer bit arithmetic)."""
+    band_w = bits // bands
+    return f"""
+WITH tok AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+),
+th AS (SELECT doc_id, {h60_sql('w')} % {1 << bits} AS hw FROM tok),
+bits AS (SELECT unnest(range({bits})) AS bit),
+per_bit AS (
+  SELECT doc_id, bit, sum(2 * ((hw // (1::BIGINT << CAST(bit AS INT))) % 2) - 1) AS s
+  FROM th CROSS JOIN bits GROUP BY 1, 2
+),
+sim AS (
+  SELECT doc_id, sum(CASE WHEN s > 0 THEN 1::BIGINT << CAST(bit AS INT) ELSE 0 END) AS simhash
+  FROM per_bit GROUP BY 1
+),
+bands AS (
+  SELECT doc_id, simhash, b.band,
+         (simhash // (1::BIGINT << CAST(b.band * {band_w} AS INT))) % {1 << band_w} AS band_bits
+  FROM sim CROSS JOIN (SELECT unnest(range({bands})) AS band) b
+)
+SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
+       bit_count(xor(x.simhash, y.simhash)) AS hamming
+FROM bands x JOIN bands y
+  ON x.band = y.band AND x.band_bits = y.band_bits AND x.doc_id < y.doc_id
+WHERE bit_count(xor(x.simhash, y.simhash)) <= {max_hamming}
+"""
+
+
+@register("dedup_simhash", oracle=_simhash_oracle(SIMHASH_BITS, SIMHASH_BANDS, SIMHASH_MAX_HAMMING))
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dup: 32-bit signatures, banded into 4 x 8-bit keys;
+    hamming <= 3 < bands keeps the band join exact (see ``_simhash_pairs``)."""
+    return _simhash_pairs(_docs(spark, sf_dir), SIMHASH_BITS, SIMHASH_BANDS, SIMHASH_MAX_HAMMING)
+
+
+# --- wide SimHash (the scale-path variant) -----------------------------------------
+
+# 60-bit signatures (h60's native width): 6 bands x 10 bits = 1024 bucket
+# values per band vs the 32-bit variant's 256 — finer candidate buckets, and
+# hamming <= 5 over 60 bits is a stricter near-dup test than 3 over 32.
+SIMHASH_WIDE_BITS = 60
+SIMHASH_WIDE_BANDS = 6
+SIMHASH_WIDE_MAX_HAMMING = 5  # <= bands - 1 keeps the band join exact
+
+
+@register(
+    "dedup_simhash_wide",
+    oracle=_simhash_oracle(SIMHASH_WIDE_BITS, SIMHASH_WIDE_BANDS, SIMHASH_WIDE_MAX_HAMMING),
+)
+def dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SimHash variant sized for 100 TB: full 60-bit h60 signatures in
+    6 x 10-bit bands. The 32-bit variant's 8-bit bands give only 256 bucket
+    values per band — at billions of docs every bucket is huge; 10-bit bands
+    quadruple the bucket space and the wider signature makes hamming <= 5 a
+    stricter test. Same kernel as ``dedup_simhash``: exact, one fold per
+    doc, zero shuffles before the band join."""
+    return _simhash_pairs(
+        _docs(spark, sf_dir), SIMHASH_WIDE_BITS, SIMHASH_WIDE_BANDS, SIMHASH_WIDE_MAX_HAMMING
     )
 
 

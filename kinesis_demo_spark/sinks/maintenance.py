@@ -6,6 +6,11 @@ retention policies; on plain parquet directories they are rewrite passes).
 Both are layout-only: the row set is bit-identical before and after
 (asserted in tests/test_maintenance.py), so they carry no SQL oracle — the
 invariant IS "the data didn't change, only the files did".
+
+Every writer of the store — compaction, retention, subject purge and the
+streaming upsert (`streaming.pipeline.run_foreach_batch_upsert`) — commits a
+partition through the one `_swap_in` / `_recover_incomplete` pair below, so
+each recognises and recovers the others' crash remnants.
 """
 
 from __future__ import annotations
@@ -35,9 +40,9 @@ def _partition_dirs(path: str, partition_col: str) -> list[str]:
 
 
 def _recover_incomplete(path: str, part_name: str | None = None) -> dict:
-    """Sweep leftover staging/backup dirs from a crashed maintenance pass and
-    restore the invariant "only live partitions exist". Rules, per partition
-    name X derived from a `.old__X` / `.staging__X` sibling:
+    """Sweep leftover staging/backup dirs from a crashed `_swap_in` (by any
+    writer) and restore the invariant "only live partitions exist". Rules,
+    per partition name X derived from a `.old__X` / `.staging__X` sibling:
 
     - live X present + `.old__X` present -> the swap completed; finish the
       interrupted cleanup (drop the backup).
@@ -94,17 +99,22 @@ def _all_partition_names(path: str, partition_col: str) -> list[str]:
 
 
 def _swap_in(path: str, part_name: str, write_staging) -> None:
-    """Stage-write then rename-swap one partition. `write_staging(dst)` must
-    materialize the new layout at dst. Crash at any point is recoverable by
-    `_recover_incomplete` (old or new layout, never a mix, never a bogus
-    partition name)."""
+    """Stage-write then rename-swap one partition — the store's only
+    partition commit (maintenance and the streaming upsert both use it).
+    `write_staging(dst)` must materialize the new layout at dst. Crash at
+    any point is recoverable by `_recover_incomplete` (old or new layout,
+    never a mix, never a bogus partition name). A partition's first commit
+    has no live dir to back up."""
     part_dir = os.path.join(path, part_name)
     staging = os.path.join(path, _STAGING_PREFIX + part_name)
     backup = os.path.join(path, _BACKUP_PREFIX + part_name)
     write_staging(staging)
-    os.rename(part_dir, backup)
+    had_live = os.path.isdir(part_dir)
+    if had_live:
+        os.rename(part_dir, backup)
     os.rename(staging, part_dir)
-    shutil.rmtree(backup)
+    if had_live:
+        shutil.rmtree(backup)
 
 
 def compact_partition(
@@ -118,9 +128,9 @@ def compact_partition(
     """Rewrite ONE partition of a partitioned parquet store into
     size-targeted files (optionally re-sorted on ``sort_col`` so range scans
     stay clustered after compaction). Staged to a sibling directory and
-    swapped in with the same rename discipline the streaming upsert sink
-    uses, so a crash mid-compact leaves either the old or the new layout,
-    never a mix.
+    swapped in by `_swap_in` — the same commit code the streaming upsert
+    sink uses — so a crash mid-compact leaves either the old or the new
+    layout, never a mix, and either writer recovers the other's remnants.
 
     Scale: compaction is per-partition (the unit a scheduler parallelizes
     over); each rewrite is one narrow read -> coalesce -> write with no

@@ -27,12 +27,14 @@ from __future__ import annotations
 import fnmatch
 import os
 import re
+import shutil
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..io import _footer_schema, ensure_runtime_confs
+from ..sinks.maintenance import _recover_incomplete, _swap_in
 
 
 @contextmanager
@@ -516,32 +518,6 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is identical under every session timezone — to_date(timestamp) is not.
 _PARTITION_COL = "window_day"
 _US_PER_DAY = 86_400_000_000
-_BACKUP_PREFIX = "_backup__"  # leading _ -> invisible to Spark's file index
-
-
-def _hadoop_fs(sess: SparkSession, path: str):
-    jvm = sess._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(sess._jsc.hadoopConfiguration()), hpath, jvm
-
-
-def _recover_partition_swaps(sess: SparkSession, out_dir: str) -> None:
-    """Crash recovery for the two-rename partition commit: a leftover backup
-    dir means a prior batch died mid-swap. If the live partition dir is
-    missing, the backup IS the committed data — restore it; if the live dir
-    exists, the swap completed and the backup is stale — drop it. After this
-    sweep the store is always a set of complete partition versions."""
-    fs, root, jvm = _hadoop_fs(sess, out_dir)
-    if not fs.exists(root):
-        return
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith(_BACKUP_PREFIX):
-            live = jvm.org.apache.hadoop.fs.Path(root, name[len(_BACKUP_PREFIX):])
-            if fs.exists(live):
-                fs.delete(st.getPath(), True)
-            else:
-                fs.rename(st.getPath(), live)
 
 
 def run_foreach_batch_upsert(
@@ -564,15 +540,23 @@ def run_foreach_batch_upsert(
     2. keeps the newest version per (user_id, window_start) key,
     3. stages the merged partitions to a temp dir (complete when the
        _SUCCESS marker lands), then
-    4. commits each touched partition with an atomic rename pair
-       (live -> backup, staged -> live, drop backup).
+    4. commits each touched partition through the store's one crash-safe
+       partition commit, `sinks.maintenance._swap_in` (staged -> sibling,
+       live -> backup, sibling -> live, drop backup) — the same code
+       compaction, retention and subject purge commit through, so every
+       writer recognises every other writer's crash remnants.
 
     A crash at ANY point leaves only complete partition versions:
     mid-stage -> the store is untouched; between the renames -> the backup
-    survives and `_recover_partition_swaps` restores it on the next batch
-    before merging. Replaying an acknowledged-but-uncommitted batch is
-    idempotent because the keep-newest merge is. Watermarked so streaming
-    state stays bounded."""
+    survives and `_recover_incomplete` restores it before the next batch
+    that touches that day merges. Recovery is scoped to the days a batch
+    commits, never swept store-wide (that would destroy a concurrent
+    maintenance job's staging): a failed foreachBatch leaves its micro-batch
+    uncommitted, so the restarted stream replays the same offsets, touches
+    the same days and recovers them. Replaying an acknowledged-but-
+    uncommitted batch is idempotent because the keep-newest merge is. The
+    store is a local directory (the commit renames with `os`). Watermarked
+    so streaming state stays bounded."""
     agg = windowed_aggregate(
         stream_events(spark, sf_dir, max_files_per_trigger, glob=glob), watermark="10 seconds"
     )
@@ -582,18 +566,17 @@ def run_foreach_batch_upsert(
         from pyspark.sql.window import Window
 
         sess = delta.sparkSession
-        _recover_partition_swaps(sess, out_dir)
         delta = delta.withColumn("batch_seq", F.lit(batch_id)).withColumn(
             _PARTITION_COL, F.expr(f"unix_micros(window_start) div {_US_PER_DAY}")
         )
         # Touched-partition METADATA only (a 1 s micro-batch spans 1-2 days),
         # never data — this is the one driver-side collect in the pipeline.
         days = sorted(r[0] for r in delta.select(_PARTITION_COL).distinct().collect())
-        fs, root, jvm = _hadoop_fs(sess, out_dir)
-        have_store = fs.exists(root) and any(
-            st.getPath().getName().startswith(f"{_PARTITION_COL}=")
-            for st in fs.listStatus(root)
-        )
+        parts = [f"{_PARTITION_COL}={day}" for day in days]
+        os.makedirs(out_dir, exist_ok=True)
+        for part in parts:
+            _recover_incomplete(out_dir, part)
+        have_store = any(d.startswith(f"{_PARTITION_COL}=") for d in os.listdir(out_dir))
         if have_store:
             current = sess.read.parquet(out_dir).filter(F.col(_PARTITION_COL).isin(days))
             w = Window.partitionBy("user_id", "window_start").orderBy(F.col("batch_seq").desc())
@@ -607,22 +590,14 @@ def run_foreach_batch_upsert(
             merged = delta
         stage_dir = f"{out_dir}__stage_{batch_id}"
         merged.write.mode("overwrite").partitionBy(_PARTITION_COL).parquet(stage_dir)
-        _, stage_root, _ = _hadoop_fs(sess, stage_dir)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(stage_dir, "_SUCCESS")):
+        if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
             raise RuntimeError(f"staging write of batch {batch_id} left no _SUCCESS marker")
-        if not fs.exists(root):
-            fs.mkdirs(root)
-        for day in days:
-            part = f"{_PARTITION_COL}={day}"
-            staged = jvm.org.apache.hadoop.fs.Path(stage_dir, part)
-            live = jvm.org.apache.hadoop.fs.Path(root, part)
-            backup = jvm.org.apache.hadoop.fs.Path(root, _BACKUP_PREFIX + part)
-            if fs.exists(live):
-                fs.rename(live, backup)
-            fs.rename(staged, live)
-            if fs.exists(backup):
-                fs.delete(backup, True)
-        fs.delete(stage_root, True)
+        for part in parts:
+            _swap_in(
+                out_dir, part,
+                lambda dst, part=part: os.rename(os.path.join(stage_dir, part), dst),
+            )
+        shutil.rmtree(stage_dir)
 
     q = (
         agg.writeStream.foreachBatch(merge_batch)
@@ -659,7 +634,6 @@ def _sentinel_events(
     inside the streaming plan (pushdown would drag the filter into the
     shared source scan and starve the watermark — observed)."""
     import datetime as dt
-    import shutil
     import tempfile
     import time
 

@@ -84,16 +84,17 @@ def test_foreach_batch_upsert_is_idempotent_per_key(spark, tmp_path):
     assert _as_set(got) == _as_set(batch)
 
 
-def _write_events_file(spark, path, seq, day, n=50):
-    """One source parquet of synthetic events on the given UTC day, with a
+def _write_events_file(spark, path, seq, day, n=50, users=5, start_s=0):
+    """One source parquet of synthetic events on the given UTC day (users
+    0..users-1, 4 events a second from ``start_s`` into the day), with a
     timestamp-typed ts like the driver fixtures."""
     import glob as _glob
     import os
     import shutil
 
-    base_us = day * 86_400_000_000
+    base_us = day * 86_400_000_000 + start_s * 1_000_000
     rows = [
-        (seq * 1000 + i, base_us + i * 250_000, i % 5, "click", float(i), "{}")
+        (seq * 1000 + i, base_us + i * 250_000, i % users, "click", float(i), "{}")
         for i in range(n)
     ]
     df = spark.createDataFrame(
@@ -141,35 +142,120 @@ def test_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     assert got.count() == 100
 
 
+def _rows(spark, out):
+    return {tuple(r) for r in spark.read.parquet(out).select("user_id", "window_start", "cnt").collect()}
+
+
 def test_upsert_recovers_interrupted_partition_swap(spark, tmp_path):
     """Crash between the two commit renames leaves a backup dir and no live
-    partition; the next batch must restore the backup before merging, so no
-    previously committed rows are ever lost."""
-    import os
+    partition; the next batch on that day must restore the backup before
+    merging, so no previously committed rows are ever lost. A stale backup
+    (the swap completed, its cleanup never ran) is dropped instead."""
     import shutil
+
+    from kinesis_demo_spark.sinks.maintenance import _BACKUP_PREFIX
 
     src = str(tmp_path / "src")
     os.makedirs(src)
     out = str(tmp_path / "serving")
+    ckpt = str(tmp_path / "ckpt")
     day = 19_723
+    part = f"{P._PARTITION_COL}={day}"
+    backup = os.path.join(out, _BACKUP_PREFIX + part)
+
+    def upsert():
+        P.run_foreach_batch_upsert(spark, src, out_dir=out, checkpoint_dir=ckpt, glob="*.parquet")
+
     _write_events_file(spark, src, 0, day)
-    P.run_foreach_batch_upsert(
-        spark, src, out_dir=out, checkpoint_dir=str(tmp_path / "c1"), glob="*.parquet"
-    )
-    before = {tuple(r) for r in spark.read.parquet(out).collect()}
+    upsert()
+    before = _rows(spark, out)
 
     # simulate the torn state: live dir renamed to backup, new one never landed
-    part = f"{P._PARTITION_COL}={day}"
-    shutil.move(os.path.join(out, part), os.path.join(out, P._BACKUP_PREFIX + part))
-
-    P._recover_partition_swaps(spark, out)
-    assert {tuple(r) for r in spark.read.parquet(out).collect()} == before
+    shutil.move(os.path.join(out, part), backup)
+    _write_events_file(spark, src, 1, day, start_s=3600)
+    upsert()
+    torn = _rows(spark, out)
+    assert before < torn
+    assert sorted(os.listdir(out)) == [part]
 
     # stale-backup flavor: swap completed but backup cleanup never ran
-    shutil.copytree(os.path.join(out, part), os.path.join(out, P._BACKUP_PREFIX + part))
-    P._recover_partition_swaps(spark, out)
-    assert not os.path.exists(os.path.join(out, P._BACKUP_PREFIX + part))
-    assert {tuple(r) for r in spark.read.parquet(out).collect()} == before
+    shutil.copytree(os.path.join(out, part), backup)
+    _write_events_file(spark, src, 2, day, start_s=7200)
+    upsert()
+    assert torn < _rows(spark, out)
+    assert sorted(os.listdir(out)) == [part]
+
+
+def test_upsert_recovers_a_torn_maintenance_commit(spark, tmp_path):
+    """A maintenance commit torn between its renames leaves day D only as
+    the maintenance backup. The next upsert batch on D must restore it
+    before merging: writing D from its delta alone would let the following
+    compaction read "live + backup" as a completed swap and delete every
+    previously committed window of D."""
+    from kinesis_demo_spark.sinks.maintenance import _BACKUP_PREFIX, compact_partition
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    out = str(tmp_path / "serving")
+    ckpt = str(tmp_path / "ckpt")
+    day = 19_723
+    part = f"{P._PARTITION_COL}={day}"
+
+    _write_events_file(spark, src, 0, day)
+    P.run_foreach_batch_upsert(spark, src, out_dir=out, checkpoint_dir=ckpt, glob="*.parquet")
+    before = _rows(spark, out)
+
+    os.rename(os.path.join(out, part), os.path.join(out, _BACKUP_PREFIX + part))
+    _write_events_file(spark, src, 1, day, start_s=3600)
+    P.run_foreach_batch_upsert(spark, src, out_dir=out, checkpoint_dir=ckpt, glob="*.parquet")
+    compact_partition(spark, out, P._PARTITION_COL, str(day))
+
+    assert before < _rows(spark, out)  # nothing lost, the new windows landed
+
+
+def test_purge_recovers_a_torn_upsert_commit(spark, tmp_path, monkeypatch):
+    """An upsert commit torn between its renames (injected on the staged ->
+    live rename) leaves day D's committed data only in the backup. A subject
+    purge must still find and purge it, and replaying the failed batch must
+    not bring the purged rows back."""
+    from kinesis_demo_spark.sinks import maintenance as M
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    out = str(tmp_path / "serving")
+    ckpt = str(tmp_path / "ckpt")
+    day = 19_723
+    part = f"{P._PARTITION_COL}={day}"
+
+    def upsert():
+        P.run_foreach_batch_upsert(spark, src, out_dir=out, checkpoint_dir=ckpt, glob="*.parquet")
+
+    _write_events_file(spark, src, 0, day)
+    upsert()
+    kept = {r for r in _rows(spark, out) if r[0] != 3}
+    _write_events_file(spark, src, 1, day, users=3, start_s=3600)  # no user 3
+
+    rename = os.rename
+
+    def torn_rename(a, b):
+        if os.path.basename(a) == M._STAGING_PREFIX + part:
+            raise OSError("injected crash before the staged partition went live")
+        rename(a, b)
+
+    monkeypatch.setattr(os, "rename", torn_rename)
+    with pytest.raises(Exception, match="injected crash"):
+        upsert()
+    monkeypatch.undo()
+
+    got = M.purge_subject(spark, out, P._PARTITION_COL, "user_id", 3)
+    assert got == {"partitions_scanned": 1, "partitions_rewritten": 1, "rows_purged": 10}
+
+    upsert()  # the restarted stream replays the uncommitted batch
+    after = _rows(spark, out)
+    assert not any(r[0] == 3 for r in after)
+    assert kept < after  # the other users' windows, plus the replayed batch's
+    assert sorted(os.listdir(out)) == [part]
+    assert not os.path.exists(f"{out}__stage_1")
 
 
 def test_serving_loop_concurrent_polls_under_budget(spark):
@@ -352,4 +438,39 @@ def test_available_now_trigger_lives_only_in_the_drivers():
     assert sites == {
         ("streaming/pipeline.py", "drain"),
         ("streaming/pipeline.py", "run_foreach_batch_upsert"),
+    }
+
+
+def test_steady_tail_summarizes_progress_after_warm_up():
+    """The streaming tools' shared steady-tail summary (no Spark): the first
+    third of the progress dicts is warm-up and never counted; an empty tail
+    reports no batch or state figures instead of indexing an empty list."""
+    from tools.stream_throughput import steady_tail
+
+    def progress(rows, ms, state_rows=None):
+        p = {"numInputRows": rows, "batchDuration": ms}
+        if state_rows is not None:
+            p["stateOperators"] = [{"numRowsTotal": state_rows, "memoryUsedBytes": 10 * state_rows}]
+        return p
+
+    warm = [progress(1, 9000, 999)]
+    steady = [progress(1000, 500, 40), progress(3000, 1500, 70)]
+    assert steady_tail(warm + steady) == {
+        "achieved_rows_s": 2000,
+        "batches": 2,
+        "batch_ms_p50": 1500,
+        "batch_ms_p99": 1500,
+        "batch_ms_max": 1500,
+        "state_rows_total": 70,
+        "state_memory_bytes": 700,
+    }
+    assert steady_tail([progress(10, 100)] * 3)["state_rows_total"] is None
+    assert steady_tail([]) == {
+        "achieved_rows_s": 0,
+        "batches": 0,
+        "batch_ms_p50": None,
+        "batch_ms_p99": None,
+        "batch_ms_max": None,
+        "state_rows_total": None,
+        "state_memory_bytes": None,
     }

@@ -37,6 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from kinesis_demo_spark.session import get_spark
 from kinesis_demo_spark.sources.synthetic import stream_synthetic_events
 from kinesis_demo_spark.plans.movements import movement_aggregates
+from tools.stream_throughput import steady_tail
 
 # Descending offered-load ladder: the solo ingest ceiling is 244k rows/s
 # (STREAM_THROUGHPUT.json); under 32-client serving interference the 100k
@@ -94,26 +95,11 @@ def _one_rung(
     progresses = [json.loads(p.json) for p in q.recentProgress]
     q.stop()
 
-    # steady tail only (same convention as the throughput seal)
-    tail = progresses[len(progresses) // 3 :]
-    rows = sum(p["numInputRows"] for p in tail)
-    dur_s = sum(p["batchDuration"] for p in tail) / 1000.0
-    batch_ms = sorted(p["batchDuration"] for p in tail)
-    pct = lambda f: batch_ms[min(len(batch_ms) - 1, int(f * len(batch_ms)))]  # noqa: E731
-    st = [p["stateOperators"][0] for p in tail if p.get("stateOperators")]
-
-    ingest = {
-        "offered_rows_s": offered,
-        "achieved_rows_s": round(rows / dur_s) if dur_s else 0,
-        "batches": len(tail),
-        # ADVICE r10: pct() indexes batch_ms[-1] on an empty tail — guard
-        # the percentile fields the same way as batch_ms_max/budget_held
-        "batch_ms_p50": pct(0.50) if batch_ms else None,
-        "batch_ms_p99": pct(0.99) if batch_ms else None,
-        "batch_ms_max": batch_ms[-1] if batch_ms else None,
-        "state_rows_total": max(s["numRowsTotal"] for s in st) if st else None,
-        "budget_held": bool(batch_ms) and pct(0.99) < 1000,
-    }
+    # steady tail only (the throughput seal's summary)
+    tail = steady_tail(progresses)
+    del tail["state_memory_bytes"]
+    p99 = tail["batch_ms_p99"]
+    ingest = {"offered_rows_s": offered, **tail, "budget_held": p99 is not None and p99 < 1000}
     serving_ok = serving.get("value") is not None and serving["value"] < 2.0
     return {
         "ingest": ingest,

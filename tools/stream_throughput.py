@@ -43,6 +43,31 @@ from kinesis_demo_spark.streaming.pipeline import (
 )
 
 
+def steady_tail(progresses: list[dict]) -> dict:
+    """Summarize a query's progress dicts over the steady tail — every batch
+    after the first third (stream warm-up): achieved rows/s, batch-duration
+    percentiles and peak state size. An empty tail reports 0 rows/s and
+    None for every batch and state figure."""
+    tail = progresses[len(progresses) // 3 :]
+    rows = sum(p["numInputRows"] for p in tail)
+    dur_s = sum(p["batchDuration"] for p in tail) / 1000.0
+    batch_ms = sorted(p["batchDuration"] for p in tail)
+
+    def pct(f):
+        return batch_ms[min(len(batch_ms) - 1, int(f * len(batch_ms)))] if batch_ms else None
+
+    st = [p["stateOperators"][0] for p in tail if p.get("stateOperators")]
+    return {
+        "achieved_rows_s": round(rows / dur_s) if dur_s else 0,
+        "batches": len(tail),
+        "batch_ms_p50": pct(0.50),
+        "batch_ms_p99": pct(0.99),
+        "batch_ms_max": batch_ms[-1] if batch_ms else None,
+        "state_rows_total": max(s["numRowsTotal"] for s in st) if st else None,
+        "state_memory_bytes": max(s["memoryUsedBytes"] for s in st) if st else None,
+    }
+
+
 def main() -> None:
     if "--seal" in sys.argv:
         seal(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -69,23 +94,18 @@ def main() -> None:
     progresses = [json.loads(p.json) for p in q.recentProgress]
     q.stop()
 
-    # Skip the first batches (stream warm-up) and average the steady tail.
-    tail = progresses[len(progresses) // 3 :]
-    rows = sum(p["numInputRows"] for p in tail)
-    dur = sum(p["batchDuration"] for p in tail) / 1000.0
+    tail = steady_tail(progresses)
     print(
         json.dumps(
             {
                 "metric": "stream_rows_per_s_wire" if wire else "stream_rows_per_s",
                 "offered": rows_per_second,
-                "achieved": round(rows / dur) if dur else 0,
-                "batches": len(tail),
+                "achieved": tail["achieved_rows_s"],
+                "batches": tail["batches"],
                 "unit": "rows/s",
             }
         )
     )
-
-
 
 
 def seal(out_path: str) -> dict:
@@ -121,24 +141,9 @@ def seal(out_path: str) -> dict:
         time.sleep(25)
         progresses = [json.loads(p.json) for p in q.recentProgress]
         q.stop()
-        tail = progresses[len(progresses) // 3 :]
-        if not tail:
+        rung = {"offered_rows_s": offered, **steady_tail(progresses)}
+        if not rung["batches"]:
             break
-        rows = sum(p["numInputRows"] for p in tail)
-        dur_s = sum(p["batchDuration"] for p in tail) / 1000.0
-        batch_ms = sorted(p["batchDuration"] for p in tail)
-        pct = lambda q_: batch_ms[min(len(batch_ms) - 1, int(q_ * len(batch_ms)))]  # noqa: E731
-        st = [p["stateOperators"][0] for p in tail if p.get("stateOperators")]
-        rung = {
-            "offered_rows_s": offered,
-            "achieved_rows_s": round(rows / dur_s) if dur_s else 0,
-            "batches": len(tail),
-            "batch_ms_p50": pct(0.50),
-            "batch_ms_p99": pct(0.99),
-            "batch_ms_max": batch_ms[-1],
-            "state_rows_total": max(s["numRowsTotal"] for s in st) if st else None,
-            "state_memory_bytes": max(s["memoryUsedBytes"] for s in st) if st else None,
-        }
         rung["sustained"] = (
             rung["achieved_rows_s"] >= 0.95 * offered and rung["batch_ms_p99"] < 1000
         )

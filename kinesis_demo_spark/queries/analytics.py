@@ -2069,15 +2069,23 @@ PAGERANK_P9 = 1_000_000_000
 
 def _copurchase_weighted_edges(li: DataFrame) -> DataFrame:
     """(src, dst, w): the weighted co-purchase edge list shared by
-    pagerank/LPA/k-core. ONE pass over lineitem — group lines by order,
-    expand the (bounded, <= order size) part list to ordered pairs IN-ROW
-    with nested array transforms, aggregate pair counts. Row-identical to
-    the former lineitem self-join on orderkey but with one lineitem
-    exchange instead of two plus a join (measured 2.9 s -> 1.8 s for the
-    edge build alone at sf0.1, 4.5 s -> 2.9 s at sf1); the same
-    basket-expansion shape graph_triangle_clustering uses for wedges. The
-    per-order pair blow-up is bounded by max basket size squared — in-row
-    work, never a shuffle."""
+    pagerank/LPA/k-core/link prediction. ONE pass over lineitem — group
+    lines by order, expand the (bounded, <= order size) part list to ordered
+    pairs IN-ROW with nested array transforms, aggregate pair counts.
+    Row-identical to the former lineitem self-join on orderkey (measured
+    2.9 s -> 1.8 s for the edge build alone at sf0.1, 4.5 s -> 2.9 s at
+    sf1); the same basket-expansion shape graph_triangle_clustering uses for
+    wedges. The per-order pair blow-up is bounded by max basket size
+    squared — in-row work, never a shuffle.
+
+    Exchanges: one on l_orderkey for the basket groupBy, then ONE on src.
+    The pairs are repartitioned on src before the (src, dst) count: hash(src)
+    satisfies the aggregate's (src, dst) clustering, so the count runs
+    partition-local and the output leaves hash-partitioned on src — the
+    layout every caller's src-keyed join or aggregate reuses. Callers must
+    not partition it again (a second repartition("src") is a second full
+    edge shuffle). Pairs are enumerated both ways, so the list is symmetric:
+    w(a, b) == w(b, a)."""
     g = li.groupBy("l_orderkey").agg(F.collect_list("l_partkey").alias("ps"))
     pairs = g.select(
         F.explode(
@@ -2096,6 +2104,7 @@ def _copurchase_weighted_edges(li: DataFrame) -> DataFrame:
     )
     return (
         pairs.select("e.src", "e.dst")
+        .repartition("src")
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -2169,7 +2178,9 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: edges come from the shared grouped basket expansion
     (_copurchase_weighted_edges: one lineitem exchange, in-row pair
     blow-up bounded by order size squared — the market-basket shape
-    co-occurrence lift already uses); each
+    co-occurrence lift already uses — then one src-keyed exchange whose
+    layout the out-weight aggregate and its join on src reuse, so the
+    normalised edge table costs no further shuffle); each
     iteration is one (edge join ranks) shuffle on src + one dst-keyed
     aggregate, the textbook distributed PageRank round — now on plain
     BIGINTs, cheaper per row than the previous decimal128 path. Rounds run
@@ -3542,28 +3553,29 @@ def graph_label_propagation(
     The per-round convergence check costs one count() scalar on the driver,
     never data.
 
-    Scale: the graph is symmetric so every node appears as a dst — one
-    vote-join (shuffle on src) + one (part, lab) aggregate + one argmax per
-    round, all map-side combinable; labels are checkpointed per round and
-    the loop count is fixed, so the DAG is {LPA_ROUNDS} joined stages, the same
-    batch-iterative shape as pagerank_copurchase. Hub skew lands on the
-    vote aggregate key (dst, lab) — two-level, not per-dst — and AQE
-    splits any residual hot key."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    from ..io import iterate, track_checkpoint, track_persist
+    Scale: the edge list arrives hash-partitioned on src (one src-keyed
+    exchange in _copurchase_weighted_edges) and is cached that way, so
+    every vote join shuffles only the label side. Round 1 needs no join at
+    all: from identity labels node d's vote for label s weighs w(s, d),
+    and the edge list is symmetric, so round 1 is the argmax of
+    (-w, dst) over each src's own edges — a partition-local aggregate on
+    the cache, with no exchange. The remaining rounds are one vote join +
+    one (dst, lab) aggregate + one argmax each, after a single shuffle on
+    dst; labels are checkpointed per round. The fixpoint check skips the
+    identity labeling, which is never a fixpoint (every node has a
+    neighbour other than itself, so round 1 changes every label). Hub skew
+    lands on the vote aggregate key (dst, lab) — two-level, not per-dst —
+    and AQE splits any residual hot key."""
+    from ..io import iterate, track_persist
 
-    # repartition("src") before persist: the per-round vote join hashes on
-    # src, so caching the edge list already src-partitioned means each round
-    # shuffles only the (small) label side — without it every round re-moves
-    # all m edge rows, the dominant network cost of the loop at cluster scale
-    # (the groupBy leaves the cache partitioned by (src, dst), which the
-    # src-equi-join cannot reuse). Measured at sf0.1: 5.3 s -> 4.6 s warm.
-    edges = track_persist(_copurchase_weighted_edges(li).repartition("src"))
-    labels = edges.select(F.col("src").alias("part")).distinct().select(
-        "part", F.col("part").alias("lab")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    edges = track_persist(_copurchase_weighted_edges(li))
+    # round 1 from identity labels: each node's heaviest neighbour (symmetry)
+    labels = (
+        edges.groupBy("src")
+        .agg(F.min(F.struct((-F.col("w")).alias("nw"), F.col("dst").alias("l"))).alias("m"))
+        .select(F.col("src").alias("part"), F.col("m.l").alias("lab"))
     )
-    if fixpoint:
-        labels = track_checkpoint(labels)
 
     def vote_round(labels: DataFrame) -> DataFrame:
         # One exchange per round, not two (VERDICT r13 #3, guide §2.4): the
@@ -3599,13 +3611,14 @@ def graph_label_propagation(
     labels = iterate(
         labels,
         vote_round,
-        GRAPH_MAX_FIXPOINT_ROUNDS if fixpoint else LPA_ROUNDS,
+        (GRAPH_MAX_FIXPOINT_ROUNDS if fixpoint else LPA_ROUNDS) - 1,
         until=settled if fixpoint else None,
         name="graph_label_propagation",
     )
-    sizes = labels.groupBy("lab").agg(F.count(F.lit(1)).alias("community_size"))
-    return labels.join(sizes, "lab").select(
-        "part", F.col("lab").alias("community"), "community_size"
+    return labels.select(
+        "part",
+        F.col("lab").alias("community"),
+        F.count(F.lit(1)).over(Window.partitionBy("lab")).alias("community_size"),
     )
 
 
@@ -3767,12 +3780,10 @@ def graph_kcore(
     from ..io import iterate, track_persist
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # src-partitioned cache (the LPA/pagerank discipline): the first semi-join
-    # of every peel round hashes on src and reuses this partitioning; only the
-    # round's already-pruned survivor set moves for the dst-side join.
-    edges = track_persist(
-        _copurchase_weighted_edges(li).select("src", "dst").repartition("src")
-    )
+    # src-partitioned cache (the edge list leaves its build hashed on src):
+    # the first semi-join of every peel round reuses this partitioning; only
+    # the round's already-pruned survivor set moves for the dst-side join.
+    edges = track_persist(_copurchase_weighted_edges(li).select("src", "dst"))
     k_row = edges.agg(
         F.expr(
             "(7 * count(1) + 10 * count(DISTINCT src) - 1) DIV (10 * count(DISTINCT src))"
@@ -4318,9 +4329,7 @@ def graph_linkpred_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFra
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
-    edges = track_persist(
-        _copurchase_weighted_edges(li).select("src", "dst").repartition("src")
-    )
+    edges = track_persist(_copurchase_weighted_edges(li).select("src", "dst"))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     q = F.broadcast(
         edges.select("src").distinct().orderBy("src").limit(LINKPRED_QUERY_NODES)

@@ -46,6 +46,26 @@ def default_shuffle_partitions(cores: int) -> int:
     return max(cores // 4, 4)
 
 
+def default_driver_memory() -> str:
+    """Driver heap default: half the host's physical memory, capped at 32g
+    and floored at 1g, overridable via ``$SPARK_GRAFT_DRIVER_MEM``.
+
+    Local mode hosts the driver AND all executor threads in ONE JVM: an 8g
+    heap put the 60-query bench under old-gen GC churn at 32 cores
+    (measured: mid-bench queries 3-4x their fresh-session warm time,
+    serving p95 blowing the 2 s budget), so the cap is the 32g that
+    restored executor-like headroom there. A fixed 32g on a smaller host
+    lets the JVM grow past physical RAM and get OOM-killed instead of
+    spilling; half of RAM leaves the rest to Python workers and the page
+    cache. On a real cluster this knob is per-executor memory, not
+    driver."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, min(32 * 1024, phys_mb // 2))}m"
+
+
 def get_spark(
     app_name: str = "kinesis-demo-spark",
     shuffle_partitions: int | None = None,
@@ -88,12 +108,7 @@ def get_spark(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             str(64 * 1024 * 1024),
         )
-        # local mode hosts the driver AND all 32 executor threads in ONE JVM:
-        # an 8g heap put the 60-query bench under old-gen GC churn (measured:
-        # mid-bench queries 3-4x their fresh-session warm time, serving p95
-        # blowing the 2 s budget). 32g restores executor-like headroom; on a
-        # real cluster this knob is per-executor memory, not driver.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Fixture timestamp columns must surface as UTC instants whatever

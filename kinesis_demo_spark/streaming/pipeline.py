@@ -555,8 +555,10 @@ def run_foreach_batch_upsert(
     uncommitted, so the restarted stream replays the same offsets, touches
     the same days and recovers them. Replaying an acknowledged-but-
     uncommitted batch is idempotent because the keep-newest merge is. The
-    store is a local directory (the commit renames with `os`). Watermarked
-    so streaming state stays bounded."""
+    store is a local directory (the commit renames with `os`). A batch with
+    an empty delta (the trailing watermark batch of an availableNow run)
+    returns before it reads or writes anything. Watermarked so streaming
+    state stays bounded."""
     agg = windowed_aggregate(
         stream_events(spark, sf_dir, max_files_per_trigger, glob=glob), watermark="10 seconds"
     )
@@ -572,6 +574,8 @@ def run_foreach_batch_upsert(
         # Touched-partition METADATA only (a 1 s micro-batch spans 1-2 days),
         # never data — this is the one driver-side collect in the pipeline.
         days = sorted(r[0] for r in delta.select(_PARTITION_COL).distinct().collect())
+        if not days:  # a no-data batch (e.g. the trailing watermark one)
+            return
         parts = [f"{_PARTITION_COL}={day}" for day in days]
         os.makedirs(out_dir, exist_ok=True)
         for part in parts:

@@ -530,6 +530,93 @@ def test_kcore_fixpoint_matches_python_peel(spark):
         assert got[n] == (deg[n], k)
 
 
+def _python_lpa_round(edges, labels):
+    """One synchronous weighted LPA round in plain Python: each dst adopts
+    the label with the largest summed in-weight, ties to the smaller label
+    (the struct-min rule)."""
+    votes: dict = {}
+    for (s, d), w in edges.items():
+        key = (d, labels[s])
+        votes[key] = votes.get(key, 0) + w
+    new = {}
+    for (d, lab), wv in votes.items():
+        cur = new.get(d)
+        if cur is None or (-wv, lab) < cur:
+            new[d] = (-wv, lab)
+    return {d: lab for d, (_nw, lab) in new.items()}
+
+
+def _sizes(labels):
+    sizes: dict = {}
+    for lab in labels.values():
+        sizes[lab] = sizes.get(lab, 0) + 1
+    return sizes
+
+
+def test_copurchase_edges_are_symmetric_and_src_partitioned(spark):
+    """The shared edge list equals the self-join reference, is symmetric
+    (w(a, b) == w(b, a) — what lets LPA compute round 1 without a join),
+    and its executed plan has exactly two shuffles: the basket groupBy's
+    and ONE on src, which is the output layout callers reuse."""
+    import re
+
+    from kinesis_demo_spark.io import load_table
+    from kinesis_demo_spark.queries.analytics import _copurchase_weighted_edges
+
+    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
+    df = _copurchase_weighted_edges(li)
+    got = {(r.src, r.dst): r.w for r in df.collect()}
+    assert got == _copurchase_edges(SF)
+    assert all(got[(d, s)] == w for (s, d), w in got.items())
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    shuffles = [
+        line for line in final.splitlines()
+        if re.search(r"\bExchange ", line) and "ReusedExchange" not in line
+    ]
+    assert len(shuffles) == 2, final
+    assert re.search(r"Exchange hashpartitioning\(src#\d+L?, \d+\)", shuffles[0]), final
+
+
+def test_lpa_fixed_rounds_match_python_propagation(spark):
+    """The registered fixed-round LPA (LPA_ROUNDS rounds from identity
+    labels, round 1 computed without a vote join) vs the plain-Python
+    rounds: identical labels and community sizes."""
+    from kinesis_demo_spark.queries.analytics import LPA_ROUNDS, graph_label_propagation
+
+    edges = _copurchase_edges(SF)
+    labels = {n: n for n in {s for s, _ in edges}}
+    for _ in range(LPA_ROUNDS):
+        labels = _python_lpa_round(edges, labels)
+    got = {r.part: (r.community, r.community_size)
+           for r in graph_label_propagation(spark, SF).collect()}
+    sizes = _sizes(labels)
+    assert got == {p: (lab, sizes[lab]) for p, lab in labels.items()}
+    assert len(sizes) > 1  # the fixed rounds stop before the epidemic collapse
+
+
+def test_lpa_fires_at_most_twelve_jobs(spark):
+    """Build plus collect of graph_label_propagation at sf0.001, counted
+    through its job group: the single src-keyed edge exchange, the
+    join-free first round and the windowed community size keep it to 12
+    jobs or fewer (18 before them). Persists left by earlier tests are
+    released first — a cache hit on the edge list would hide its jobs."""
+    from kinesis_demo_spark.io import release_persisted
+    from kinesis_demo_spark.queries.analytics import graph_label_propagation
+
+    release_persisted()
+    sc = spark.sparkContext
+    group = "test:lpa-jobs"
+    sc.setJobGroup(group, "graph_label_propagation")
+    try:
+        graph_label_propagation(spark, SF).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_persisted()
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 12
+
+
 def test_lpa_fixpoint_matches_python_propagation(spark):
     """fixpoint=True weighted synchronous LPA vs a plain-Python reference
     run to convergence: identical label assignment (ties to smaller label,
@@ -542,16 +629,7 @@ def test_lpa_fixpoint_matches_python_propagation(spark):
     edges = _copurchase_edges(SF)
     labels = {n: n for n in {s for s, _ in edges}}
     for rnd in range(GRAPH_MAX_FIXPOINT_ROUNDS):
-        votes: dict = {}
-        for (s, d), w in edges.items():
-            key = (d, labels[s])
-            votes[key] = votes.get(key, 0) + w
-        new = {}
-        for (d, lab), wv in votes.items():
-            cur = new.get(d)
-            if cur is None or (-wv, lab) < cur:
-                new[d] = (-wv, lab)
-        new_labels = {d: lab for d, (_nw, lab) in new.items()}
+        new_labels = _python_lpa_round(edges, labels)
         if new_labels == labels:
             break
         labels = new_labels
@@ -559,9 +637,7 @@ def test_lpa_fixpoint_matches_python_propagation(spark):
         raise AssertionError("python LPA reference did not converge")
     got = {r.part: (r.community, r.community_size)
            for r in graph_label_propagation(spark, SF, fixpoint=True).collect()}
-    sizes: dict = {}
-    for lab in labels.values():
-        sizes[lab] = sizes.get(lab, 0) + 1
+    sizes = _sizes(labels)
     assert {p: c for p, (c, _s) in got.items()} == labels
     for p, (c, s) in got.items():
         assert s == sizes[c]

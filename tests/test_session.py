@@ -1,0 +1,36 @@
+"""Session defaults that adapt to the host (no Spark session needed)."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from kinesis_demo_spark.session import default_driver_memory
+
+
+def _host_with(monkeypatch, phys_bytes: int) -> None:
+    page = 4096
+    pages = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": phys_bytes // page}
+    monkeypatch.setattr(os, "sysconf", lambda name: pages[name])
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+
+
+@pytest.mark.parametrize(
+    "phys_gib, want",
+    [
+        (15, "7680m"),  # half of RAM
+        (64, "32768m"),  # exactly at the cap
+        (256, "32768m"),  # capped at 32g
+        (1, "1024m"),  # floored at 1g
+    ],
+)
+def test_driver_heap_is_half_of_ram_within_bounds(monkeypatch, phys_gib, want):
+    _host_with(monkeypatch, phys_gib * 2**30)
+    assert default_driver_memory() == want
+
+
+def test_driver_heap_env_override_wins(monkeypatch):
+    _host_with(monkeypatch, 15 * 2**30)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"

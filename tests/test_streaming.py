@@ -186,6 +186,36 @@ def test_upsert_recovers_interrupted_partition_swap(spark, tmp_path):
     assert sorted(os.listdir(out)) == [part]
 
 
+def test_upsert_writes_only_for_data_batches(spark, tmp_path, monkeypatch):
+    """Each upsert micro-batch stages its merge with one parquet write; a
+    batch with no rows (the trailing watermark batch of an availableNow
+    run) must return before reading or writing the store."""
+    from pyspark.sql import DataFrameWriter
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    day = 19_723
+    n_files = 2
+    for seq in range(n_files):
+        _write_events_file(spark, src, seq, day, start_s=seq * 100)
+
+    writes = []
+    parquet = DataFrameWriter.parquet
+
+    def counting_parquet(self, path, *args, **kwargs):
+        writes.append(path)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    got = P.run_foreach_batch_upsert(
+        spark, src, out_dir=str(tmp_path / "serving"),
+        checkpoint_dir=str(tmp_path / "ckpt"), glob="*.parquet",
+    )
+    # maxFilesPerTrigger=1: one data batch per source file
+    assert len(writes) == n_files
+    assert got.count() == n_files * 50
+
+
 def test_upsert_recovers_a_torn_maintenance_commit(spark, tmp_path):
     """A maintenance commit torn between its renames leaves day D only as
     the maintenance backup. The next upsert batch on D must restore it

@@ -5,9 +5,11 @@ actually provides), at any scale factor. Produces the PARITY artifact the
 round ledger cites: per-query {ok, problems, sec}.
 
 Usage:
-    python tools/parity_sweep.py [sf_dir] [out.json]
+    python tools/parity_sweep.py [sf_dir] [out.json] [--only name[,name...]]
 Defaults: sf_dir=/root/testdata/sf0.1, out=PARITY_SF0.1.json (next to the
-repo root). Exit 1 iff any query fails.
+repo root). Exit 1 iff any query fails. ``--only`` sweeps just the named
+queries (unknown names are an error) — the cheap re-check for the queries
+a commit touches.
 
 This is the 10x-scale complement to the driver's sf0.01 CORRECTNESS gate:
 bit-exactness that holds at two scale factors is scale-invariant, not
@@ -35,6 +37,7 @@ five modern-era fixture classes keep sweeping under real hostile zones.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -46,16 +49,23 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from kinesis_demo_spark.session import default_driver_memory  # noqa: E402
+
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "PARITY_SF0.1.json")
+    ap = argparse.ArgumentParser(description="cross-engine parity sweep of the registry")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
+    ap.add_argument("out_path", nargs="?", default=os.path.join(REPO, "PARITY_SF0.1.json"))
+    ap.add_argument("--only", help="comma-separated query names to sweep")
+    args = ap.parse_args()
+    sf_dir, out_path = args.sf_dir, args.out_path
     # hostile session: non-UTC, no engine SQL configs — what the driver gives
     # us. Heap size is a deployment knob, not a semantics config: the default
-    # 1g driver heap OOMs ~2/3 through a 200-query sf0.1 sweep in one JVM.
+    # 1g driver heap OOMs ~2/3 through a 200-query sf0.1 sweep in one JVM, so
+    # the sweep takes the engine's host-derived heap.
     spark = (
         SparkSession.builder.master("local[16]")
-        .config("spark.driver.memory", "32g")
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.sql.session.timeZone", "America/New_York")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
@@ -68,7 +78,9 @@ def main() -> int:
     from kinesis_demo_spark.io import release_persisted  # noqa: E402
     from kinesis_demo_spark.registry import may_be_empty_at  # noqa: E402
 
-    qs, osql = entry.queries(), entry.oracle_sql()
+    from tools.plan_audit import select_queries  # noqa: E402
+
+    qs, osql = select_queries(entry.queries(), args.only), entry.oracle_sql()
     con = duckdb_conn(sf_dir)
     report: dict[str, dict] = {}
     n_bad = n_empty_bad = 0

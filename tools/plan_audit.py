@@ -20,7 +20,9 @@ Two identity fields gate behaviour-neutral refactors: ``fingerprint``
 (sha256 of the optimized LOGICAL plan, per-session ids normalised) and
 ``build_jobs`` (the session-global ids of the jobs fired while building the
 DataFrame — two audits in the same order agree iff every query fires the
-same jobs). Three fingerprints can change between sessions with no change
+same jobs), with their count in ``n_build_jobs``: once one query fires
+fewer jobs, every later query's ids shift, so only the counts compare
+across such a change. Three fingerprints can change between sessions with no change
 to the query: Spark numbers a multi-DISTINCT aggregate's groups in hash
 order (``profile_events_columns``, ``tpch_q21_waiting_suppliers``), and
 ``prf_query_expansion`` embeds the AQE plan of a cached index built by an
@@ -28,7 +30,10 @@ earlier query.
 
 Output: one JSON line per query to stdout plus a sorted summary table to
 stderr; ``--json PATH`` writes the full map to a sidecar (PLANS.json) so
-plan-shape regressions show up in review diffs.
+plan-shape regressions show up in review diffs. ``--only name[,name...]``
+audits just the named queries (unknown names are an error) — the quick
+re-check for the queries a commit touches; job ids then differ from a
+full run's, the counts do not.
 
 Streaming-drain queries (they EXECUTE on construction) are audited on their
 batch-equivalent plans where construction is side-effect-free; the
@@ -40,6 +45,7 @@ persists and checkpoints are released after each query.
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import hashlib
 import io
@@ -165,16 +171,30 @@ def audit_one(df) -> dict:
     }
 
 
+def select_queries(queries: dict, only: str | None) -> dict:
+    """The registry subset named by a comma-separated ``--only`` value (all
+    queries when it is None); an unknown name raises."""
+    if only is None:
+        return queries
+    names = [n.strip() for n in only.split(",") if n.strip()]
+    unknown = sorted(set(names) - set(queries))
+    if unknown:
+        raise SystemExit(f"--only: unknown queries {', '.join(unknown)}")
+    return {n: queries[n] for n in names}
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description="plan-shape audit of the query registry")
+    ap.add_argument("--json", dest="out_path", help="write the full report here")
+    ap.add_argument("--only", help="comma-separated query names to audit")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    out_path = None
-    if "--json" in sys.argv:
-        out_path = sys.argv[sys.argv.index("--json") + 1]
+    queries = select_queries(all_queries(), args.only)
     spark = get_spark("kinesis-demo-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
     report: dict[str, dict] = {}
-    for name, fn in sorted(all_queries().items()):
+    for name, fn in sorted(queries.items()):
         if name in STREAM_DRAINS:
             report[name] = {"skipped": "stream-drain; plan pinned in streaming tests"}
             continue
@@ -184,6 +204,7 @@ def main() -> None:
                 **audit_one(df),
                 "fingerprint": fingerprint(df),
                 "build_jobs": jobs,
+                "n_build_jobs": len(jobs),
             }
         except Exception as exc:  # noqa: BLE001 — audit must cover the rest
             report[name] = {"error": f"{type(exc).__name__}: {exc}"}
@@ -199,8 +220,8 @@ def main() -> None:
     n_rowpy = sum(v.get("row_python", 0) for v in audited.values())
     print(f"cartesian products: {n_cart}  row-python stages: {n_rowpy}", file=sys.stderr)
 
-    if out_path:
-        with open(out_path, "w") as f:
+    if args.out_path:
+        with open(args.out_path, "w") as f:
             json.dump(report, f, indent=1, sort_keys=True)
     print(json.dumps({"audited": len(audited), "skipped": len(report) - len(audited),
                       "cartesian_products": n_cart, "row_python_stages": n_rowpy}))

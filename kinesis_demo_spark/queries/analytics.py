@@ -3563,7 +3563,9 @@ def graph_label_propagation(
     one (dst, lab) aggregate + one argmax each, after a single shuffle on
     dst; labels are checkpointed per round. The fixpoint check skips the
     identity labeling, which is never a fixpoint (every node has a
-    neighbour other than itself, so round 1 changes every label). Hub skew
+    neighbour other than itself, so round 1 changes every label).
+    community_size is a count over a window on lab: one exchange, where a
+    size aggregate joined back cost an exchange plus a broadcast. Hub skew
     lands on the vote aggregate key (dst, lab) — two-level, not per-dst —
     and AQE splits any residual hot key."""
     from ..io import iterate, track_persist

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 from kinesis_demo_spark.registry import all_queries
 
 SF = "/root/testdata/sf0.001"
@@ -546,13 +548,6 @@ def _python_lpa_round(edges, labels):
     return {d: lab for d, (_nw, lab) in new.items()}
 
 
-def _sizes(labels):
-    sizes: dict = {}
-    for lab in labels.values():
-        sizes[lab] = sizes.get(lab, 0) + 1
-    return sizes
-
-
 def test_copurchase_edges_are_symmetric_and_src_partitioned(spark):
     """The shared edge list equals the self-join reference, is symmetric
     (w(a, b) == w(b, a) — what lets LPA compute round 1 without a join),
@@ -591,7 +586,7 @@ def test_lpa_fixed_rounds_match_python_propagation(spark):
         labels = _python_lpa_round(edges, labels)
     got = {r.part: (r.community, r.community_size)
            for r in graph_label_propagation(spark, SF).collect()}
-    sizes = _sizes(labels)
+    sizes = Counter(labels.values())
     assert got == {p: (lab, sizes[lab]) for p, lab in labels.items()}
     assert len(sizes) > 1  # the fixed rounds stop before the epidemic collapse
 
@@ -637,7 +632,7 @@ def test_lpa_fixpoint_matches_python_propagation(spark):
         raise AssertionError("python LPA reference did not converge")
     got = {r.part: (r.community, r.community_size)
            for r in graph_label_propagation(spark, SF, fixpoint=True).collect()}
-    sizes = _sizes(labels)
+    sizes = Counter(labels.values())
     assert {p: c for p, (c, _s) in got.items()} == labels
     for p, (c, s) in got.items():
         assert s == sizes[c]

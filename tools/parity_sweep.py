@@ -9,7 +9,8 @@ Usage:
 Defaults: sf_dir=/root/testdata/sf0.1, out=PARITY_SF0.1.json (next to the
 repo root). Exit 1 iff any query fails. ``--only`` sweeps just the named
 queries (unknown names are an error) — the cheap re-check for the queries
-a commit touches.
+a commit touches; give such a run its own out.json, since the default is the
+full sweep's artifact.
 
 This is the 10x-scale complement to the driver's sf0.01 CORRECTNESS gate:
 bit-exactness that holds at two scale factors is scale-invariant, not
@@ -49,8 +50,6 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from kinesis_demo_spark.session import default_driver_memory  # noqa: E402
-
 
 def main() -> int:
     ap = argparse.ArgumentParser(description="cross-engine parity sweep of the registry")
@@ -61,11 +60,10 @@ def main() -> int:
     sf_dir, out_path = args.sf_dir, args.out_path
     # hostile session: non-UTC, no engine SQL configs — what the driver gives
     # us. Heap size is a deployment knob, not a semantics config: the default
-    # 1g driver heap OOMs ~2/3 through a 200-query sf0.1 sweep in one JVM, so
-    # the sweep takes the engine's host-derived heap.
+    # 1g driver heap OOMs ~2/3 through a 200-query sf0.1 sweep in one JVM.
     spark = (
         SparkSession.builder.master("local[16]")
-        .config("spark.driver.memory", default_driver_memory())
+        .config("spark.driver.memory", "32g")
         .config("spark.sql.session.timeZone", "America/New_York")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -22,18 +22,20 @@ Two identity fields gate behaviour-neutral refactors: ``fingerprint``
 DataFrame — two audits in the same order agree iff every query fires the
 same jobs), with their count in ``n_build_jobs``: once one query fires
 fewer jobs, every later query's ids shift, so only the counts compare
-across such a change. Three fingerprints can change between sessions with no change
-to the query: Spark numbers a multi-DISTINCT aggregate's groups in hash
-order (``profile_events_columns``, ``tpch_q21_waiting_suppliers``), and
-``prf_query_expansion`` embeds the AQE plan of a cached index built by an
-earlier query.
+across such a change. Three fingerprints can change between sessions with
+no change to the query: Spark numbers a multi-DISTINCT aggregate's groups
+in hash order (``profile_events_columns``, ``tpch_q21_waiting_suppliers``),
+and ``prf_query_expansion`` embeds the AQE plan of a cached index built by
+an earlier query.
 
 Output: one JSON line per query to stdout plus a sorted summary table to
 stderr; ``--json PATH`` writes the full map to a sidecar (PLANS.json) so
 plan-shape regressions show up in review diffs. ``--only name[,name...]``
 audits just the named queries (unknown names are an error) — the quick
-re-check for the queries a commit touches; job ids then differ from a
-full run's, the counts do not.
+re-check for the queries a commit touches. Compare such a run with an
+``--only`` run of the same names: job ids shift with the queries before,
+and a query that reuses work memoised by an earlier one
+(``bpe_train_merges``) fires more jobs alone.
 
 Streaming-drain queries (they EXECUTE on construction) are audited on their
 batch-equivalent plans where construction is side-effect-free; the

@@ -28,14 +28,15 @@ in hash order (``profile_events_columns``, ``tpch_q21_waiting_suppliers``),
 and ``prf_query_expansion`` embeds the AQE plan of a cached index built by
 an earlier query.
 
-Output: one JSON line per query to stdout plus a sorted summary table to
-stderr; ``--json PATH`` writes the full map to a sidecar (PLANS.json) so
+Output: one summary JSON line to stdout plus the most-shuffling queries
+to stderr; ``--json PATH`` writes the full map to a sidecar (PLANS.json) so
 plan-shape regressions show up in review diffs. ``--only name[,name...]``
 audits just the named queries (unknown names are an error) — the quick
 re-check for the queries a commit touches. Compare such a run with an
-``--only`` run of the same names: job ids shift with the queries before,
-and a query that reuses work memoised by an earlier one
-(``bpe_train_merges``) fires more jobs alone.
+``--only`` run of the same names: job ids shift with the queries before, a
+query that reuses work memoised by an earlier one (``bpe_train_merges``)
+fires more jobs alone, and ``graph_kcore``'s fingerprint differs between a
+full and an ``--only`` run of the same tree.
 
 Streaming-drain queries (they EXECUTE on construction) are audited on their
 batch-equivalent plans where construction is side-effect-free; the

@@ -38,7 +38,6 @@ five modern-era fixture classes keep sweeping under real hostile zones.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
@@ -52,12 +51,13 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser(description="cross-engine parity sweep of the registry")
-    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
-    ap.add_argument("out_path", nargs="?", default=os.path.join(REPO, "PARITY_SF0.1.json"))
-    ap.add_argument("--only", help="comma-separated query names to sweep")
-    args = ap.parse_args()
-    sf_dir, out_path = args.sf_dir, args.out_path
+    only = None
+    if "--only" in sys.argv:
+        i = sys.argv.index("--only")
+        only = sys.argv[i + 1]
+        del sys.argv[i : i + 2]
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "PARITY_SF0.1.json")
     # hostile session: non-UTC, no engine SQL configs — what the driver gives
     # us. Heap size is a deployment knob, not a semantics config: the default
     # 1g driver heap OOMs ~2/3 through a 200-query sf0.1 sweep in one JVM.
@@ -78,7 +78,7 @@ def main() -> int:
 
     from tools.plan_audit import select_queries  # noqa: E402
 
-    qs, osql = select_queries(entry.queries(), args.only), entry.oracle_sql()
+    qs, osql = select_queries(entry.queries(), only), entry.oracle_sql()
     con = duckdb_conn(sf_dir)
     report: dict[str, dict] = {}
     n_bad = n_empty_bad = 0

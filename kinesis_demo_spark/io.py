@@ -271,11 +271,16 @@ def iterate(
     round reads its input twice, like k-core's semi-joins); larger
     ``checkpoint_every`` runs several lazily persisted rounds as one DAG
     between breaks (Drizzle-style group scheduling). The break is a
-    localCheckpoint, not a persist, by measurement (GRAPH_WATCH.json): at
-    sf0.1 persist-only rounds were within noise, but at sf1 they lost — LPA
-    0.78x, and k-core swung 6.5 / 11.6 / 52.4 s as nested lineage recomputed
-    rounds evicted under memory pressure — while the checkpoint form's worst
-    run was 8.7 s. On a cluster, ``checkpoint()`` to the lake instead.
+    localCheckpoint, not a persist. The sealed head-to-head in
+    GRAPH_WATCH.json does not show the checkpoint form faster: at sf0.1 the
+    two forms are within noise (cache speedup by min 0.98x k-core, 1.07x
+    LPA), and at sf1 the persist-only (cache) form is faster — LPA min /
+    median 8.69 / 8.70 s against 11.99 / 12.69 s checkpointed (1.38x),
+    k-core 5.92 / 6.52 s against 12.30 / 15.20 s (2.08x). The checkpoint
+    keeps each round's plan and recovery bounded whatever the memory
+    pressure, and an sf0.003 probe found no gain from checkpointing LPA
+    less often; the sf1 cadence is an open re-measurement. On a cluster,
+    ``checkpoint()`` to the lake instead.
 
     Convergence: ``until(old, new)`` is a driver-scalar check after each
     round; when it holds the loop returns ``new``, and if it never holds

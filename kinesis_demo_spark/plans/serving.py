@@ -111,9 +111,13 @@ def poll_page_with_total(
     which is exactly what saturated the 64-client sweep (r8: qps plateaued
     ~15 with two jobs/poll). Fused, one job serves the whole tick.
 
-    Plan shape: pushed user/cursor filter -> single-partition window sum
-    (the matched-windows set is poll-horizon bounded, so the window is over
-    dozens of rows, never the table) -> page filter -> TakeOrderedAndProject.
+    Plan shape: pushed user/cursor filter -> window sum partitioned by
+    ``user_id`` (the matched-windows set is poll-horizon bounded, so the
+    window is over dozens of rows, never the table) -> page filter ->
+    TakeOrderedAndProject. Over a persisted ``serving_table`` the cached
+    scan is already range-partitioned on ``user_id`` and sorted on it, so
+    the window needs no exchange and no sort: the poll runs as one stage
+    with one task per cached partition.
     """
     from pyspark.sql.window import Window
 
@@ -175,18 +179,26 @@ def events_aggregates(events: DataFrame) -> DataFrame:
 
 
 def serving_table(events: DataFrame, partitions: int | None = None) -> DataFrame:
-    """The serving-layer MATERIALIZATION of the aggregate table: range-
-    clustered by (user_id, window_start) and sorted within partitions, so a
-    cached copy carries per-batch min/max stats aligned with the poll
-    predicates — Spark's in-memory batch pruning then skips every batch
-    whose user range can't match, making each poll O(that user's batches)
-    instead of O(all cached batches). This is the DynamoDB-table analogue:
-    hash key user_id, range key window_start, physically clustered. On a
-    lake this same layout is the partition/Z-order spec; in cache it's free
-    batch stats. ``partitions`` defaults to the session's parallelism."""
+    """The serving-layer MATERIALIZATION of the aggregate table, laid out
+    like the reference's DynamoDB table: range-partitioned on the hash key
+    ``user_id`` alone and sorted on (user_id, window_start) within each
+    partition, so every user's windows sit in exactly one partition, in
+    range-key order. A cached copy then carries per-batch min/max stats
+    aligned with the poll predicates — Spark's in-memory batch pruning skips
+    every batch whose user range can't match, making each poll O(that
+    user's batches) instead of O(all cached batches). On a lake this same
+    layout is the partition/Z-order spec; in cache it's free batch stats.
+
+    Partitioning on ``user_id`` alone also satisfies the
+    ``ClusteredDistribution(user_id)`` and ``[user_id]`` ordering that
+    ``poll_page_with_total``'s running-total window requires, so a poll over
+    the cached table plans no exchange and no sort: one stage. Skew: a user
+    holding more than 1/n of the rows makes one large partition (a range
+    boundary cannot split a key), and polls still read only that user's
+    batches. ``partitions`` defaults to the session's parallelism."""
     agg = movement_aggregates(events)
     n = partitions or events.sparkSession.sparkContext.defaultParallelism
-    return agg.repartitionByRange(n, "user_id", "window_start").sortWithinPartitions(
+    return agg.repartitionByRange(n, "user_id").sortWithinPartitions(
         "user_id", "window_start"
     )
 

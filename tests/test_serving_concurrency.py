@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from kinesis_demo_spark.io import load_table
@@ -90,8 +91,8 @@ def test_poll_many_matches_per_request_fused_plan(spark):
 def test_serving_table_is_clustered_for_batch_pruning(spark):
     """The materialization contract the cache pruning rides on: rows within
     each partition are sorted by (user_id, window_start), and each user's
-    rows land in exactly one partition (range partitioning on the leading
-    key) — so per-batch min/max stats make a single-user poll skip every
+    rows land in exactly one partition (range partitioning on user_id
+    alone) — so per-batch min/max stats make a single-user poll skip every
     other batch."""
     agg = serving_table(load_table(spark, SF, "events"), partitions=4)
     parts = agg.select(
@@ -106,10 +107,46 @@ def test_serving_table_is_clustered_for_batch_pruning(spark):
     user_to_pids: dict[int, set] = {}
     for r in parts:
         user_to_pids.setdefault(r.user_id, set()).add(r.pid)
-    # range partitioning may split AT a boundary user; all but at most
-    # (n_partitions - 1) users must be partition-local
+    # range partitioning on user_id alone: a boundary never splits a user
     split_users = [u for u, p in user_to_pids.items() if len(p) > 1]
-    assert len(split_users) <= len(by_pid) - 1
+    assert not split_users, f"users in more than one partition: {split_users}"
+
+
+def _poll_plan_chain(spark, adaptive: bool) -> list[str]:
+    """Node names of an executed poll plan from its root down its single
+    child chain to the first leaf or branch, with AQE set to ``adaptive``
+    while the poll plans and runs."""
+    agg = _agg(spark)
+    user, after = agg.select("user_id", "window_start").first()
+    after -= datetime.timedelta(seconds=1)
+    upto = after + datetime.timedelta(hours=1)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", str(adaptive).lower())
+    try:
+        df = poll_page_with_total(agg, user, str(after), str(upto))
+        assert df.collect(), "poll matched nothing — vacuous"
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.finalPhysicalPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        agg.unpersist()
+    names, node = [plan.nodeName()], plan
+    while node.children().size() == 1:
+        node = node.children().apply(0)
+        names.append(node.nodeName())
+    return names
+
+
+@pytest.mark.parametrize("adaptive", [False, True], ids=["aqe_off", "aqe_on"])
+def test_poll_over_serving_table_plans_no_exchange(spark, adaptive):
+    """The cached scan's range partitioning on user_id satisfies the
+    running-total window, so a poll is one stage with no shuffle — under
+    the serving profile (AQE off) and under the default session (AQE on)."""
+    names = _poll_plan_chain(spark, adaptive)
+    assert names[-1] in ("InMemoryTableScan", "TableCacheQueryStage"), names
+    assert "Window" in names
+    assert not [n for n in names if "Exchange" in n or "ShuffleQueryStage" in n], names
 
 
 def test_poll_many_collected_matches_poll_many(spark):

@@ -1,4 +1,5 @@
-"""Session defaults that adapt to the host (no Spark session needed)."""
+"""Session defaults: the ones that adapt to the host, and the engine confs
+the session builder sets."""
 
 from __future__ import annotations
 
@@ -34,3 +35,7 @@ def test_driver_heap_env_override_wins(monkeypatch):
     _host_with(monkeypatch, 15 * 2**30)
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert default_driver_memory() == "3g"
+
+
+def test_engine_session_turns_off_call_site_capture(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

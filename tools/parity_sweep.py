@@ -49,6 +49,8 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from kinesis_demo_spark.session import default_driver_memory  # noqa: E402
+
 
 def main() -> int:
     only = None
@@ -59,11 +61,13 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "PARITY_SF0.1.json")
     # hostile session: non-UTC, no engine SQL configs — what the driver gives
-    # us. Heap size is a deployment knob, not a semantics config: the default
-    # 1g driver heap OOMs ~2/3 through a 200-query sf0.1 sweep in one JVM.
+    # us. Cores and heap are deployment knobs, not semantics configs, so they
+    # fit the host: the default 1g driver heap OOMs ~2/3 through a 200-query
+    # sf0.1 sweep in one JVM, and a fixed 32g outgrows a small host's RAM.
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.driver.memory", "32g")
+        SparkSession.builder.master(f"local[{cores}]")
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.sql.session.timeZone", "America/New_York")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -130,11 +130,13 @@ def run_serving_loop(
     spark, sf_dir: str, requests: int = 200, clients: int = 4, budget_sec: float = 2.0,
     coalesce: bool = False,
 ) -> dict:
-    # serving_table (not the bare aggregate): range-clustered by
-    # (user_id, window_start) before persist so the in-memory batch stats
-    # prune non-matching batches per poll — the r8 64-client fix, with the
-    # fused one-job-per-poll plan below (two jobs/poll saturated the
-    # scheduler at ~15 qps; see SCALING.md serving sweep).
+    # serving_table (not the bare aggregate): range-partitioned on user_id
+    # and sorted on (user_id, window_start) before persist, so the in-memory
+    # batch stats prune non-matching batches per poll — the r8 64-client
+    # fix, with the fused one-job-per-poll plan below (two jobs/poll
+    # saturated the scheduler at ~15 qps; see SCALING.md serving sweep).
+    # The user_id partitioning also satisfies the poll's running-total
+    # window, so each poll job is one stage with no shuffle.
     # 8 range partitions, not defaultParallelism: every poll job launches one
     # task per cached partition regardless of batch pruning, so at high
     # client counts the LOCAL scheduler's task throughput is the ceiling —

@@ -3,50 +3,42 @@
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]``.
 
-Output contract (round 5 — the driver tail-captures stdout and parses the
-LAST line, so the final line must stay SHORT no matter how many queries the
-headline set grows to; round 4's single mega-line overflowed the capture
-window and cost the round its externally-recorded bench number):
+The headline is every registered query except those named in
+``BENCH_EXCLUDED``, in registry order. Rows timed early in a run are slower
+than the same rows timed late (JVM warm-up lasts minutes), so only compare
+runs that timed the headline in the same order.
 
-  stdout line 1:  full detail JSON — per-query warm + cold maps + serving
-                  latency percentiles (same document as the sidecar)
+Output contract (a harness tail-captures stdout and parses the LAST line,
+so the final line must stay short however many queries the headline holds):
+
+  stdout line 1:  full detail JSON — per-query warm, cold and median maps,
+                  the host-control kernel timing and serving latency
+                  percentiles (the same document as the sidecar)
   stdout line 2:  ONE SHORT summary line, always last:
     {"metric": "headline_total", "value": <warm-sum-sec>, "unit": "sec",
      "cold_total": <cold-sum-sec>, "n_queries": N, "n_errors": E, "cpus": C,
      "sf": 0.1, "detail": "BENCH_local_detail_c<C>.json"}
 
+The detail is also written to one sidecar, ``BENCH_local_detail_c{cpus}.json``
+next to this script. ``tools/bench_compare.py`` compares two detail
+documents (sidecars, seals or captured stdout) for per-query regressions.
+
 A query that raises is recorded in the detail's ``errors`` map
 (``"<Type>: <msg>"``) and left out of the totals; the run goes on, prints
 the summary line, and then exits 1.
 
-The full detail is written to ``BENCH_local_detail_c{cpus}.json`` (per-run
-sidecar, r14: the driver's 8-core scaling run used to clobber the 32-core
-run's per-query detail through the old single fixed path) AND to the legacy
-``BENCH_local_detail.json`` path next to this script;
-``tools/bench_compare.py`` consumes either the detail line/file or any
-pre-r5 artifact for per-query regression gating.
-
 Each query is forced end-to-end with a ``noop``-format write (full plan
 execution, nothing collected to the driver), timed with a monotonic clock.
-Each query runs two-to-three times and all timings are recorded: ``queries``
-holds the min (steady-state latency — the first execution pays one-time
-Catalyst analysis + Janino codegen compilation, hundreds of ms of JVM work
-unrelated to data volume; r5 raised 2 -> 3 runs because the sandbox host
-throttles CPU in multi-second BURSTS — the same pure-scan query measured
-5.9/10.5/1.35 s back-to-back — and min-of-2 had a ~25% chance of landing
-both runs inside a burst, which is what put three different queries at 3-4x
-their true warm time in three consecutive r5 bench runs) and
-``queries_cold`` holds the first run, directly comparable to the single-cold-run records of rounds
-before r3 (ADVICE r3: regression gates must compare like with like —
-tools/bench_compare.py picks the matching series). Tracked persists
-(dedup/multimodal signature tables) are released after each query, so no
-query's timing borrows another query's cache and cached blocks don't
-accumulate across the 39-query session; within a query, run 2 may reuse
-run 1's persisted tables — exactly what a warm serving deployment sees.
-The query set spans every plan shape the engine ships: scan+agg, broadcast
-star join, fact-fact shuffle join, ranking windows, as-of union-window join,
-the reference serving/heatmap/LOCF pipelines, and the LLM-pipeline extension
-operators (dedup / similarity / text) once registered.
+Each query runs two or three times (see ``time_query``): ``queries`` holds
+the min (steady-state latency — the first execution pays one-time Catalyst
+analysis and Janino codegen compilation, hundreds of ms of JVM work
+unrelated to data volume), ``queries_cold`` the first run, and
+``queries_median`` the median of the warm runs. The host throttles CPU in
+multi-second bursts — the same pure-scan query measured 5.9/10.5/1.35 s
+back-to-back — so a burst that distorts one run shows as median >> min.
+Tracked persists are released after each query, so no query's timing
+borrows another query's cache; within a query, run 2 may reuse run 1's
+persisted tables — exactly what a warm serving deployment sees.
 """
 
 from __future__ import annotations
@@ -63,237 +55,87 @@ from kinesis_demo_spark.io import load_table, release_persisted
 from kinesis_demo_spark.registry import all_queries
 from kinesis_demo_spark.session import get_spark
 
-# Ordered headline set; silently skips names not (yet) in the registry so the
-# bench stays runnable at every milestone.
-HEADLINE = (
-    "tpch_q1_pricing_summary",
-    "star_join_revenue_by_region",
-    "join_orders_lineitem_priority",
-    "window_topk_orders_per_customer",
-    "asof_join_orders_events",
-    "range_join_events_before_orders",
-    "agg_window_movs_stats",
-    "heatmap_rollup",
-    "locf_impute_value",
-    "serving_poll_sum",
-    "json_extract_props",
-    "sessionize_events",
-    "stats_moments_percentiles_by_type",
-    "window_functions_battery",
-    "scalar_extended_battery",
-    "json_wire_roundtrip",
-    "salted_sum_by_user",
-    "streaming_window_counts",
-    "sessionize_stateful_streaming",
-    # LLM-data-pipeline extensions
-    "dedup_exact_text",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_ngram_jaccard_prefix",
-    "dedup_ngram_jaccard_df_capped",
-    "dedup_simhash",
-    "dedup_simhash_wide",
-    "dedup_embedding_cosine_lsh",
-    "ann_cosine_topk",
-    "ann_cosine_topk_lsh",
-    "mine_hard_negatives",
-    "text_quality_score",
-    "text_lang_id",
-    "text_fingerprint",
-    "text_tfidf",
-    "text_chunk_documents",
-    "text_repetition_score",
-    "text_vocab_topk",
-    "doc_length_histogram",
-    "timeseries_hourly_gapfill",
-    "timeseries_user_similarity",
-    "multimodal_decode_features",
-    "multimodal_decode_real",
-    "pipeline_training_corpus",
-    "pipeline_training_manifest",
-    "dedup_contamination_check",
-    "sample_stratified_documents",
-    "sequence_packing",
-    "embedding_quantize_int8",
-    # r5 corpus retrieval/curation + streaming additions
-    "text_bm25_topk",
-    "dedup_boilerplate_paragraphs",
-    "corpus_mixture_report",
-    "sample_mixture_weighted",
-    "bpe_merge_candidates",
-    "snapshot_diff_user_state",
-    "streaming_static_enrich",
-    # r5 second wave: relational widening + hybrid retrieval + event analytics
-    "tpch_q7_volume_shipping",
-    "tpch_q10_returned_items",
-    "tpch_q14_promo_revenue",
-    "tpch_q8_market_share",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_diversity",
-    "retrieval_rank_fusion",
-    "ann_pq_adc_topk",
-    "dedup_shingle_containment",
-    "streaming_dedup_events",
-    "funnel_user_stages",
-    "cohort_weekly_retention",
-    "event_transition_matrix",
-    "event_cooccurrence_lift",
-    "hopping_window_counts",
-    "streaming_hopping_counts",
-    "udtf_sentence_split",
-    "scd2_user_state_intervals",
-    "profile_events_columns",
-    "outliers_value_mad",
-    "bloom_prefilter_semi_join",
-    "rfm_customer_segments",
-    # r5 continuation: full TPC-H coverage + winnowing family
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_shipclass_priority",
-    "tpch_q13_customer_distribution",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q20_excess_suppliers",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_inactive_wealthy",
-    "text_winnowing_fingerprints",
-    "dedup_winnowing_overlap",
-    "text_freq_quality",
-    "ann_cosine_topk_truncated",
-    "bag_set_ops_priorities",
-    "not_in_null_semantics",
-    "bpe_train_merges",
-    "streaming_outer_interval_join",
-    "text_bigram_lm",
-    "dq_constraint_violations",
-    "pit_feature_join_orders",
-    "trend_slope_per_user",
-    "fuzzy_match_blocked_pairs",
-    "embedding_source_drift",
-    "rolling_active_users",
-    "hierarchical_revenue_shares",
-    "pagerank_copurchase",
-    "temporal_join_orders_state",
-    "twap_value_per_user",
-    "python_datasource_events",
-    "python_datasource_stream_events",
-    "pseudonymize_user_activity",
-    "variant_props_extract",
-    "lateral_top_lineitems_per_order",
-    "dedup_quality_report",
-    "interval_union_coverage",
-    "top_event_paths",
-    "cusum_value_alarms",
-    "revenue_month_over_month",
-    "packing_efficiency_report",
-    "trimmed_mean_value_by_type",
-    "table_checksums",
-    "null_safe_join_semantics",
-    "join_size_prediction",
-    "recursive_hierarchy_rollup",
-    "sql_modern_surfaces",
-    "sql_table_function_summary",
-    # r7 additions
-    "dedup_substring_runs",
-    "bpe_encode_corpus",
-    "filter_gopher_rules",
-    "lm_fluency_score",
-    "dsir_importance_resample",
-    "training_order_shuffle",
-    "token_shard_assembly",
-    "ann_hamming_binary",
-    "dedup_clusters_star",
-    "graph_triangle_clustering",
-    "incremental_join_view_merge",
-    "unigram_tokenizer_train",
-    "unigram_encode_corpus",
-    "dedup_rate_by_source",
-    "ab_test_stats",
-    "attribution_last_touch",
-    "sample_priority_weighted",
-    "concat_chunk_sequences",
-    "feature_hash_vectorize",
-    "feature_quantile_binning",
-    "ts_autocorr_components",
-    "dedup_semdedup_prune",
-    # r7 second wave: incremental/graph/lakehouse/ER/IR widening
-    "dedup_incremental_batch",
-    "graph_label_propagation",
-    "graph_kcore",
-    "compaction_plan",
-    "pareto_frontier_parts",
-    "cdc_merge_apply",
-    "dedup_sorted_neighborhood",
-    "search_phrase_positions",
-    "mutual_nearest_lsh",
-    "assoc_rules_copurchase",
-    "span_corruption_plan",
-    "skipgram_pair_counts",
-    "vocab_coverage_curve",
-    "dedup_cross_source_matrix",
-    "benford_first_digit_dq",
-    "text_intradoc_repeats",
-    "chunk_reassembly_roundtrip",
-    "ann_recall_report",
-    "streaming_session_windows",
-    "prefix_cache_grouping",
-    "coreset_kcenter_selection",
-    # r7 wave 4/5: selection, classification, re-ranking, privacy, IR eval,
-    # survivorship, forecasting, PRF retrieval, subword encode
-    "exact_quantiles_selection",
-    "knn_label_vote",
-    "mmr_rerank_topk",
-    "contamination_ngram_fraction",
-    "er_golden_record",
-    "holt_linear_forecast",
-    "retrieval_eval_metrics",
-    "k_anonymity_report",
-    "prf_query_expansion",
-    "wordpiece_encode_words",
-    "langid_confusion_matrix",
-    "feature_standardize",
-    "corpus_datacard",
-    "negative_sampling_table",
-    "rbo_rank_agreement",
-    "epoch_shuffle_independence",
-    # r8
-    "serving_poll_page_fused",
-    # r9: decoded-pixel perceptual hash + the PCA verification pair
-    "phash_image_neardup_decoded",
-    "pca_scatter_moments",
-    "pca_effective_rank",
-    "multimodal_frame_sample_real",
-    # r9 second wave: the real WAV/PCM audio codec pair
-    "multimodal_audio_decode_real",
-    "audio_window_energy_real",
-    # r9 third wave: multimodal near-dup triad closer, ER blocking audit,
-    # the delta-encoded rolling window, tokenizer fertility, and the two
-    # sketch-contract property gates
-    "audio_fingerprint_neardup",
-    "er_blocking_quality",
-    "rolling_active_users_intervals",
-    "tokenizer_fertility_report",
-    "approx_distinct_error_bound",
-    "approx_percentile_rank_bound",
-    # r10: the stdlib-zlib PNG real-codec path and the run-length-encoded
-    # gapfill twin (Theta(non-empty hours) vs the dense grid)
-    "multimodal_png_decode_real",
-    "timeseries_gapfill_runs",
-    # r11: query-anchored link prediction + the seasonal-naive backtest
-    "graph_linkpred_common_neighbors",
-    "timeseries_seasonal_naive_eval",
-    # r12: sampled-truth ER audit (the bounded-cost scale path next to the
-    # exact audit) + incremental IVF index maintenance (frozen-codebook
-    # delta merge with drift report)
-    "er_blocking_quality_sampled",
-    "ann_ivf_delta_merge",
-    "timeseries_classical_decomposition",
-    # r13: corpus drift report (TVD + vocab churn between snapshot halves)
-    # + the sparse observed-hours twin of the classical decomposition
-    "corpus_drift_report",
-    "timeseries_decomposition_sparse",
+# The registered queries the headline leaves out. Every other registered
+# query is timed, in registry order (``headline()``).
+BENCH_EXCLUDED = frozenset(
+    (
+        "agg_collect_set_event_types",
+        "agg_window_count",
+        "ann_cosine_topk_ivf",
+        "ann_with_document_metadata",
+        "anti_join_customers_without_orders",
+        "approx_distinct_parts",
+        "approx_percentiles_value",
+        "cube_flag_status",
+        "curriculum_quality_buckets",
+        "dedup_canonical_selection",
+        "dedup_clusters",
+        "dedup_embedding_cosine",
+        "distinct_part_supp_pairs",
+        "embedding_centroid_by_label",
+        "ewma_value_per_user",
+        "full_outer_join_supplier_customer_nations",
+        "global_event_count",
+        "grouped_count_by_position",
+        "grouped_pandas_user_stats",
+        "grouping_sets_priority_status",
+        "heatmap_max_intensity",
+        "heatmap_rollup_client_order",
+        "heavy_hitters_cms",
+        "incremental_agg_union_merge",
+        "kmeans_embeddings",
+        "last10_per_user",
+        "lineitem_2d_histogram",
+        "map_in_arrow_vector_norms",
+        "multimodal_frame_sample",
+        "multimodal_metadata",
+        "orders_above_customer_avg",
+        "orders_share_by_priority",
+        "pandas_udf_text_normalize",
+        "pca_embedding_components",
+        "phash_image_neardup",
+        "pivot_value_by_type_per_user",
+        "posexplode_document_tokens",
+        "rollup_flag_status",
+        "sample_k_per_group",
+        "scalar_array_functions",
+        "scalar_functions_parity",
+        "seasonal_hour_anomalies",
+        "semi_join_customers_with_orders",
+        "serving_cursor_bootstrap",
+        "serving_forward_poll",
+        "serving_projection_movs",
+        "serving_reverse_limit",
+        "sessionize_builtin_window",
+        "set_ops_nations",
+        "skew_concentration_report",
+        "split_train_val_test",
+        "sql_frontend_revenue_by_nation",
+        "stats_argminmax_value",
+        "stats_corr_value_props",
+        "stats_mode_event_type_per_user",
+        "streaming_interval_join",
+        "sum_value_by_user",
+        "text_pii_redact",
+        "text_source_novelty",
+        "text_token_count",
+        "timeseries_user_similarity_bucketed",
+        "tpch_q18_large_orders",
+        "tpch_q3_shipping_priority",
+        "tpch_q4_order_priority",
+        "tpch_q5_region_supplier_volume",
+        "tpch_q6_forecast_revenue",
+        "unpivot_order_amounts",
+        "uuid_generate",
+        "window_lag_lead_user_values",
+        "zorder_heatmap_locality",
+    )
 )
+
+
+def headline() -> list[str]:
+    """The timed query names: the registry minus ``BENCH_EXCLUDED``."""
+    return [n for n in all_queries() if n not in BENCH_EXCLUDED]
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -385,11 +227,8 @@ def main() -> None:
     cold: dict[str, float] = {}
     medians: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name in HEADLINE:
-        fn = registry.get(name)
-        if fn is None:
-            continue
-        res = time_query(spark, fn, sf_dir)
+    for name in headline():
+        res = time_query(spark, registry[name], sf_dir)
         if "error" in res:
             errors[name] = res["error"]
             continue
@@ -446,17 +285,10 @@ def main() -> None:
         "cpus": cpus,
         "sf": sf,
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    # Per-run sidecar keyed on the core count (VERDICT r13 #2): the driver
-    # runs the bench at BOTH 32 and 8 cores, and a single fixed path meant
-    # the scaling run clobbered the main run's per-query detail two rounds
-    # running (PERF n_common=0, empty scaling block). The summary line now
-    # points at the per-cpus file; the legacy fixed path is still written so
-    # pre-r14 tooling and the seal-file protocol keep working unchanged.
+    # One sidecar per core count, so runs at two core counts keep both details.
     per_run = f"BENCH_local_detail_c{cpus}.json"
-    for name in (per_run, "BENCH_local_detail.json"):
-        with open(os.path.join(here, name), "w") as f:
-            json.dump(detail, f, indent=1)
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), per_run), "w") as f:
+        json.dump(detail, f, indent=1)
     print(json.dumps(detail))
     # The short, driver-parseable summary — ALWAYS the last line of stdout.
     print(

@@ -137,47 +137,6 @@ def poll_page_with_total(
     )
 
 
-def poll_many(agg: DataFrame, probes: DataFrame, limit: int = 10) -> DataFrame:
-    """Request-coalesced serving: answer a BATCH of poll requests in ONE job.
-
-    ``probes`` carries one row per in-flight request:
-    ``poll_id long, user_id long, after timestamp, upto timestamp``. The
-    result is the union of every request's ``poll_page_with_total`` rows,
-    tagged by ``poll_id`` — semantically identical per request (pinned by
-    ``tests/test_serving.py``'s fused-vs-batched differential).
-
-    Why it exists: one Spark job per poll puts the driver's plan-compile +
-    job-schedule cost on EVERY request, which capped the 64-client sf1
-    sweep near 30 qps no matter how the per-request plan was tuned (r8
-    measurement, SCALING.md). Coalescing k concurrent requests into one
-    probe-join job amortizes that fixed cost k ways — the same move a real
-    serving layer makes (DynamoDB BatchGetItem, the reference's transport
-    batching at functions.js:223 putRecords). The probe side is a k-row
-    broadcast; the scan side stays the clustered cached table, so the job
-    reads only the probed users' batches.
-    """
-    from pyspark.sql.window import Window
-
-    matched = (
-        agg.join(F.broadcast(probes), "user_id")
-        .filter(F.col("window_start") > F.col("after"))
-    )
-    w_tot = Window.partitionBy("poll_id")
-    w_rank = Window.partitionBy("poll_id").orderBy(F.col("window_start").desc())
-    return (
-        matched.withColumn("total_events", F.sum("cnt").over(w_tot).cast("long"))
-        .filter(F.col("window_start") <= F.col("upto"))
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= limit)
-        .select("poll_id", "user_id", "window_start", "cnt", "total_events")
-    )
-
-
-def events_aggregates(events: DataFrame) -> DataFrame:
-    """Convenience: the serving table built straight from the events fixture."""
-    return movement_aggregates(events)
-
-
 def serving_table(events: DataFrame, partitions: int | None = None) -> DataFrame:
     """The serving-layer MATERIALIZATION of the aggregate table, laid out
     like the reference's DynamoDB table: range-partitioned on the hash key

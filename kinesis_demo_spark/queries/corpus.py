@@ -12,6 +12,8 @@ BIGINT sums for every corpus total, and fixed-order float folds.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -783,17 +785,17 @@ SELECT * FROM (
 """
 
 
-# Trained merge tables memoized per corpus file identity (path + mtime +
-# size): the trainer and the encoder both need the table, and a pipeline
-# session runs both — training twice would double the only driver-sequenced
-# cost in the module. The file-identity key invalidates on any rewrite of
-# documents.parquet, so a changed corpus always retrains.
-_BPE_MEMO: dict[tuple, list[tuple[int, str, str, str, int]]] = {}
+# Results of driver-sequenced corpus work (the trained BPE merge table, the
+# trained unigram pieces, the PRF literals), memoized per process under the
+# result's kind and parameters plus ``_corpus_identity``: a trainer and its
+# encoder both need the table, and training twice would double the only
+# driver-sequenced cost of either family. The identity changes on any
+# rewrite of documents.parquet, so a changed corpus always recomputes.
+_CORPUS_MEMO: dict[tuple, object] = {}
+T = TypeVar("T")
 
 
 def _corpus_identity(sf_dir: str) -> tuple:
-    import os
-
     p = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
     try:
         if os.path.isdir(p):  # Spark-written table: identity = its data files
@@ -809,12 +811,27 @@ def _corpus_identity(sf_dir: str) -> tuple:
         return (p, None)  # unreadable: never memoized
 
 
+def _corpus_memo(sf_dir: str, key: tuple, build: Callable[[], T]) -> T:
+    """``build()``, memoized per corpus identity and ``key`` (the kind of
+    result and any parameters it depends on)."""
+    ident = _corpus_identity(sf_dir)
+    full_key = (key, ident)
+    if full_key in _CORPUS_MEMO:
+        return _CORPUS_MEMO[full_key]
+    value = build()
+    if ident[1] is not None:
+        _CORPUS_MEMO[full_key] = value
+    return value
+
+
 def _train_bpe(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, str, int]]:
-    """The driver-sequenced training loop shared by ``bpe_train_merges``
-    (returns the merge table) and ``bpe_encode_corpus`` (applies it)."""
-    key = _corpus_identity(sf_dir)
-    if key[1] is not None and key in _BPE_MEMO:
-        return _BPE_MEMO[key]
+    """The merge table shared by ``bpe_train_merges`` (returns it) and
+    ``bpe_encode_corpus`` (applies it), trained once per corpus."""
+    return _corpus_memo(sf_dir, ("bpe",), lambda: _bpe_merges(spark, sf_dir))
+
+
+def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, str, int]]:
+    """The driver-sequenced training loop: one pair-count job per round."""
     docs = (
         _docs(spark, sf_dir)
         .select("doc_id", _tokens().alias("toks"))
@@ -863,8 +880,6 @@ def _train_bpe(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, st
             cached.unpersist()
         except Exception:
             pass  # session already stopped — nothing to release
-    if key[1] is not None:
-        _BPE_MEMO[key] = merges
     return merges
 
 
@@ -1111,48 +1126,16 @@ def _bm25_contrib_index(spark: SparkSession, sf_dir: str):
     return tf, contrib
 
 
-# (feedback_ids, expansion_terms) memo keyed by the corpus identity — the
-# resolved sf_dir plus the documents fixture's mtime, so a regenerated
-# fixture at the same path (the hostile-fixture tools rewrite /tmp/sfadv in
-# place) invalidates naturally. ADVICE r10: building prf_query_expansion and
-# rbo_rank_agreement in one session re-ran the full BM25 index job once per
-# plan CONSTRUCTION (these two queries are eager-at-build by design — the
-# bounded constant-size pulls bake literals into the re-score plan); the memo
-# makes the second and later builds free.
-_PRF_LITERAL_CACHE: dict = {}
-
-# Bump when the PRF/index recipe changes in a way the parameter constants
-# below don't capture (ADVICE r11 #2: the memo key must encode the identity
-# of the index BUILD, not just the corpus path, or a differently-built index
-# for the same corpus would silently serve stale literals).
+# The PRF literals (feedback_ids, expansion_terms) are memoized per corpus
+# (``_corpus_memo``): building prf_query_expansion and rbo_rank_agreement in
+# one session re-ran the full BM25 index job once per plan CONSTRUCTION
+# (these two queries are eager-at-build by design — the bounded
+# constant-size pulls bake literals into the re-score plan); the memo makes
+# the second and later builds free. The key carries the index parameters
+# and this epoch: bump it when the PRF/index recipe changes in a way the
+# parameter constants don't capture, so a differently-built index for the
+# same corpus never serves stale literals.
 _PRF_CACHE_EPOCH = 1
-
-
-def _prf_corpus_key(sf_dir: str) -> tuple:
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = os.stat(path).st_mtime_ns
-        if os.path.isdir(path):
-            # an in-place rewrite of part files that adds/removes nothing
-            # leaves the directory mtime unchanged — fold in the newest
-            # entry so such a rewrite still invalidates (ADVICE r11 #2)
-            for entry in os.scandir(path):
-                try:
-                    mtime = max(mtime, entry.stat().st_mtime_ns)
-                except OSError:
-                    pass
-    except OSError:
-        mtime = -1
-    return (
-        os.path.realpath(sf_dir),
-        mtime,
-        BM25_K1,
-        BM25_B,
-        BM25_QUERY_TERMS,
-        PRF_FEEDBACK_DOCS,
-        PRF_EXPANSION_TERMS,
-        _PRF_CACHE_EPOCH,
-    )
 
 
 def _prf_from_index(
@@ -1165,7 +1148,7 @@ def _prf_from_index(
     plan is EAGER — it executes the two bounded driver-side pulls below
     (<= PRF_FEEDBACK_DOCS + PRF_EXPANSION_TERMS rows, never
     data-proportional) before returning the DataFrame. The per-corpus memo
-    keeps that to one index job per (sf_dir, fixture-mtime) per session."""
+    keeps that to one index job per corpus identity per process."""
     nq = list(BM25_QUERY_TERMS)
 
     def _score(term_df: DataFrame) -> DataFrame:
@@ -1190,10 +1173,7 @@ def _prf_from_index(
     # re-score plan removes the feedback->expansion->re-score lineage
     # NESTING that made the audit depth quadratic in the pass count. The
     # cached contrib/tf do the heavy work exactly once either way.
-    memo_key = _prf_corpus_key(sf_dir)
-    if memo_key in _PRF_LITERAL_CACHE:
-        feedback_ids, expansion_terms = _PRF_LITERAL_CACHE[memo_key]
-    else:
+    def literals() -> tuple[list, list]:
         feedback_ids = [
             r["doc_id"]
             for r in _score(q0)
@@ -1214,7 +1194,18 @@ def _prf_from_index(
             .select("term")
             .collect()
         ]
-        _PRF_LITERAL_CACHE[memo_key] = (feedback_ids, expansion_terms)
+        return feedback_ids, expansion_terms
+
+    prf_key = (
+        "prf",
+        BM25_K1,
+        BM25_B,
+        BM25_QUERY_TERMS,
+        PRF_FEEDBACK_DOCS,
+        PRF_EXPANSION_TERMS,
+        _PRF_CACHE_EPOCH,
+    )
+    feedback_ids, expansion_terms = _corpus_memo(sf_dir, prf_key, literals)
     q1 = spark.createDataFrame(
         [(t,) for t in nq] + [(t,) for t in expansion_terms], "term string"
     )

@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 
 from ..io import iterate, load_table, spread, track_persist
 from ..registry import register
+from .corpus import _corpus_memo
 
 UNI_MAX_PIECE = 6     # max piece length seeded from word substrings
 UNI_SEED_TOP = 256    # multi-char seed pieces (by count-weighted frequency)
@@ -133,16 +134,15 @@ def _seed_pieces(hist: DataFrame) -> tuple[dict[str, int], dict[str, int]]:
     return singles, dict(multi_all[:UNI_SEED_TOP])
 
 
-_UNI_MEMO: dict[tuple, list[tuple[str, int]]] = {}
-
-
 def _train_unigram(spark: SparkSession, sf_dir: str) -> list[tuple[str, int]]:
-    """EM-train the unigram vocabulary; returns [(piece, usage)] sorted by
-    (usage desc, piece asc). Memoized per (app, sf_dir) like the BPE
-    trainer — training runs once, encode reuses it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key[1] is not None and key in _UNI_MEMO:
-        return _UNI_MEMO[key]
+    """The trained unigram vocabulary, [(piece, usage)] sorted by (usage
+    desc, piece asc). Memoized per corpus like the BPE trainer — training
+    runs once, encode reuses it."""
+    return _corpus_memo(sf_dir, ("unigram",), lambda: _unigram_em(spark, sf_dir))
+
+
+def _unigram_em(spark: SparkSession, sf_dir: str) -> list[tuple[str, int]]:
+    """EM-train the unigram vocabulary: seed, then UNI_ROUNDS E/M/prune rounds."""
     hist = _word_histogram(spark, sf_dir).persist()
     try:
         singles, multi = _seed_pieces(hist)
@@ -181,10 +181,7 @@ def _train_unigram(spark: SparkSession, sf_dir: str) -> list[tuple[str, int]]:
             usage.update(dict(kept_multi))
     finally:
         hist.unpersist()
-    out = sorted(usage.items(), key=lambda kv: (-kv[1], kv[0]))
-    if key[1] is not None:
-        _UNI_MEMO[key] = out
-    return out
+    return sorted(usage.items(), key=lambda kv: (-kv[1], kv[0]))
 
 
 @register("unigram_tokenizer_train")  # EM + Viterbi -> not SQL-expressible;

@@ -1,9 +1,9 @@
-"""Serving-path r8 plans: the fused one-job poll and the request-coalesced
-batch poll must answer EXACTLY what the original two-action composition
-(range_scan page + poll_sum total) answers — the 64-client throughput work
-(VERDICT r7 #6) is only admissible if the fast paths are value-identical.
-Also pins the serving_table clustering invariants the cache-pruning relies
-on."""
+"""Serving fast paths: the fused one-job poll must answer EXACTLY what the
+original two-action composition (range_scan page + poll_sum total) answers,
+and the request-coalesced batch poll EXACTLY what the fused poll answers per
+request — the 64-client throughput work (VERDICT r7 #6) is only admissible
+if the fast paths are value-identical. Also pins the serving_table
+clustering invariants the cache-pruning relies on."""
 
 from __future__ import annotations
 
@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from kinesis_demo_spark.io import load_table
 from kinesis_demo_spark.plans.serving import (
-    poll_many,
+    poll_many_collected,
     poll_page_with_total,
     poll_sum,
     range_scan,
@@ -62,29 +62,6 @@ def test_fused_poll_matches_two_action_composition(spark):
             # empty page => either no matched windows at all (total NULL) or
             # all matched windows are past upto; nothing to cross-check
             pass
-    agg.unpersist()
-
-
-def test_poll_many_matches_per_request_fused_plan(spark):
-    agg = _agg(spark)
-    probes = _probe_mix(agg, 12)
-    probes_df = spark.createDataFrame(
-        probes, "poll_id long, user_id long, after timestamp, upto timestamp"
-    )
-    batched = poll_many(agg, probes_df, limit=10).collect()
-    by_pid: dict[int, list] = {}
-    for r in batched:
-        by_pid.setdefault(r.poll_id, []).append(r)
-    for pid, user, after, upto in probes:
-        want = poll_page_with_total(
-            agg, user, str(after), str(upto), limit=10
-        ).collect()
-        got = sorted(
-            by_pid.get(pid, []), key=lambda r: r.window_start, reverse=True
-        )
-        assert [(r.user_id, r.window_start, r.cnt, r.total_events) for r in got] == [
-            (r.user_id, r.window_start, r.cnt, r.total_events) for r in want
-        ], f"poll {pid} diverged"
     agg.unpersist()
 
 
@@ -149,23 +126,22 @@ def test_poll_over_serving_table_plans_no_exchange(spark, adaptive):
     assert not [n for n in names if "Exchange" in n or "ShuffleQueryStage" in n], names
 
 
-def test_poll_many_collected_matches_poll_many(spark):
+def test_poll_many_collected_matches_per_request_fused_plan(spark):
     """The r9 single-stage serving path (pushed IN-filter scan +
-    coordinator assembly) must return per-request rows IDENTICAL to the
-    probe-join poll_many plan — same pages, same order, same running
+    coordinator assembly) must return per-request rows IDENTICAL to one
+    poll_page_with_total per request — same pages, same order, same running
     totals — on a probe mix that actually matches data."""
-    from kinesis_demo_spark.plans.serving import poll_many_collected
-
     agg = _agg(spark)
     probes = _probe_mix(agg, 12)
-    probes_df = spark.createDataFrame(
-        probes, "poll_id long, user_id long, after timestamp, upto timestamp"
-    )
-    want: dict[int, list] = {p[0]: [] for p in probes}
-    for r in poll_many(agg, probes_df, limit=10).collect():
-        want[r.poll_id].append((r.user_id, r.window_start, r.cnt, r.total_events))
-    for pid in want:
-        want[pid].sort(key=lambda t: t[1], reverse=True)
+    want = {
+        pid: [
+            (r.user_id, r.window_start, r.cnt, r.total_events)
+            for r in poll_page_with_total(
+                agg, user, str(after), str(upto), limit=10
+            ).collect()
+        ]
+        for pid, user, after, upto in probes
+    }
     got = poll_many_collected(agg, probes, limit=10)
     assert set(got) == set(want)
     n_nonempty = sum(1 for v in want.values() if v)

@@ -133,6 +133,42 @@ def test_encode_is_run_deterministic(spark):
     assert a == b
 
 
+
+def _write_docs(sf_dir, texts):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(texts)), pa.int64()),
+                "text": texts,
+                "lang": ["en"] * len(texts),
+                "source": ["src0"] * len(texts),
+                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            }
+        ),
+        f"{sf_dir}/documents.parquet",
+    )
+
+
+def test_rewritten_corpus_retrains_in_the_same_session(spark, tmp_path):
+    """The trained pieces are memoized per corpus identity, so rewriting
+    documents.parquet in place must retrain, not serve the old pieces."""
+    before = ["alpha beta gamma alphabet", "beta beta gamma"] * 6
+    after = ["xylophone quartz zephyr", "quartz zephyr zephyrs jinx"] * 7
+    for texts in (before, after):
+        _write_docs(tmp_path, texts)
+        got = [
+            (r.piece, r.usage)
+            for r in unigram_tokenizer_train(spark, str(tmp_path)).orderBy("rank").collect()
+        ]
+        assert got == _reference_train(texts)
+    encoded = unigram_encode_corpus(spark, str(tmp_path)).orderBy("doc_id").collect()
+    assert ["".join(r.pieces_str.split(" ")) for r in encoded] == [
+        t.replace(" ", "") for t in after
+    ]
+
 # --- WordPiece greedy longest-match encode ---------------------------------------
 
 

@@ -1,43 +1,32 @@
 #!/usr/bin/env python
-"""Per-query bench regression gate: compare a fresh ``bench.py`` JSON line (or
-a driver ``BENCH_r{N}.json``) against the previous round's record and flag
-regressions above the threshold.
+"""Per-query bench regression gate: compare two ``bench.py`` detail
+documents and flag the queries that regressed beyond the threshold.
 
 Usage:
-    python bench.py | tail -1 > /tmp/bench_now.json
-    python tools/bench_compare.py BENCH_r02.json /tmp/bench_now.json
+    python bench.py > /tmp/bench_now.out
+    python tools/bench_compare.py BENCH_r14_local.json /tmp/bench_now.out
 
-Accepts either format for each argument: the raw one-line JSON bench.py
-prints, or the driver's wrapper file (``{"parsed": {...}}``). Queries renamed
-by the round-3 battery fusions are mapped so their history isn't lost (the
-fused query's budget is the SUM of its parts' round-2 times). Exit status 1
-iff any query regressed more than THRESHOLD, so the check can gate CI.
+Each argument is a bench.py detail document: a ``BENCH_local_detail_c{N}.json``
+sidecar, a seal such as ``BENCH_r14_local.json``, or captured bench stdout
+(whose first line is the detail). A file without a ``queries`` map or
+without ``host_control`` is refused, naming the file, and so is a pair of
+runs at two core counts. Exit status 1 iff any query regressed more than
+THRESHOLD, so the check can gate CI.
 
-Methodology matching (ADVICE r3): timings must compare like with like.
-  - r1/r2 artifacts: single COLD run per query ("queries" only)
-  - r3 artifact:     min-of-2 WARM ("queries" only)
-  - r4+ artifacts:   both series ("queries" = warm min-of-2, "queries_cold")
-Pass ``--series cold`` to compare against a pre-r3 artifact (picks
-"queries_cold" from any file that has it); the default warm series is
-methodology-matched from r3 on. The gate refuses a warm-vs-cold mix only via
-operator discipline — the file format doesn't record which series an old
-"queries"-only artifact used, so the table header names the series used.
+Host normalisation: two windows rarely run at the same clock, and a
+throttled host inflates every row of a byte-identical plan alike. Each
+detail carries ``host_control``, the min time of bench.py's plan-free CPU
+kernel; the ratio of the two kernels is the host factor. Every row reports
+both the raw ratio and the ratio divided by the host factor, and the exit
+gate reads the normalised column. The factor is cross-checked against the
+median ratio of the CONTROLS queries: a disagreement above 25% is printed,
+because a kernel shift without a matching query shift means the CPU/IO
+balance moved and flagged rows need a human eye.
 
-Control normalization (VERDICT r7 #8, automating BENCH_COMPARE_r7.md's
-manual methodology): two hosts rarely run at the same clock — the r6/r7
-compares measured a uniform ~1.2x inflation on byte-identical plans during
-throttled windows. The script estimates the host factor from CONTROL
-queries (plans that have been byte-stable since r5 and are cheap enough to
-be pure engine-overhead probes), falling back to the median ratio over all
-shared queries when fewer than 3 controls are present in both files. Every
-row reports BOTH the raw ratio and the control-normalized ratio; the exit
-gate moves to the NORMALIZED column, so a throttled-host run doesn't
-hard-fail CI and a genuinely regressed plan still does. The control factor
-itself is printed loudly — a factor far from 1.0 means re-run on a quiet
-host before believing ANY row. A real broad regression touching most
-queries would also move the fallback median; the designated controls guard
-that: if controls and median disagree by >25%, the script says so and uses
-the controls.
+Burst noise: a row whose normalised min ratio breaches the threshold but
+whose normalised ``queries_median`` ratio does not is recorded as burst
+noise, not a regression — a host burst inflates one window's runs, while a
+real plan regression moves the medians too.
 """
 
 from __future__ import annotations
@@ -50,13 +39,10 @@ import sys
 # head/tail truncation of the table must not traceback
 signal.signal(signal.SIGPIPE, signal.SIG_DFL)
 
-SERIES = "queries"
-
 THRESHOLD = 1.3
 
-# Plans byte-stable across rounds, cheap, pure scan/agg shapes — the probes
-# BENCH_COMPARE_r6/r7 re-timed manually to attribute shared-row inflation to
-# the host. Used to estimate the throttle factor.
+# Plans byte-stable across rounds, cheap, pure scan/agg shapes: the
+# cross-check on the host-control kernel's factor.
 CONTROLS = (
     "dedup_exact_text",
     "embedding_quantize_int8",
@@ -67,194 +53,109 @@ CONTROLS = (
     "window_functions_battery",
 )
 
-# Control-adjacent watch list (VERDICT r9 #2a): expensive rows whose plans
-# are long-stable — any flagged movement here is printed prominently with
-# its median disposition so the round record carries the adjudication.
+# Control-adjacent watch list: expensive rows whose plans are long-stable;
+# any movement here is marked so the record carries the adjudication.
 WATCH = (
     "timeseries_user_similarity",
     "mutual_nearest_lsh",
     "pipeline_training_manifest",
-    # r11: one-row window-over-window drift on a byte-identical plan while
-    # its audio siblings ran FASTER — see BENCH_COMPARE_r11.md adjudication
+    # one-row window-over-window drift on a byte-identical plan while its
+    # audio siblings ran faster
     "audio_fingerprint_neardup",
 )
 
-# fused-query name -> the round-2 query names whose times it absorbed
-RENAMES = {
-    "stats_moments_percentiles_by_type": ("stats_moments_by_type", "stats_percentiles_value"),
-    "window_functions_battery": ("window_range_frame_running_sum", "window_distribution_functions"),
-    "scalar_extended_battery": (
-        "scalar_string_functions",
-        "scalar_datetime_functions",
-        "scalar_math_bit_functions",
-    ),
-    "set_ops_nations": ("set_union_nations", "set_intersect_nations", "set_except_nations"),
-}
 
-
-def _load(path: str) -> tuple[dict[str, float], dict[str, float], dict | None]:
-    """Returns (primary series, medians-if-present, host_control-if-present).
-    The median map (r10+, bench.py queries_median) lets a >1.3x min-ratio
-    row be dispositioned in-artifact: a host burst inflates min and median
-    TOGETHER on the affected run while a real plan regression moves both
-    rounds' medians — so min-flag + median-clear == window noise, no
-    re-timing needed. host_control (r13+, VERDICT r12 #4) is bench.py's
-    plan-free CPU kernel timing — the dedicated host-speed normalizer."""
+def _load(path: str) -> tuple[dict[str, float], dict[str, float], dict, int | None]:
+    """``(queries, queries_median, host_control, cpus)`` of one detail document."""
     with open(path) as f:
-        try:
-            doc = json.load(f)
+        text = f.read()
+    try:
+        doc = json.loads(text)
+    except json.JSONDecodeError:
+        try:  # captured bench stdout: the detail line comes first
+            doc = json.loads(text.partition("\n")[0])
         except json.JSONDecodeError:
-            # JSON-lines seal file (BENCH_r{N}_local.json). Scan for the
-            # line that actually carries a per-query map instead of
-            # trusting line order (ADVICE r11 #3: a seal leading with the
-            # summary line would otherwise compare an empty map and exit
-            # green with nothing compared).
-            f.seek(0)
             doc = None
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                cand = json.loads(line)
-                if isinstance(cand, dict) and (
-                    "queries" in cand or "queries_cold" in cand
-                ):
-                    doc = cand
-                    break
-            if doc is None:
-                raise SystemExit(
-                    f"{path}: JSON-lines seal has no line with a "
-                    f"'queries'/'queries_cold' map — nothing to compare"
-                )
-    if "parsed" in doc and isinstance(doc["parsed"], dict):
-        doc = doc["parsed"]
-    hc = doc.get("host_control") if isinstance(doc, dict) else None
-    if SERIES == "queries_cold" and "queries_cold" in doc:
-        # ADVICE r10: queries_median is WARM-series data (r11+: warm runs
-        # only). Dispositioning a cold-series flag against it would let a
-        # genuine cold-path regression (first-run compile/IO) exit 0, so
-        # cold mode returns no medians and a cold flag stays a hard flag.
-        return doc["queries_cold"], {}, hc
-    med = doc.get("queries_median", {}) if isinstance(doc, dict) else {}
-    if "queries" not in doc:
-        # r5+ short driver summary: per-query maps live in the sidecar the
-        # summary points to (bench.py writes BENCH_local_detail.json).
-        raise SystemExit(
-            f"{path}: no per-query map — this is the short r5+ summary line; "
-            f"compare the detail sidecar instead ({doc.get('detail', 'BENCH_local_detail.json')})"
-        )
-    return doc["queries"], med, hc
+    if not isinstance(doc, dict) or not isinstance(doc.get("queries"), dict):
+        raise SystemExit(f"{path}: no 'queries' map — not a bench.py detail document")
+    hc = doc.get("host_control")
+    if not isinstance(hc, dict) or not hc.get("min") or not hc.get("rows"):
+        raise SystemExit(f"{path}: no 'host_control' kernel timing — cannot normalise")
+    return doc["queries"], doc.get("queries_median", {}), hc, doc.get("cpus")
 
 
 def _control_factor(
-    old: dict[str, float],
-    new: dict[str, float],
-    hc_old: dict | None = None,
-    hc_new: dict | None = None,
+    old: dict[str, float], new: dict[str, float], hc_old: dict, hc_new: dict
 ) -> tuple[float, str]:
-    """Estimate the host-speed ratio new/old. Preference order (VERDICT r12
-    #4): the dedicated plan-free CPU kernel when both rounds sealed one
-    (bench.py host_control — a measurement, not an inference), then the
-    control-query median, then the capped shared-row median. The kernel
-    factor is cross-checked against the control queries when both exist;
-    a >25% disagreement is printed loudly (a kernel shift without a
-    matching query shift means the bottleneck moved — IO vs CPU — and the
-    window needs a human eye, not silent normalization)."""
+    """The host-speed ratio new/old from the host-control kernel, and a note
+    that cross-checks it against the control queries."""
+    f = hc_new["min"] / hc_old["min"]
     ctrl = [new[c] / old[c] for c in CONTROLS if c in old and c in new and old[c] > 0]
     shared = [new[n] / old[n] for n in new if n in old and old[n] > 0]
     med = statistics.median(shared) if shared else 1.0
-    if (
-        hc_old
-        and hc_new
-        and hc_old.get("min")
-        and hc_old.get("rows") == hc_new.get("rows")
-    ):
-        f = hc_new["min"] / hc_old["min"]
-        note = (
-            f"host-control kernel {f:.2f}x "
-            f"({hc_old['min']:.2f}s -> {hc_new['min']:.2f}s on "
-            f"{hc_new['rows']:,} rows; control-query median "
-            f"{statistics.median(ctrl):.2f}x over n={len(ctrl)}, "
-            f"shared-row median {med:.2f}x)"
-            if ctrl
-            else f"host-control kernel {f:.2f}x (shared-row median {med:.2f}x)"
+    if not ctrl:
+        return f, f"host-control kernel {f:.2f}x (shared-row median {med:.2f}x)"
+    ctrl_med = statistics.median(ctrl)
+    note = (
+        f"host-control kernel {f:.2f}x "
+        f"({hc_old['min']:.2f}s -> {hc_new['min']:.2f}s on "
+        f"{hc_new['rows']:,} rows; control-query median "
+        f"{ctrl_med:.2f}x over n={len(ctrl)}, "
+        f"shared-row median {med:.2f}x)"
+    )
+    if abs(ctrl_med / f - 1.0) > 0.25:
+        note += (
+            " — KERNEL AND CONTROL QUERIES DISAGREE >25%: the CPU/IO"
+            " balance moved between windows; normalizing by the kernel,"
+            " but adjudicate flagged rows by hand"
         )
-        if ctrl and abs((statistics.median(ctrl)) / f - 1.0) > 0.25:
-            note += (
-                " — KERNEL AND CONTROL QUERIES DISAGREE >25%: the CPU/IO"
-                " balance moved between windows; normalizing by the kernel,"
-                " but adjudicate flagged rows by hand"
-            )
-        return f, note
-    if len(ctrl) >= 3:
-        f = statistics.median(ctrl)
-        note = f"controls n={len(ctrl)} median {f:.2f}x (shared-row median {med:.2f}x)"
-        if med > 0 and abs(f / med - 1.0) > 0.25:
-            note += " — CONTROLS AND MEDIAN DISAGREE >25%: using controls; re-run on a quiet host"
-        return f, note
-    # Without >=3 controls the shared-row median is the only normalizer
-    # available, but it is blind to a UNIFORM regression (everything 2x
-    # slower normalizes to ~1.0x). Cap the fallback factor at THRESHOLD so a
-    # genuine across-the-board slowdown still trips the exit gate on raw
-    # ratios; a real host-speed shift beyond that needs controls to prove it.
-    capped = min(med, THRESHOLD)
-    note = f"fallback shared-row median {med:.2f}x ({len(ctrl)} controls present)"
-    if capped < med:
-        note += f" — CAPPED at {THRESHOLD}x: no controls to rule out a uniform regression"
-    return capped, note
+    return f, note
 
 
 def main() -> int:
-    global SERIES
-    argv = [a for a in sys.argv[1:] if a != "--series"]
-    if "cold" in argv and "--series" in sys.argv:
-        SERIES = "queries_cold"
-        argv.remove("cold")
-    old_path, new_path = argv[0], argv[1]
-    (old, old_med, hc_old), (new, new_med, hc_new) = _load(old_path), _load(new_path)
+    if len(sys.argv) != 3:
+        raise SystemExit("usage: bench_compare.py OLD_DETAIL NEW_DETAIL")
+    old_path, new_path = sys.argv[1:]
+    old, old_med, hc_old, cpus_old = _load(old_path)
+    new, new_med, hc_new, cpus_new = _load(new_path)
+    if hc_old["rows"] != hc_new["rows"]:
+        raise SystemExit(
+            f"{old_path} and {new_path}: host-control kernels ran different row counts"
+        )
+    # The kernel's fixed 16 partitions scale with the core count far more
+    # than the queries do, so its ratio is a host factor only at one count.
+    if cpus_old and cpus_new and cpus_old != cpus_new:
+        raise SystemExit(
+            f"{old_path} ran at {cpus_old} cpus and {new_path} at {cpus_new}: "
+            f"compare runs at one core count"
+        )
 
     factor, factor_note = _control_factor(old, new, hc_old, hc_new)
 
     rows, regressions, burst_noise = [], [], []
     for name, t_new in new.items():
-        # direct match first: from r4 on BOTH artifacts carry the fused
-        # battery names, and mapping to the (absent) pre-fusion parts made
-        # those rows print as "new" against any r4+ baseline (r13 fix)
-        parts = (name,) if name in old else RENAMES.get(name, (name,))
-        known = [old[p] for p in parts if p in old]
-        t_old = sum(known) if known else None
+        t_old = old.get(name)
         if t_old is None:
             rows.append((name, None, t_new, None, None, "new"))
             continue
         ratio = t_new / t_old if t_old else float("inf")
-        norm = ratio / factor if factor > 0 else ratio
+        norm = ratio / factor
         flag = "REGRESSED" if norm > THRESHOLD else ("improved" if norm < 1 / THRESHOLD else "ok")
         if norm > THRESHOLD:
-            # median disposition (VERDICT r9 #2b): when both rounds carry a
-            # median for this row, require the median-based normalized
-            # ratio to ALSO breach the threshold — a burst that caught one
-            # window's runs shows min-flag + median-clear and is recorded
-            # as noise instead of failing the gate
-            m_old = sum(old_med.get(p, 0.0) for p in parts) or None
-            m_new = new_med.get(name)
-            if m_old and m_new:
-                m_norm = (m_new / m_old) / factor if factor > 0 else m_new / m_old
-                if m_norm <= THRESHOLD:
-                    flag = f"burst-noise (median {m_norm:.2f}x)"
-                    burst_noise.append(name)
-                else:
-                    regressions.append(name)
+            m_old, m_new = old_med.get(name), new_med.get(name)
+            m_norm = (m_new / m_old) / factor if m_old and m_new else None
+            if m_norm is not None and m_norm <= THRESHOLD:
+                flag = f"burst-noise (median {m_norm:.2f}x)"
+                burst_noise.append(name)
             else:
                 regressions.append(name)
         if name in WATCH and flag != "ok":
             flag += " [watch]"
         rows.append((name, t_old, t_new, ratio, norm, flag))
     for name, t_old in old.items():
-        if name not in new and not any(name in v for v in RENAMES.values()):
+        if name not in new:
             rows.append((name, t_old, None, None, None, "dropped"))
 
-    series = "cold first-run" if SERIES == "queries_cold" else "warm min-of-2"
-    print(f"series: {series}")
     print(f"host control factor: {factor:.2f}x — {factor_note}\n")
     print(f"| query | {old_path} (s) | {new_path} (s) | raw | normalized | status |")
     print("|---|---|---|---|---|---|")

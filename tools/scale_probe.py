@@ -133,15 +133,13 @@ SF_BIG = "/root/testdata/sf0.1"
 
 
 def _reset_memos() -> None:
-    """Clear session-level result memos (e.g. the trained-BPE table) so the
-    probe times the algorithm, not the cache — a memo hit would report the
-    lookup's alpha, which is not what this artifact claims to measure."""
-    try:
-        from kinesis_demo_spark.queries import corpus
+    """Clear the process-level corpus memo (trained BPE and unigram tables,
+    PRF literals) so the probe times the algorithm, not the cache — a memo
+    hit would report the lookup's alpha, which is not what this artifact
+    claims to measure."""
+    from kinesis_demo_spark.queries import corpus
 
-        corpus._BPE_MEMO.clear()
-    except Exception:
-        pass
+    corpus._CORPUS_MEMO.clear()
 
 
 def _time(fn, spark, sf_dir: str) -> float:

@@ -219,7 +219,7 @@ def main() -> int:
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
     ap.add_argument("--coalesce", action="store_true",
-                    help="batch concurrent polls into one poll_many job")
+                    help="batch concurrent polls into one poll_many_collected job")
     args = ap.parse_args()
     # FAIR scheduling: N poll clients = N concurrent tiny jobs; FIFO lets a
     # queue build head-of-line tails at high client counts. Startup-only

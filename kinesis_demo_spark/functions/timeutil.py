@@ -8,8 +8,8 @@ instant domain through the session timezone: under a DST zone a gap-hour
 local time (2024-03-10 02:30 America/New_York) shifts to 03:xx before
 truncation and an ambiguous fall-back hour resolves to one offset, while
 the oracle's naive ``date_trunc`` keeps the wall-clock hour — the engines
-split on exactly the hostile-time rows (ADVICE r11 #4). These helpers
-truncate WITHOUT leaving the NTZ domain, so hour bucketing and lag
+split on exactly the hostile-time rows (ADVICE r11 #4). ``trunc_hour_ntz``
+truncates WITHOUT leaving the NTZ domain, so hour bucketing and lag
 arithmetic stay pure wall-clock and bit-exact against a naive-timestamp
 oracle in every session timezone, DST or not.
 
@@ -32,22 +32,6 @@ def trunc_hour_ntz(col: Column | str) -> Column:
     c = _c(col)
     return F.make_timestamp_ntz(
         F.year(c), F.month(c), F.day(c), F.hour(c), F.lit(0), F.lit(0)
-    )
-
-
-def trunc_day_ntz(col: Column | str) -> Column:
-    """date_trunc('day', ts) that stays TIMESTAMP_NTZ (wall-clock)."""
-    c = _c(col)
-    return F.make_timestamp_ntz(
-        F.year(c), F.month(c), F.day(c), F.lit(0), F.lit(0), F.lit(0)
-    )
-
-
-def trunc_minute_ntz(col: Column | str) -> Column:
-    """date_trunc('minute', ts) that stays TIMESTAMP_NTZ (wall-clock)."""
-    c = _c(col)
-    return F.make_timestamp_ntz(
-        F.year(c), F.month(c), F.day(c), F.hour(c), F.minute(c), F.lit(0)
     )
 
 

@@ -11,15 +11,22 @@ REST API ``GET /v1/users/{user_id}/movements/{timestamp}?reverse&count&limit``
 - Q6 incremental cursor resume
 - A3 scalar sum over the scan result (functions.js:171-175)
 
-All of these compile to a single Parquet scan with pushed filters + pruned
-columns + TakeOrderedAndProject — exactly the physical shape a 100 TB serving
-table wants (partition pruning on a date-partitioned lake comes free from the
-same predicates).
+The DataFrame builders here (``range_scan`` and friends) compile to a
+pushed user/cursor filter over the scan, pruned columns and, for a page,
+TakeOrderedAndProject: the physical shape a 100 TB serving table wants
+(partition pruning on a date-partitioned lake comes free from the same
+predicates). The hot serving path, ``poll_page_with_total``, runs the same
+shape as one parameterized SQL statement in a per-table serving session
+whose operators run interpreted, so a poll generates and compiles no code.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import threading
+import uuid
+import weakref
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .movements import movement_aggregates
 
@@ -95,6 +102,85 @@ def last_n_windows(agg: DataFrame, n: int = 10) -> DataFrame:
     )
 
 
+# One poll tick (Q1+Q2+Q3+Q5+A3) as one statement over the table's global
+# temp view, whose name a binding fills in once. Every request value is a
+# named parameter marker: Spark inlines literals into the Java source it
+# generates, so a DataFrame chain with the request's values baked in missed
+# the codegen cache and ran the Java compiler four or five times per poll.
+POLL_SQL = """
+SELECT user_id, window_start, cnt, total_events
+FROM (
+  SELECT user_id, window_start, cnt,
+         CAST(sum(cnt) OVER (PARTITION BY user_id) AS BIGINT) AS total_events
+  FROM {view}
+  WHERE user_id = :user_id AND window_start > CAST(:after AS TIMESTAMP)
+)
+WHERE window_start <= CAST(:upto AS TIMESTAMP)
+ORDER BY window_start DESC
+LIMIT :limit
+"""
+
+# Confs of the serving session beyond the caller's. Whole-stage codegen off
+# leaves the operators' expressions, whose code embeds each poll's
+# parameters; ``spark.sql.codegen.factoryMode`` (an internal Spark conf)
+# set to NO_CODEGEN builds those interpreted, the path Spark itself falls
+# back to when generated code fails to compile. A poll touches dozens of
+# rows, so compiling costs more than interpreting saves.
+_SERVING_CONFS = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
+_BIND_LOCK = threading.Lock()
+
+
+class _PollBinding:
+    """A serving table's poll context: a session of its own, with the
+    caller's SQL confs as they were at the first poll plus
+    ``_SERVING_CONFS``, the table's global temp view, which reads through
+    the shared cache when the table is persisted, and ``POLL_SQL`` over
+    that view. The view is dropped once the table's DataFrame is garbage,
+    from a thread of its own: a collection can run inside another py4j
+    call on the dying DataFrame's thread, whose connection is then busy."""
+
+    def __init__(self, agg: DataFrame):
+        caller = agg.sparkSession
+        self.session = caller.newSession()
+        want, have = caller.conf.getAll, self.session.conf.getAll
+        for key in have.keys() - want.keys():
+            self.session.conf.unset(key)
+        for key, value in {**want, **_SERVING_CONFS}.items():
+            if have.get(key) != value:
+                self.session.conf.set(key, value)
+        name = f"serving_poll_{uuid.uuid4().hex}"
+        agg.createGlobalTempView(name)
+        db = caller.conf.get("spark.sql.globalTempDatabase")
+        self.sql = POLL_SQL.format(view=f"{db}.{name}")
+        weakref.finalize(agg, _drop_view_async, self.session, name).atexit = False
+
+
+def _drop_view_async(session: SparkSession, name: str) -> None:
+    def drop() -> None:
+        try:
+            session.catalog.dropGlobalTempView(name)
+        except Exception:  # noqa: BLE001 — the JVM or its context is gone
+            pass
+
+    threading.Thread(target=drop, name=f"drop-{name}", daemon=True).start()
+
+
+def _binding(agg: DataFrame) -> _PollBinding:
+    """The table's binding, made at its first poll. Kept in the DataFrame's
+    ``__dict__``: attribute lookup on a DataFrame falls back to a column
+    lookup on the JVM."""
+    found = agg.__dict__.get("_poll_binding")
+    if found is None:
+        with _BIND_LOCK:
+            found = agg.__dict__.get("_poll_binding")
+            if found is None:
+                found = agg._poll_binding = _PollBinding(agg)
+    return found
+
+
 def poll_page_with_total(
     agg: DataFrame,
     user_id: int,
@@ -111,6 +197,14 @@ def poll_page_with_total(
     which is exactly what saturated the 64-client sweep (r8: qps plateaued
     ~15 with two jobs/poll). Fused, one job serves the whole tick.
 
+    The poll is ``POLL_SQL`` over the table's view with the request bound
+    to its parameter markers, planned in the table's serving session
+    (``_PollBinding``, made at the table's first poll): nothing is
+    generated or compiled per request, and the caller's session, with its
+    codegen, is untouched. The returned DataFrame belongs to the serving
+    session, which keeps the caller's SQL confs as they were at that first
+    poll.
+
     Plan shape: pushed user/cursor filter -> window sum partitioned by
     ``user_id`` (the matched-windows set is poll-horizon bounded, so the
     window is over dozens of rows, never the table) -> page filter ->
@@ -119,21 +213,10 @@ def poll_page_with_total(
     the window needs no exchange and no sort: the poll runs as one stage
     with one task per cached partition.
     """
-    from pyspark.sql.window import Window
-
-    matched = agg.filter(
-        (F.col("user_id") == F.lit(user_id))
-        & (F.col("window_start") > F.lit(after).cast("timestamp"))
-    )
-    w = Window.partitionBy("user_id")
-    return (
-        matched.withColumn(
-            "total_events", F.sum("cnt").over(w).cast("long")
-        )
-        .filter(F.col("window_start") <= F.lit(upto).cast("timestamp"))
-        .orderBy(F.col("window_start").desc())
-        .limit(limit)
-        .select("user_id", "window_start", "cnt", "total_events")
+    binding = _binding(agg)
+    return binding.session.sql(
+        binding.sql,
+        args={"user_id": user_id, "after": after, "upto": upto, "limit": limit},
     )
 
 
@@ -170,26 +253,30 @@ def poll_many_collected(
     """Request-coalesced serving, single-stage variant: answer a BATCH of
     poll requests with ONE job and assemble the per-request pages on the
     coordinator. ``reqs`` is ``[(poll_id, user_id, after, upto), ...]``;
-    returns ``{poll_id: [row dicts]}`` — per-request rows identical to
-    ``poll_many`` (pinned by tests/test_serving_concurrency.py's
-    differential).
+    returns ``{poll_id: [row dicts]}`` — per-request rows identical to one
+    ``poll_page_with_total`` per request (pinned by
+    tests/test_serving_concurrency.py's differential).
 
-    Why it exists (r9, the 64-client headroom item): the ``poll_many``
-    probe-join plan pays three fixed costs per dispatch on the local
-    scheduler — plan compile ~200 ms, the broadcast-exchange job ~300 ms,
-    and the main 2-stage job ~300 ms (measured at sf1; the bare 8-task
-    no-op job alone is ~300 ms, so two jobs + a shuffle stage IS the
-    floor). This variant pushes the batch's OR-footprint as ONE literal
-    predicate — ``user_id IN (probed users) AND window_start >
-    min(after)`` — into the batch-pruned cached scan (one job, one stage,
-    no join, no window exchange) and finishes per-request slicing in
-    Python over the collected slice. The collected size is bounded by
-    |batch| x one user's windows past the cursor (requests, not data:
-    ~4k rows for 64 probes at sf1), exactly the coordinator-side response
-    assembly every real serving layer does after its storage scan.
+    It plans on the caller's own session, with codegen, and never through
+    ``poll_page_with_total``'s serving session or view: it is the
+    independent reference that perfbench's poll check and the differential
+    test compare the fused poll against, and a reference sharing that
+    binding would agree with a poll that read the wrong view.
+
+    Why it exists (r9, the 64-client headroom item): a probe-join batch
+    plan paid three fixed costs per dispatch on the local scheduler — plan
+    compile ~200 ms, the broadcast-exchange job ~300 ms, and the main
+    2-stage job ~300 ms (measured at sf1; the bare 8-task no-op job alone
+    is ~300 ms, so two jobs + a shuffle stage IS the floor). This variant
+    pushes the batch's OR-footprint as ONE literal predicate — ``user_id IN
+    (probed users) AND window_start > min(after)`` — into the batch-pruned
+    cached scan (one job, one stage, no join, no window exchange) and
+    finishes per-request slicing in Python over the collected slice. The
+    collected size is bounded by |batch| x one user's windows past the
+    cursor (requests, not data: ~4k rows for 64 probes at sf1), exactly the
+    coordinator-side response assembly every real serving layer does after
+    its storage scan.
     """
-    from pyspark.sql import functions as F
-
     if not reqs:
         return {}
     users = sorted({r[1] for r in reqs})

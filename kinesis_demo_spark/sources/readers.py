@@ -13,9 +13,8 @@ tests/test_sources.py proves by round-tripping fixtures through each format.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from ..schemas import DOCUMENTS, EVENTS
+from ..schemas import EVENTS
 
 
 def read_events_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -41,15 +40,3 @@ def read_events_jsonl(spark: SparkSession, path: str) -> DataFrame:
         .option("mode", "FAILFAST")
         .json(path)
     )
-
-
-def read_documents_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(DOCUMENTS).option("mode", "FAILFAST").json(path)
-
-
-def read_any(spark: SparkSession, path: str, fmt: str, schema: T.StructType) -> DataFrame:
-    """Generic schema-pinned reader for the remaining formats."""
-    reader = spark.read.schema(schema).option("mode", "FAILFAST")
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    return reader.format(fmt).load(path)

@@ -8,11 +8,14 @@ clustering invariants the cache-pruning relies on."""
 from __future__ import annotations
 
 import datetime
+import gc
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from kinesis_demo_spark.io import load_table
+from kinesis_demo_spark.plans.movements import movement_aggregates
 from kinesis_demo_spark.plans.serving import (
     poll_many_collected,
     poll_page_with_total,
@@ -101,6 +104,11 @@ def _poll_plan_chain(spark, adaptive: bool) -> list[str]:
     spark.conf.set("spark.sql.adaptive.enabled", str(adaptive).lower())
     try:
         df = poll_page_with_total(agg, user, str(after), str(upto))
+        # the poll plans in the table's serving session, which takes the
+        # caller's confs at the table's first poll
+        assert df.sparkSession.conf.get("spark.sql.adaptive.enabled") == str(
+            adaptive
+        ).lower()
         assert df.collect(), "poll matched nothing — vacuous"
         plan = df._jdf.queryExecution().executedPlan()
         if plan.nodeName() == "AdaptiveSparkPlan":
@@ -152,3 +160,110 @@ def test_poll_many_collected_matches_per_request_fused_plan(spark):
             for d in got[pid]
         ] == want[pid], f"poll {pid} diverged"
     agg.unpersist()
+
+
+def _composed_page(agg, user_id, after, upto, limit=10):
+    """The poll's rows from the two actions it fuses (``range_scan`` page,
+    ``poll_sum`` total), planned in the caller's own session."""
+    page = range_scan(
+        agg, user_id, after=after, upto=upto, descending=True, limit=limit
+    ).collect()
+    total = poll_sum(agg, user_id, after=after).collect()[0][0]
+    return [(r.user_id, r.window_start, r.cnt, total) for r in page]
+
+
+def _compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_polls_compile_nothing(spark):
+    """Polls with new users and cursors run no Java compile: the request
+    values are parameters, not literals in generated code, and the serving
+    session runs its operators interpreted. The caller's session keeps
+    whole-stage codegen."""
+    agg = _agg(spark)
+    probes = _probe_mix(agg, 21)
+    _, user, after, upto = probes[0]
+    poll_page_with_total(agg, user, str(after), str(upto)).collect()
+    before = _compiles(spark)
+    pages = [
+        poll_page_with_total(agg, user, str(after), str(upto)).collect()
+        for _, user, after, upto in probes[1:]
+    ]
+    assert _compiles(spark) == before
+    assert len({(u, a) for _, u, a, _ in probes[1:]}) == 20
+    assert sum(1 for p in pages if p) >= 10, "probe mix mostly empty — vacuous"
+    assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+    agg.unpersist()
+
+
+def test_two_serving_tables_answer_from_their_own_rows(spark):
+    events = load_table(spark, SF, "events")
+    full = serving_table(events).cache()
+    probes = _probe_mix(full, 8)
+    users = sorted({u for _, u, _, _ in probes})
+    rest = serving_table(events.filter(~F.col("user_id").isin(users))).cache()
+    try:
+        n_nonempty = 0
+        for _, user, after, upto in probes:
+            want = _composed_page(full, user, str(after), str(upto))
+            assert poll_page_with_total(full, user, str(after), str(upto)).collect() == want
+            assert poll_page_with_total(rest, user, str(after), str(upto)).collect() == []
+            n_nonempty += bool(want)
+        assert n_nonempty >= len(probes) // 2, "probe mix mostly empty — vacuous"
+    finally:
+        full.unpersist()
+        rest.unpersist()
+
+
+def test_poll_under_non_utc_time_zone_matches_composition(spark):
+    """The cursor strings cast to timestamps in the session time zone; the
+    serving session takes the caller's zone, so the poll answers what the
+    DataFrame composition answers in the caller's session."""
+    events = load_table(spark, SF, "events")  # sets the session to UTC
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    agg = serving_table(events).cache()
+    try:
+        probes = _probe_mix(agg, 8)
+        n_nonempty = 0
+        for _, user, after, upto in probes:
+            df = poll_page_with_total(agg, user, str(after), str(upto))
+            assert df.sparkSession.conf.get("spark.sql.session.timeZone") == (
+                "America/New_York"
+            )
+            got = df.collect()
+            assert got == _composed_page(agg, user, str(after), str(upto))
+            n_nonempty += bool(got)
+        assert n_nonempty >= len(probes) // 2, "probe mix mostly empty — vacuous"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+        agg.unpersist()
+
+
+def _global_views(spark) -> set:
+    db = spark.conf.get("spark.sql.globalTempDatabase")
+    return {t.name for t in spark.catalog.listTables(db)}
+
+
+def test_one_off_poll_leaves_no_global_view(spark):
+    """A poll over a DataFrame made for that poll alone (the registered
+    ``serving_poll_page_fused`` makes one per call) registers a global temp
+    view for its serving session; it is dropped once that DataFrame is
+    garbage."""
+    before = _global_views(spark)
+    agg = movement_aggregates(load_table(spark, SF, "events"))
+    user, after = agg.select("user_id", "window_start").first()
+    after -= datetime.timedelta(seconds=1)
+    page = poll_page_with_total(
+        agg, user, str(after), str(after + datetime.timedelta(hours=1))
+    ).collect()
+    assert page, "poll matched nothing — vacuous"
+    assert len(_global_views(spark) - before) == 1
+    del agg
+    gc.collect()
+    deadline = time.monotonic() + 30
+    while _global_views(spark) - before and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert _global_views(spark) - before == set()

@@ -10,9 +10,11 @@ range-scan + running-sum pair, with per-request latency percentiles graded
 against the 2 s budget.
 
 Spark-first serving: the aggregate table is persisted once (the serving
-layer's DynamoDB counterpart); each poll compiles to a pushed-filter scan of
-the cached table + TakeOrderedAndProject, so request latency is O(matched
-windows), never O(table). Concurrency = one Python thread per client — Spark
+layer's DynamoDB counterpart); each poll is one parameterized statement,
+planned in the table's serving session, whose plan is a pushed-filter scan
+of the cached table + TakeOrderedAndProject run with no generated code, so
+request latency is O(matched windows), never O(table), and no request waits
+on the Java compiler. Concurrency = one Python thread per client — Spark
 schedules concurrent actions from separate threads onto the shared executor
 pool (FAIR-ready; local[] shares cores the same way a serving cluster
 shares executors).
@@ -182,7 +184,7 @@ def run_serving_loop(
 
         return dt
 
-    one_poll(0)  # warm the codegen'd poll plans once; SLO grades steady state
+    one_poll(0)  # bind the table's serving session, warm the path; SLO grades steady state
     t_start = time.perf_counter()
     with ThreadPoolExecutor(max_workers=clients) as pool:
         lat = sorted(pool.map(one_poll, range(requests)))

@@ -68,6 +68,17 @@ def test_ann_broadcasts_query_side(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
+def test_fingerprint_ignores_lambdas_built_before(spark):
+    """PySpark names each higher-order-function lambda variable from one
+    JVM-wide counter, so a query built after others carries other names;
+    its plan fingerprint must not depend on what was built before it."""
+    from tools.plan_audit import fingerprint
+
+    first = fingerprint(Q["ann_cosine_topk"](spark, SF))
+    Q["knn_label_vote"](spark, SF)
+    assert fingerprint(Q["ann_cosine_topk"](spark, SF)) == first
+
+
 def test_exact_dedup_partial_aggregates_before_exchange(spark):
     plan = _plan(Q["dedup_exact_text"](spark, SF), mode="simple")
     # HashAggregate(partial) -> Exchange -> HashAggregate(final)

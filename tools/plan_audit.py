@@ -17,7 +17,8 @@ the properties the 100 TB story depends on:
   paired with a later limit)
 
 Two identity fields gate behaviour-neutral refactors: ``fingerprint``
-(sha256 of the optimized LOGICAL plan, per-session ids normalised) and
+(sha256 of the optimized LOGICAL plan, per-session ids and the
+higher-order-function lambda counters normalised) and
 ``build_jobs`` (the session-global ids of the jobs fired while building the
 DataFrame — two audits in the same order agree iff every query fires the
 same jobs), with their count in ``n_build_jobs``: once one query fires
@@ -33,10 +34,9 @@ to stderr; ``--json PATH`` writes the full map to a sidecar (PLANS.json) so
 plan-shape regressions show up in review diffs. ``--only name[,name...]``
 audits just the named queries (unknown names are an error) — the quick
 re-check for the queries a commit touches. Compare such a run with an
-``--only`` run of the same names: job ids shift with the queries before, a
-query that reuses work memoised by an earlier one (``bpe_train_merges``)
-fires more jobs alone, and ``graph_kcore``'s fingerprint differs between a
-full and an ``--only`` run of the same tree.
+``--only`` run of the same names: job ids shift with the queries before, and
+a query that reuses work memoised by an earlier one (``bpe_train_merges``)
+fires more jobs alone.
 
 Streaming-drain queries (they EXECUTE on construction) are audited on their
 batch-equivalent plans where construction is side-effect-free; the
@@ -128,12 +128,16 @@ _SESSION_IDS = (
     (r"plan_id=\d+", "plan_id="),
     (r"QueryStage \d+", "QueryStage"),
     (r"uuid\(Some\(-?\d+\)\)", "uuid(Some())"),
+    (r"lambda (\w+?)_\d+", r"lambda \1_"),
 )
 
 
 def fingerprint(df) -> str:
     """sha256 of the optimized logical plan; expression, exchange and AQE
-    stage ids and ``uuid()`` seeds are normalised (they vary per session)."""
+    stage ids and ``uuid()`` seeds are normalised (they vary per session),
+    and so are lambda variable names: PySpark numbers each ``x_<n>`` from a
+    JVM-wide counter, so they depend on how many lambdas were built
+    before."""
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     for pattern, repl in _SESSION_IDS:
         plan = re.sub(pattern, repl, plan)

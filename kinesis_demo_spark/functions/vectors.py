@@ -48,25 +48,30 @@ def norm_sql(a: str) -> str:
     return f"sqrt({dot_fold_sql(a, a)})"
 
 
-def sign_bucket(a: Column | str, dims: int) -> Column:
-    """Hyperplane-sign LSH bucket id: bit d set iff a[d] >= 0, d < dims.
-    Deterministic, so the DuckDB oracle can replicate it exactly; shared by
-    the ANN bucketed search (similarity.py) and the bucketed embedding
-    near-dup (dedup.py)."""
-    col = F.col(a) if isinstance(a, str) else a
-    bits = [
-        F.when(F.element_at(col, d + 1) >= 0, F.lit(1 << d)).otherwise(F.lit(0))
-        for d in range(dims)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
+def sqdist(a: Column | str, b: Column | str) -> Column:
+    """Bit-exact squared L2: left-to-right fold of (a - b)^2 in double."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
 
 
-def sign_bucket_sql(a: str, dims: int) -> str:
-    return " + ".join(
-        f"(CASE WHEN {a}[{d + 1}] >= 0 THEN {1 << d} ELSE 0 END)" for d in range(dims)
+def ordered_sum(order: Column, value: Column, where: Column | None = None) -> Column:
+    """Aggregate: the group's ``value`` summed left to right in ``order``
+    from 0.0, leaving out rows where ``where`` is false. A float sum depends
+    on its order, so both engines fold the members in the same order — the
+    DuckDB mirror is ``list_reduce(list(value ORDER BY order), (x, y) ->
+    x + y)`` — and the sums are bit-identical. The per-group collect is
+    bounded by group size; a whale group goes two-stage with fixed partial
+    boundaries."""
+    item = F.struct(order, value.alias("x"))
+    if where is not None:
+        item = F.when(where, item)
+    return F.aggregate(
+        F.transform(F.sort_array(F.collect_list(item)), lambda s: s["x"]),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
 
 

@@ -310,7 +310,7 @@ def iterate(
     return state
 
 
-def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition before compute-heavy per-row stages — but ONLY
     when the input is under-parallel (fewer partitions than
     defaultParallelism).
@@ -323,8 +323,7 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     before any pruning AND cap parallelism at defaultParallelism (VERDICT r5
     #2) — so a scan that is already at-or-above defaultParallelism passes
     through untouched (identity, no Exchange in the plan; pinned in
-    tests/test_sources.py). Explicit ``partitions`` still repartitions
-    unconditionally — callers use it to pin a layout, not to fan out.
+    tests/test_sources.py).
 
     ONLY call this on scan-head DataFrames (no shuffle upstream): the
     partition-count inspection goes through ``df.rdd``, and under AQE that
@@ -332,8 +331,6 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     mid-plan input. Mid-plan fan-outs (post-shuffle, pre-compute-heavy
     stage) must use ``fan_out`` instead, which repartitions unconditionally
     without inspecting the plan."""
-    if partitions is not None:
-        return df.repartition(partitions)
     n = df.sparkSession.sparkContext.defaultParallelism
     # Plan-only for a scan: .rdd translates the physical plan but runs no
     # job when the plan has no query stages to materialize.

@@ -609,15 +609,15 @@ def retrieval_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     linearly. Cross-engine bit-exactness: ranks are integers; the fused score
     is two single IEEE divisions and one add, identical parenthesization in
     both engines; ties broken by doc_id everywhere."""
-    from ..functions.vectors import dot_fold, norm
+    from ..functions.vectors import dot_fold
+    from .similarity import _vectors
 
     lex = (
         text_bm25_topk(spark, sf_dir)
         .select(F.col("doc_id"), F.col("rnk").alias("lex_rnk"))
     )
 
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    v = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
+    v = _vectors(spark, sf_dir)
     q = F.broadcast(
         v.filter(F.col("vec_id") == RRF_QUERY_VEC)
         .select(F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm"))

@@ -904,11 +904,12 @@ def dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..functions.vectors import (  # noqa: E402  (shared with similarity.py)
     dot_fold,
     dot_fold_sql,
-    sign_bucket,
+    norm,
     sign_bands,
     sign_bucket_band_sql,
-    sign_bucket_sql,
+    sqdist,
 )
+from .similarity import _vectors  # noqa: E402
 
 
 @register(
@@ -932,12 +933,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.py (ann_cosine_topk_lsh) followed by this exact scorer on
     candidates only. Dot products fold left-to-right in double on both
     engines, so scores are bit-exact — no rounding needed."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    v = emb.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot_fold(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
+    v = _vectors(spark, sf_dir)
     a = v.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"), F.col("nrm").alias("na"))
     b = v.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"), F.col("nrm").alias("nb"))
     cos = dot_fold(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
@@ -1784,16 +1780,9 @@ def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("ccid"),
         F.transform("embedding", lambda x: x.cast("double")).alias("c"),
     )
-    sqd = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("c"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    scored = emb.join(F.broadcast(cents)).select(
+        "vec_id", "ccid", sqdist(F.col("embedding"), F.col("c")).alias("dist")
     )
-    scored = emb.join(F.broadcast(cents)).select("vec_id", "ccid", sqd.alias("dist"))
     assign = (
         scored.groupBy("vec_id")
         .agg(F.min(F.struct("dist", "ccid")).alias("m"))
@@ -1804,7 +1793,7 @@ def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "cid",
             "embedding",
-            F.sqrt(dot_fold(F.col("embedding"), F.col("embedding"))).alias("nrm"),
+            norm(F.col("embedding")).alias("nrm"),
         )
     )
     lo = v.select(

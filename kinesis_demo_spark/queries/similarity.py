@@ -1,30 +1,32 @@
-"""Approximate-nearest-neighbor similarity search over the ``embeddings``
-fixture (``embedding: array<float>``, dim 64) — SURVEY.md §7 Phase 5.
+"""Vector search and embedding analytics over the ``embeddings`` fixture
+(``embedding: array<float>``, dim 64) — SURVEY.md §7 Phase 5.
 
-Two variants of cosine top-k for a fixed query set:
+The nearest-neighbour family is one filter-and-refine pattern: a candidate
+screen, then an exact-cosine re-rank of the shortlist, then a per-query
+top-k. The screens differ — none (``ann_cosine_topk``, the brute-force
+baseline), multi-table sign-LSH buckets (``_lsh``), IVF cells, PQ codes, a
+truncated-dimension prefix, binary Hamming words — while the refine steps
+are written once, as the kernels below:
 
-- ``ann_cosine_topk``: brute-force exact baseline. The query side is tiny and
-  broadcast, so the corpus never shuffles for the join; scoring is per-row
-  JVM-codegen arithmetic and the only exchange is the per-query top-k
-  (TakeOrdered-style window). This is the shape that scales linearly with
-  corpus size at 100 TB — 1 broadcast + 1 narrow scan + 1 small shuffle of
-  |queries| * k rows.
-- ``ann_cosine_topk_lsh``: multi-table sign LSH (``ANN_LSH_TABLES`` tables,
-  each bucketing on the hyperplane signs of its own ``ANN_LSH_BAND_BITS``-dim
-  band); each query scores the union of its buckets — candidate volume and
-  recall tune with (b, L). Deterministic bucketing means the DuckDB oracle
-  replicates it exactly, so even the approximate variant is value-hash
-  checked; measured recall@10 vs the exact baseline: 0.88
-  (tools/approx_quality.py).
+- ``_side`` / ``_cos``: one side of a scored pair (``key, {p}e, {p}n``) and
+  the cosine of two such sides over the shared double fold
+  (functions/vectors.py);
+- ``_exact``: every (query, corpus) pair with its exact cosine, queries
+  broadcast so the corpus never shuffles for the join;
+- ``_rescore``: the exact cosine of a candidate shortlist, fetching the
+  embeddings by key — queries broadcast, the corpus side never;
+- ``_rank`` / ``_topk``: the per-query ``row_number`` cut, ties to the
+  smaller id.
 
-Both emit (query_id, neighbor_id, rnk, score) with bit-exact scores (see
-functions/vectors.py) and id-tie-broken ranks, so results are fully
-deterministic.
+Every variant emits bit-exact scores and id-tie-broken ranks, so even the
+approximate ones are value-hash checked against a DuckDB oracle. Around
+the family sit the index reports (recall, MRR/nDCG, IVF drift), k-means,
+k-center, PCA, kNN voting and MMR re-ranking.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import (
@@ -32,15 +34,16 @@ from ..functions.vectors import (
     dot_fold_sql,
     norm,
     norm_sql,
+    ordered_sum,
     sign_bands,
     sign_bucket_band_sql,
+    sqdist,
 )
 from ..io import fan_out, iterate, load_table, spread, track_persist
 from ..registry import register
 
 N_QUERIES = 5  # vec_id < 5 at every scale factor
 TOP_K = 10
-LSH_SIGN_DIMS = 8  # 2^8 = 256 buckets
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,12 +51,57 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
 
 
-def _topk(scored: DataFrame) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
+def _side(v: DataFrame, key: str, prefix: str) -> DataFrame:
+    """One side of a scored pair: ``(key, {prefix}e, {prefix}n)``."""
+    return v.select(
+        F.col("vec_id").alias(key),
+        F.col("embedding").alias(f"{prefix}e"),
+        F.col("nrm").alias(f"{prefix}n"),
+    )
+
+
+def _cos(a: str, b: str) -> Column:
+    """Exact cosine of the sides prefixed ``a`` and ``b``."""
+    return dot_fold(F.col(f"{a}e"), F.col(f"{b}e")) / (F.col(f"{a}n") * F.col(f"{b}n"))
+
+
+def _queries(v: DataFrame, n: int = N_QUERIES) -> DataFrame:
+    """The broadcast query side: vectors vec_id < n keyed ``query_id``."""
+    return F.broadcast(_side(v.filter(F.col("vec_id") < n), "query_id", "q"))
+
+
+def _exact(v: DataFrame, alias: str = "score", n: int = N_QUERIES, *keep: str) -> DataFrame:
+    """Every (query, corpus) pair, self-pairs dropped, with its exact
+    cosine as ``alias``: the queries are broadcast, so the corpus never
+    shuffles for the join. ``keep`` names corpus-side columns to carry."""
+    return _queries(v, n).join(
+        _side(v, "neighbor_id", "c"), F.col("neighbor_id") != F.col("query_id")
+    ).select("query_id", "neighbor_id", _cos("q", "c").alias(alias), *keep)
+
+
+def _rescore(pairs: DataFrame, v: DataFrame, alias: str = "score", *keep: str) -> DataFrame:
+    """The exact cosine of a (query_id, neighbor_id) shortlist as ``alias``.
+    Embeddings are fetched by key: the query side is broadcast, the corpus
+    side is a plain keyed join, so only shortlist rows meet their vectors
+    and the corpus is never broadcast. ``keep`` names pair columns to
+    carry."""
     return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", "score")
+        pairs.join(_queries(v), "query_id")
+        .join(_side(v, "neighbor_id", "c"), "neighbor_id")
+        .select("query_id", "neighbor_id", *keep, _cos("q", "c").alias(alias))
+    )
+
+
+def _rank(df: DataFrame, k: int, *order, col: str = "rnk") -> DataFrame:
+    """Rows ranked ``1..k`` per query_id by ``order`` as the long ``col``."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn(col, F.row_number().over(w).cast("long")).filter(F.col(col) <= k)
+
+
+def _topk(scored: DataFrame, score: str = "score", *keep: str) -> DataFrame:
+    """The per-query top-{TOP_K} by ``score``, ties to the smaller id."""
+    return _rank(scored, TOP_K, F.col(score).desc(), F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", *keep, "rnk", score
     )
 
 
@@ -65,6 +113,19 @@ v AS (
 """
 
 
+def _topk_sql(src: str, score: str = "score", *keep: str) -> str:
+    """The DuckDB mirror of ``_topk``: a ``ranked`` CTE over ``src`` (a CTE
+    name, optionally with a WHERE) and the top-{TOP_K} select."""
+    cols = "".join(f"{c}, " for c in keep)
+    return f"""ranked AS (
+  SELECT query_id, neighbor_id, {cols}{score},
+         row_number() OVER (PARTITION BY query_id ORDER BY {score} DESC, neighbor_id) AS rnk
+  FROM {src}
+)
+SELECT query_id, neighbor_id, {cols}CAST(rnk AS BIGINT) AS rnk, {score}
+FROM ranked WHERE rnk <= {TOP_K}"""
+
+
 @register(
     "ann_cosine_topk",
     oracle=f"""
@@ -74,13 +135,7 @@ scored AS (
          {dot_fold_sql('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS score
   FROM v q JOIN v c ON q.vec_id < {N_QUERIES} AND c.vec_id <> q.vec_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, score,
-         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, score
-FROM ranked WHERE rnk <= {TOP_K}
+{_topk_sql('scored')}
 """,
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,32 +144,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     final ranking exchanges only |queries| * |corpus| scored rows, which AQE
     coalesces — and on a cluster the per-partition top-k prunes before the
     exchange."""
-    v = _vectors(spark, sf_dir)
-    q = F.broadcast(
-        v.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qn"),
-        )
-    )
-    c = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    scored = q.join(c, F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("score"),
-    )
-    return _topk(scored)
-
-
-# (The single wide sign bucket — sign_bucket(embedding, LSH_SIGN_DIMS) — is
-# still the right tool where the QUESTION is bucket identity, e.g. dedup.py's
-# embedding near-dup, which verifies candidates exactly; for top-k recall the
-# banded multi-table form below dominates it.)
-
+    return _topk(_exact(_vectors(spark, sf_dir)))
 
 
 # Multi-table sign LSH: L tables x b bits over disjoint dim bands. One wide
@@ -130,6 +160,20 @@ def _band_rows(v: DataFrame) -> DataFrame:
     table, bucketed on the hyperplane signs of that table's band."""
     bands = sign_bands("embedding", ANN_LSH_BAND_BITS, ANN_LSH_TABLES)
     return v.select("vec_id", bands.alias("b")).select("vec_id", "b.tbl", "b.bucket")
+
+
+def _bands_sql(src: str) -> str:
+    """The DuckDB mirror of ``_band_rows``: a ``bands`` CTE holding each
+    ``src`` row once per LSH table with that table's bucket."""
+    cases = " ".join(
+        f"WHEN {t} THEN {sign_bucket_band_sql('embedding', t * ANN_LSH_BAND_BITS, ANN_LSH_BAND_BITS)}"
+        for t in range(ANN_LSH_TABLES)
+    )
+    return f"""bands AS (
+  SELECT {src}.*, t.tbl,
+         CASE t.tbl {cases} END AS bucket
+  FROM {src} CROSS JOIN (SELECT unnest(range({ANN_LSH_TABLES})) AS tbl) t
+)"""
 
 
 def _lsh_candidates(v: DataFrame) -> DataFrame:
@@ -156,36 +200,13 @@ def _lsh_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard-negative miner): slim (vec_id, table, bucket) band join ->
     DISTINCT candidate pairs -> exact cosine via broadcast-fetched
     embeddings."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    v = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    cand = _lsh_candidates(v).distinct()
-    qv = F.broadcast(
-        v.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qn"),
-        )
-    )
-    cv = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    scored = (
-        # fan_out (NOT spread — .rdd inspection would eagerly execute the
-        # candidate stages under AQE): the distinct's bare-long pair rows get
-        # size-coalesced by AQE to a few partitions; without the round-robin
-        # fan-out the exact scoring fold would run near-serial (the
-        # dedup_ngram_jaccard_prefix failure mode).
-        fan_out(cand).join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("score"),
-        )
-    )
-    return scored
+    v = _vectors(spark, sf_dir)
+    # fan_out (NOT spread — .rdd inspection would eagerly execute the
+    # candidate stages under AQE): the distinct's bare-long pair rows get
+    # size-coalesced by AQE to a few partitions; without the round-robin
+    # fan-out the exact scoring fold would run near-serial (the
+    # dedup_ngram_jaccard_prefix failure mode).
+    return _rescore(fan_out(_lsh_candidates(v).distinct()), v)
 
 
 @register(
@@ -195,11 +216,7 @@ WITH vb AS (
   SELECT vec_id, embedding, {norm_sql('embedding')} AS nrm
   FROM embeddings
 ),
-bands AS (
-  SELECT vb.*, t.tbl,
-         CASE t.tbl {" ".join(f"WHEN {t} THEN {sign_bucket_band_sql('embedding', t * ANN_LSH_BAND_BITS, ANN_LSH_BAND_BITS)}" for t in range(ANN_LSH_TABLES))} END AS bucket
-  FROM vb CROSS JOIN (SELECT unnest(range({ANN_LSH_TABLES})) AS tbl) t
-),
+{_bands_sql('vb')},
 scored AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          {dot_fold_sql('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS score
@@ -207,13 +224,7 @@ scored AS (
     ON q.tbl = c.tbl AND q.bucket = c.bucket
    AND q.vec_id < {N_QUERIES} AND c.vec_id <> q.vec_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, score,
-         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, score
-FROM ranked WHERE rnk <= {TOP_K}
+{_topk_sql('scored')}
 """,
 )
 def ann_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -255,11 +266,7 @@ WITH vb AS (
   SELECT vec_id, embedding, {norm_sql('embedding')} AS nrm
   FROM embeddings
 ),
-bands AS (
-  SELECT vb.*, t.tbl,
-         CASE t.tbl {" ".join(f"WHEN {t} THEN {sign_bucket_band_sql('embedding', t * ANN_LSH_BAND_BITS, ANN_LSH_BAND_BITS)}" for t in range(ANN_LSH_TABLES))} END AS bucket
-  FROM vb CROSS JOIN (SELECT unnest(range({ANN_LSH_TABLES})) AS tbl) t
-),
+{_bands_sql('vb')},
 scored AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          {dot_fold_sql('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS score
@@ -267,14 +274,7 @@ scored AS (
     ON q.tbl = c.tbl AND q.bucket = c.bucket
    AND q.vec_id < {N_QUERIES} AND c.vec_id <> q.vec_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, score,
-         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rnk
-  FROM scored
-  WHERE score < {HARD_NEG_MAX_SCORE}
-)
-SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, score
-FROM ranked WHERE rnk <= {TOP_K}
+{_topk_sql(f'scored WHERE score < {HARD_NEG_MAX_SCORE}')}
 """,
 )
 def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,6 +304,24 @@ N_PROBE = 2
 # as centroids (production swaps in offline k-means; the index/search
 # machinery is identical). Assignment = argmax cosine with ties to the
 # smallest centroid id, encoded as struct max over (score, -cid).
+
+
+def _centroids(v: DataFrame) -> DataFrame:
+    """The broadcast coarse codebook side ``(cid, ce, cn)``."""
+    return F.broadcast(_side(v.filter(F.col("vec_id") < N_CENTROIDS), "cid", "c"))
+
+
+def _nearest_cell(rows: DataFrame, cents: DataFrame, *keep: str) -> DataFrame:
+    """Per vector (grouped with ``keep``), ``m`` = max struct(``s`` cosine,
+    ``nc`` = -cid) over the codebook: its cell is ``-m.nc``, its cosine
+    to that centroid ``m.s``."""
+    s = dot_fold(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
+    return (
+        rows.join(cents)
+        .select("vec_id", *keep, s.alias("s"), (-F.col("cid")).alias("nc"))
+        .groupBy("vec_id", *keep)
+        .agg(F.max(F.struct("s", "nc")).alias("m"))
+    )
 
 _IVF_ORACLE = f"""
 WITH vb AS (
@@ -336,13 +354,7 @@ scored AS (
   JOIN vb v ON v.vec_id = a.vec_id
   WHERE a.vec_id <> p.query_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, score,
-         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, score
-FROM ranked WHERE rnk <= {TOP_K}
+{_topk_sql('scored')}
 """
 
 
@@ -356,53 +368,21 @@ def ann_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins. Centroids here are the first {N_CENTROIDS} vectors (deterministic
     stand-in for offline k-means; search machinery identical)."""
     vb = _vectors(spark, sf_dir)
-    cents = F.broadcast(
-        vb.filter(F.col("vec_id") < N_CENTROIDS).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"), F.col("nrm").alias("cn")
-        )
-    )
-    cscore = dot_fold(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
-    assign = (
-        vb.join(cents)
-        .select("vec_id", cscore.alias("s"), (-F.col("cid")).alias("nc"))
-        .groupBy("vec_id")
-        .agg(F.max(F.struct("s", "nc")).alias("m"))
-        .select("vec_id", (-F.col("m.nc")).alias("cid"))
-    )
-    qw = Window.partitionBy("query_id").orderBy(F.col("qs").desc(), "cid")
-    probes = (
-        vb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), F.col("nrm").alias("qn"))
+    cents = _centroids(vb)
+    assign = _nearest_cell(vb, cents).select("vec_id", (-F.col("m.nc")).alias("cid"))
+    probe_scores = (
+        _side(vb.filter(F.col("vec_id") < N_QUERIES), "query_id", "q")
         .join(cents)
-        .select(
-            "query_id",
-            "cid",
-            (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("qs"),
-        )
-        .withColumn("pr", F.row_number().over(qw))
-        .filter(F.col("pr") <= N_PROBE)
-        .select("query_id", "cid")
+        .select("query_id", "cid", _cos("q", "c").alias("qs"))
     )
-    q = vb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), F.col("nrm").alias("qn")
-    )
-    v = vb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ve"), F.col("nrm").alias("vn")
-    )
-    scored = (
-        F.broadcast(probes)
+    probes = _rank(probe_scores, N_PROBE, F.col("qs").desc(), "cid", col="pr")
+    cand = (
+        F.broadcast(probes.select("query_id", "cid"))
         .join(assign, "cid")
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(q), "query_id")
-        .join(v, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_fold(F.col("qe"), F.col("ve")) / (F.col("qn") * F.col("vn"))).alias("score"),
-        )
     )
-    return _topk(scored)
+    return _topk(_rescore(cand, vb))
 
 
 # --- incremental IVF index maintenance (r12, VERDICT r11 #7) ---------------------
@@ -493,46 +473,19 @@ def ann_ivf_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer comparison against a broadcast 1-row cut."""
     vb = _vectors(spark, sf_dir)
     cut = vb.agg(F.expr("(max(vec_id) + 1) * 9 DIV 10").alias("cut"))
-    cents = F.broadcast(
-        vb.filter(F.col("vec_id") < N_CENTROIDS).select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cn"),
-        )
+    rows = vb.crossJoin(F.broadcast(cut)).withColumn("is_delta", F.col("vec_id") >= F.col("cut"))
+    assign = _nearest_cell(rows, _centroids(vb), "is_delta").select(
+        "vec_id",
+        "is_delta",
+        (-F.col("m.nc")).alias("cid"),
+        (F.lit(1.0) - F.col("m.s")).alias("qerr"),
     )
-    cscore = dot_fold(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
-    assign = (
-        vb.crossJoin(F.broadcast(cut))
-        .withColumn("is_delta", F.col("vec_id") >= F.col("cut"))
-        .join(cents)
-        .select("vec_id", "is_delta", cscore.alias("s"), (-F.col("cid")).alias("nc"))
-        .groupBy("vec_id", "is_delta")
-        .agg(F.max(F.struct("s", "nc")).alias("m"))
-        .select(
-            "vec_id",
-            "is_delta",
-            (-F.col("m.nc")).alias("cid"),
-            (F.lit(1.0) - F.col("m.s")).alias("qerr"),
-        )
-    )
-
-    def _fold(flag: F.Column) -> F.Column:
-        return F.aggregate(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.when(flag, F.struct("vec_id", "qerr")))
-                ),
-                lambda s: s["qerr"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
+    delta, base = F.col("is_delta"), ~F.col("is_delta")
     cells = assign.groupBy("cid").agg(
-        F.count(F.when(~F.col("is_delta"), 1)).cast("long").alias("n_base"),
-        F.count(F.when(F.col("is_delta"), 1)).cast("long").alias("n_delta"),
-        _fold(~F.col("is_delta")).alias("base_qerr_sum"),
-        _fold(F.col("is_delta")).alias("delta_qerr_sum"),
+        F.count(F.when(base, 1)).cast("long").alias("n_base"),
+        F.count(F.when(delta, 1)).cast("long").alias("n_delta"),
+        ordered_sum(F.col("vec_id"), F.col("qerr"), where=base).alias("base_qerr_sum"),
+        ordered_sum(F.col("vec_id"), F.col("qerr"), where=delta).alias("delta_qerr_sum"),
     )
     base_mean = F.col("base_qerr_sum") / F.nullif(F.col("n_base"), F.lit(0))
     delta_mean = F.col("delta_qerr_sum") / F.nullif(F.col("n_delta"), F.lit(0))
@@ -582,25 +535,7 @@ def ann_with_document_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k result against the documents scan — at 100 TB the top-k side is
     |queries| x k rows, so enrichment costs one broadcast regardless of
     corpus size."""
-    v = _vectors(spark, sf_dir)
-    q = F.broadcast(
-        v.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), F.col("nrm").alias("qn")
-        )
-    )
-    c = v.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"), F.col("nrm").alias("cn")
-    )
-    scored = q.join(c, F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    topk = (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 5)
-    )
+    topk = _rank(_exact(_vectors(spark, sf_dir)), 5, F.col("score").desc(), F.col("neighbor_id"))
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("neighbor_id"), "lang", "source", "n_chars"
     )
@@ -641,13 +576,7 @@ def embedding_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = emb.select(
         "label", "vec_id", F.posexplode("embedding").alias("d0", "v")
     ).select("label", (F.col("d0") + 1).alias("dim"), "vec_id", "v")
-    folded = F.aggregate(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("vec_id", "v"))), lambda s: s["v"].cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    folded = ordered_sum(F.col("vec_id"), F.col("v").cast("double"))
     return (
         e.groupBy("label", "dim")
         .agg(folded.alias("sum_v"), F.count(F.lit(1)).alias("n"))
@@ -661,22 +590,11 @@ KMEANS_K = 8
 KMEANS_ITERS = 2
 
 
-def _sqdist(vec_col: str, cent_col: str) -> F.Column:
-    """Bit-exact squared L2: left-to-right fold of (a - b)^2 in double."""
-    return F.aggregate(
-        F.zip_with(
-            vec_col, cent_col, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, cid, dist): nearest centroid, ties to the smaller cid via
     lexicographic struct min — 8 centroids broadcast, corpus never shuffles."""
     scored = vecs.join(F.broadcast(cents)).select(
-        "vec_id", "cid", _sqdist("embedding", "c").alias("dist")
+        "vec_id", "cid", sqdist("embedding", "c").alias("dist")
     )
     m = scored.groupBy("vec_id").agg(F.min(F.struct("dist", "cid")).alias("m"))
     return m.select("vec_id", F.col("m.cid").alias("cid"), F.col("m.dist").alias("dist"))
@@ -690,13 +608,7 @@ def _recompute_centroids(vecs: DataFrame, assign: DataFrame) -> DataFrame:
         .select("cid", "vec_id", F.posexplode("embedding").alias("d0", "v"))
         .select("cid", (F.col("d0") + 1).alias("dim"), "vec_id", "v")
     )
-    folded = F.aggregate(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("vec_id", "v"))), lambda s: s["v"].cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    folded = ordered_sum(F.col("vec_id"), F.col("v").cast("double"))
     means = e.groupBy("cid", "dim").agg(
         (folded / F.count(F.lit(1))).alias("mean")
     )
@@ -854,13 +766,7 @@ rerank AS (
   JOIN vb c ON c.vec_id = s.neighbor_id
   WHERE s.srnk <= {PQ_SHORTLIST}
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM rerank
-)
-SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, cosine
-FROM ranked WHERE rnk <= {TOP_K}
+{_topk_sql('rerank', 'cosine')}
 """
 
 
@@ -878,7 +784,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles broadcast once, and scoring is {PQ_M} array lookups + adds per
     row inside codegen — the raw vectors are only read to (a) build codes
     once offline and (b) re-rank a top-R shortlist if exactness matters
-    (the exact re-rank is ``ann_cosine_topk``'s machinery, composable).
+    (the exact re-rank is ``_rescore``, shared by every shortlist variant).
 
     Everything is deterministic — codebook = the first {PQ_K} corpus
     vectors (IVF's offline-training stand-in precedent), argmin tie-breaks
@@ -938,27 +844,12 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         enc.join(F.broadcast(qt), F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("approx_d2"))
     )
-    sw = Window.partitionBy("query_id").orderBy("approx_d2", "neighbor_id")
-    shortlist = (
-        scored.withColumn("srnk", F.row_number().over(sw))
-        .filter(F.col("srnk") <= PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
+    shortlist = _rank(
+        scored, PQ_SHORTLIST, "approx_d2", "neighbor_id", col="srnk"
+    ).select("query_id", "neighbor_id")
     # exact re-rank of the |queries| x PQ_SHORTLIST shortlist — the only rows
     # whose raw embeddings are ever fetched at query time
-    vn = _vectors(spark, sf_dir)
-    qv = vn.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), F.col("nrm").alias("qn"))
-    cv = vn.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"), F.col("nrm").alias("cn"))
-    cos = dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(F.broadcast(cv), "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", "cosine")
-    )
+    return _topk(_rescore(shortlist, _vectors(spark, sf_dir), "cosine"), "cosine")
 
 
 # --- Truncated-dimension prescreen ANN ---------------------------------------------
@@ -974,9 +865,7 @@ def _trunc_oracle() -> str:
     qslice = f"list_slice(q.embedding, 1, {TRUNC_DIMS})"
     cslice = f"list_slice(c.embedding, 1, {TRUNC_DIMS})"
     return f"""
-WITH v AS (
-  SELECT vec_id, embedding, {norm_sql('embedding')} AS nrm FROM embeddings
-),
+WITH {_V_CTE},
 coarse AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          {dot_fold_sql(qslice, cslice)} AS cscore,
@@ -987,13 +876,7 @@ short AS (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cscore DESC, neighbor_id) AS srnk
   FROM coarse
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM short WHERE srnk <= {TRUNC_SHORTLIST}
-)
-SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, cosine
-FROM ranked WHERE rnk <= {TOP_K}
+{_topk_sql(f'short WHERE srnk <= {TRUNC_SHORTLIST}', 'cosine')}
 """
 
 
@@ -1035,38 +918,11 @@ def ann_cosine_topk_truncated(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         dot_fold(F.col("qt"), F.col("ct")).alias("cscore"),
     )
-    sw = Window.partitionBy("query_id").orderBy(F.col("cscore").desc(), "neighbor_id")
-    shortlist = (
-        coarse.withColumn("srnk", F.row_number().over(sw))
-        .filter(F.col("srnk") <= TRUNC_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
+    shortlist = _rank(
+        coarse, TRUNC_SHORTLIST, F.col("cscore").desc(), "neighbor_id", col="srnk"
+    ).select("query_id", "neighbor_id")
     # full-dim folds run ONLY here, on |queries| x shortlist rows
-    qv = F.broadcast(
-        v.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qn"),
-        )
-    )
-    cv = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        shortlist.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cosine"),
-        )
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", "cosine")
-    )
+    return _topk(_rescore(shortlist, v, "cosine"), "cosine")
 
 
 # --- per-source embedding drift (dataset-shift diagnostic) -------------------------
@@ -1128,14 +984,7 @@ def embedding_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = joined.select(
         "source", "vec_id", F.posexplode("embedding").alias("d0", "v")
     ).select("source", (F.col("d0") + 1).alias("dim"), "vec_id", "v")
-    folded = F.aggregate(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("vec_id", "v"))),
-            lambda s: s["v"].cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    folded = ordered_sum(F.col("vec_id"), F.col("v").cast("double"))
     cents = e.groupBy("source", "dim").agg(
         (folded / F.count(F.lit(1))).alias("mean_v")
     )
@@ -1147,15 +996,8 @@ def embedding_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = a.join(b, "dim").filter(F.col("source_a") < F.col("source_b"))
 
-    def dimfold(expr: F.Column) -> F.Column:
-        return F.aggregate(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(F.col("dim"), expr.alias("x")))),
-                lambda s: s["x"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    def dimfold(expr: Column) -> Column:
+        return ordered_sum(F.col("dim"), expr)
 
     return pairs.groupBy("source_a", "source_b").agg(
         (
@@ -1361,15 +1203,8 @@ def pca_embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def fold(col: str) -> F.Column:
-        return F.aggregate(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(F.col("vec_id"), F.col(col).alias("x")))),
-                lambda s: s["x"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    def fold(col: str) -> Column:
+        return ordered_sum(F.col("vec_id"), F.col(col))
 
     moments = (
         pairs.groupBy("i", "j")
@@ -1480,13 +1315,7 @@ short AS (
   SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS srnk
   FROM screened
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, hamming, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM short WHERE srnk <= {HAM_SHORTLIST}
-)
-SELECT query_id, neighbor_id, hamming, CAST(rnk AS BIGINT) AS rnk, cosine
-FROM ranked WHERE rnk <= {TOP_K}
+{_topk_sql(f'short WHERE srnk <= {HAM_SHORTLIST}', 'cosine', 'hamming')}
 """
 
 
@@ -1538,39 +1367,11 @@ def ann_hamming_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("hamming"),
     )
-    sw = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    shortlist = (
-        screened.withColumn("srnk", F.row_number().over(sw))
-        .filter(F.col("srnk") <= HAM_SHORTLIST)
-        .select("query_id", "neighbor_id", "hamming")
-    )
+    shortlist = _rank(
+        screened, HAM_SHORTLIST, "hamming", "neighbor_id", col="srnk"
+    ).select("query_id", "neighbor_id", "hamming")
     # raw vectors are read here only, for |queries| x shortlist rows
-    qv = F.broadcast(
-        v.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qn"),
-        )
-    )
-    cv = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        shortlist.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cosine"),
-        )
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "hamming", "rnk", "cosine")
-    )
+    return _topk(_rescore(shortlist, v, "cosine", "hamming"), "cosine", "hamming")
 
 
 # --- mutual nearest neighbors (bitext/paraphrase pair mining) -----------------------
@@ -1583,11 +1384,7 @@ WITH vb AS (
   SELECT vec_id, embedding, {norm_sql('embedding')} AS nrm
   FROM embeddings
 ),
-bands AS (
-  SELECT vb.*, t.tbl,
-         CASE t.tbl {" ".join(f"WHEN {t} THEN {sign_bucket_band_sql('embedding', t * ANN_LSH_BAND_BITS, ANN_LSH_BAND_BITS)}" for t in range(ANN_LSH_TABLES))} END AS bucket
-  FROM vb CROSS JOIN (SELECT unnest(range({ANN_LSH_TABLES})) AS tbl) t
-),
+{_bands_sql('vb')},
 cand AS (
   SELECT DISTINCT q.vec_id AS a, c.vec_id AS b
   FROM bands q JOIN bands c ON q.tbl = c.tbl AND q.bucket = c.bucket AND c.vec_id <> q.vec_id
@@ -1628,10 +1425,7 @@ def mutual_nearest_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall bounds pair recall: tools/lsh_frontier.py measures the (bits,
     tables) frontier; the miner inherits whichever operating point the
     table picks."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    v = track_persist(
-        emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    )
+    v = track_persist(_vectors(spark, sf_dir))
     slim = _band_rows(v)
     # Candidates are canonicalized to a < b BEFORE the distinct and each
     # unordered pair is scored ONCE; the reverse direction is re-derived by
@@ -1647,15 +1441,10 @@ def mutual_nearest_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a", "b")
         .distinct()
     )
-    x = v.select(F.col("vec_id").alias("a"), F.col("embedding").alias("xe"), F.col("nrm").alias("xn"))
-    y = v.select(F.col("vec_id").alias("b"), F.col("embedding").alias("ye"), F.col("nrm").alias("yn"))
     scored = (
-        fan_out(cand).join(x, "a")
-        .join(y, "b")
-        .select(
-            "a", "b",
-            (dot_fold(F.col("xe"), F.col("ye")) / (F.col("xn") * F.col("yn"))).alias("score"),
-        )
+        fan_out(cand).join(_side(v, "a", "x"), "a")
+        .join(_side(v, "b", "y"), "b")
+        .select("a", "b", _cos("x", "y").alias("score"))
     )
     # persist: the union's two legs are separate plan subtrees — without
     # materializing, the whole candidate+score pipeline runs twice. The
@@ -1703,27 +1492,7 @@ def _exact_and_lsh_topk(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
     scoring (_lsh_scored): an ANN *index* query must never pay the
     exhaustive scan; an index *audit* already does."""
     v = track_persist(_vectors(spark, sf_dir))
-    q = F.broadcast(
-        v.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qn"),
-        )
-    )
-    c = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    scored_all = track_persist(
-        q.join(c, F.col("neighbor_id") != F.col("query_id")).select(
-            "query_id",
-            "neighbor_id",
-            (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "score"
-            ),
-        )
-    )
+    scored_all = track_persist(_exact(v))
     exact_topk = _topk(scored_all)
 
     lsh_topk = _topk(
@@ -1735,10 +1504,7 @@ def _exact_and_lsh_topk(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
 @register(
     "ann_recall_report",
     oracle=f"""
-WITH v AS (
-  SELECT vec_id, embedding, {norm_sql('embedding')} AS nrm
-  FROM embeddings
-),
+WITH {_V_CTE},
 ex_scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          {dot_fold_sql('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS score
@@ -1749,11 +1515,7 @@ ex_ranked AS (
          row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rnk
   FROM ex_scored
 ),
-bands AS (
-  SELECT v.*, t.tbl,
-         CASE t.tbl {" ".join(f"WHEN {t} THEN {sign_bucket_band_sql('embedding', t * ANN_LSH_BAND_BITS, ANN_LSH_BAND_BITS)}" for t in range(ANN_LSH_TABLES))} END AS bucket
-  FROM v CROSS JOIN (SELECT unnest(range({ANN_LSH_TABLES})) AS tbl) t
-),
+{_bands_sql('v')},
 lsh_scored AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          {dot_fold_sql('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS score
@@ -1889,10 +1651,7 @@ def coreset_kcenter_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle) plus a 1-row argmax — the collect is the per-round scalar the
     iterative-query policy allows. O(K * n) total work, the standard
     distributed k-center layout."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    v = track_persist(
-        emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    )
+    v = track_persist(_vectors(spark, sf_dir))
     # Each greedy round is ONE map-only scan + 1-row argmax: the chosen
     # centers are already driver-side scalars (the per-round collect the
     # iterative-query policy allows), so their embeddings ride along in the
@@ -2000,43 +1759,20 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. Cross-engine exactness: scores are the shared left-to-right
     double fold (functions/vectors.py), votes are COUNTs, and the argmax is
     an integer-ordered row_number — no float ever reaches the output."""
-    v = _vectors(spark, sf_dir)
     lab = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("label").cast("long").alias("label")
     )
-    q = F.broadcast(
-        v.filter(F.col("vec_id") < N_KNN_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qn"),
-        )
-    )
-    c = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    scored = q.join(c, F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    topk = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= KNN_K)
-        .select("query_id", "neighbor_id")
+    scored = _exact(_vectors(spark, sf_dir), "score", N_KNN_QUERIES)
+    topk = _rank(scored, KNN_K, F.col("score").desc(), F.col("neighbor_id")).select(
+        "query_id", "neighbor_id"
     )
     votes = (
         topk.join(lab, topk.neighbor_id == lab.vec_id)
         .groupBy("query_id", "label")
         .agg(F.count(F.lit(1)).alias("votes"))
     )
-    wv = Window.partitionBy("query_id").orderBy(F.col("votes").desc(), F.col("label"))
-    pred = (
-        votes.withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") == 1)
-        .select("query_id", F.col("label").alias("predicted_label"), "votes")
+    pred = _rank(votes, 1, F.col("votes").desc(), F.col("label"), col="rn").select(
+        "query_id", F.col("label").alias("predicted_label"), "votes"
     )
     truth = lab.select(F.col("vec_id").alias("query_id"), F.col("label").alias("true_label"))
     return pred.join(F.broadcast(truth), "query_id").select(
@@ -2134,36 +1870,10 @@ def mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number(mmr desc, neighbor_id asc) pick; the 0.5 coefficients are
     exactly representable so the combine is deterministic IEEE in both
     engines."""
-    v = _vectors(spark, sf_dir)
-    q = F.broadcast(
-        v.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qn"),
-        )
-    )
-    c = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    scored = q.join(c, F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        (dot_fold(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-            "relevance"
-        ),
-        F.col("ce"),
-        F.col("cn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("relevance").desc(), F.col("neighbor_id")
-    )
-    short = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= MMR_SHORTLIST)
-        .select("query_id", "rn", "neighbor_id", "relevance", "ce", "cn")
-    )
+    scored = _exact(_vectors(spark, sf_dir), "relevance", N_QUERIES, "ce", "cn")
+    short = _rank(
+        scored, MMR_SHORTLIST, F.col("relevance").desc(), F.col("neighbor_id"), col="rn"
+    ).select("query_id", "rn", "neighbor_id", "relevance", "ce", "cn")
     # Collect each query's shortlist into ONE rank-ordered array (rn is
     # unique per query, so array_sort on the (rn, ...) struct restores the
     # relevance-desc/id-asc ranking regardless of collect_list order) and
@@ -2283,11 +1993,7 @@ truth AS (
            row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rnk
     FROM ex_scored) WHERE rnk <= {TOP_K}
 ),
-bands AS (
-  SELECT v.*, t.tbl,
-         CASE t.tbl {" ".join(f"WHEN {t} THEN {sign_bucket_band_sql('embedding', t * ANN_LSH_BAND_BITS, ANN_LSH_BAND_BITS)}" for t in range(ANN_LSH_TABLES))} END AS bucket
-  FROM v CROSS JOIN (SELECT unnest(range({ANN_LSH_TABLES})) AS tbl) t
-),
+{_bands_sql('v')},
 lsh_scored AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          {dot_fold_sql('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS score

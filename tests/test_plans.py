@@ -64,8 +64,25 @@ def test_whole_stage_codegen_covers_agg_pipeline(spark):
 
 
 def test_ann_broadcasts_query_side(spark):
-    plan = _plan(Q["ann_cosine_topk"](spark, SF), mode="simple")
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    """The exact scoring of every ANN variant broadcasts its query side and
+    never its corpus side: a re-rank fetches only shortlist rows by key, so
+    a broadcast hint over the neighbor_id-keyed vectors would ship the
+    whole corpus to every executor."""
+    for name in (
+        "ann_cosine_topk",
+        "ann_cosine_topk_lsh",
+        "ann_cosine_topk_truncated",
+        "ann_hamming_binary",
+        "ann_pq_adc_topk",
+        "ann_cosine_topk_ivf",
+    ):
+        df = Q[name](spark, SF)
+        plan = _plan(df, mode="simple")
+        assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, name
+        lines = _analyzed(df).splitlines()
+        hinted = [lines[i + 1] for i, line in enumerate(lines) if "ResolvedHint" in line]
+        assert any(" AS query_id#" in h and " AS qe#" in h for h in hinted), name
+        assert not any(" AS neighbor_id#" in h for h in hinted), name
 
 
 def test_fingerprint_ignores_lambdas_built_before(spark):

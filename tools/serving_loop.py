@@ -58,9 +58,12 @@ class _Coalescer:
     dispatcher thread drains the queue every ``window_ms`` (or when
     ``max_batch`` is waiting) and answers the whole batch with ONE
     ``poll_many_collected`` job, then hands each client its rows. One
-    Spark job per poll capped the 64-client sweep near 30 qps —
-    compile+schedule is the fixed cost — so the front amortizes it exactly
-    like BatchGetItem does for the reference's serving store."""
+    Spark job per poll capped the 64-client sweep near 30 qps. A poll runs
+    interpreted and compiles nothing, so the fixed cost is scheduling the
+    job alone; the front amortizes it exactly like BatchGetItem does for
+    the reference's serving store. It still pays: at sf0.1, 4 clients and
+    200 requests on 4 cores, coalesced polls measured p50 0.14–0.16 s and
+    23–26 qps against 0.22–0.27 s and 13–16 qps one job per poll."""
 
     def __init__(self, spark, agg, window_ms: float = 10.0, max_batch: int = 64):
         import threading

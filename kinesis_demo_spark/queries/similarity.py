@@ -323,6 +323,7 @@ def _nearest_cell(rows: DataFrame, cents: DataFrame, *keep: str) -> DataFrame:
         .agg(F.max(F.struct("s", "nc")).alias("m"))
     )
 
+
 _IVF_ORACLE = f"""
 WITH vb AS (
   SELECT vec_id, embedding, {norm_sql('embedding')} AS nrm FROM embeddings

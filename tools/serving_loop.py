@@ -62,8 +62,9 @@ class _Coalescer:
     interpreted and compiles nothing, so the fixed cost is scheduling the
     job alone; the front amortizes it exactly like BatchGetItem does for
     the reference's serving store. It still pays: at sf0.1, 4 clients and
-    200 requests on 4 cores, coalesced polls measured p50 0.14–0.16 s and
-    23–26 qps against 0.22–0.27 s and 13–16 qps one job per poll."""
+    200 requests on 4 cores, coalesced polls measured p50 0.13–0.16 s, p99
+    0.26–0.36 s and 23–27 qps against 0.17–0.27 s, 0.45–0.59 s and 13–20
+    qps one job per poll (two sets of 3 alternating runs per mode)."""
 
     def __init__(self, spark, agg, window_ms: float = 10.0, max_batch: int = 64):
         import threading

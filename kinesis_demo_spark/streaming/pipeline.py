@@ -43,13 +43,29 @@ def drain_state_partitions(spark: SparkSession, n: int = 4):
 
     A stateful streaming query fixes its state-store partition count at
     query start from this conf, and EVERY micro-batch then commits a delta
-    per partition per state store — for the outer interval join that is 4
-    stores x partitions x batches of pure file I/O, which dominates a small
-    finite drain (measured at sf0.1: 19 s at 32 partitions, 5.4 s at 8,
-    ~3.9 s at 4 in the r13 three-way A/B — identical results; state
-    partitioning never affects values). Default 4; a drain whose per-batch
-    COMPUTE parallelism matters more than its commit count passes a higher
-    n explicitly — the one current case is the applyInPandasWithState
+    per partition per state store (4 stores for the outer interval join).
+    The bytes are small; what each commit costs is process starts. Without
+    libhadoop, every file Hadoop's local file system creates forks one
+    `chmod`, about 4 per partition per batch (the delta and its checksum
+    files), and Spark's default FileContext checkpoint manager forked
+    about 4 `readlink` per file on top. Measured on perfbench's 24-batch
+    serve_and_drain drain (10k Zipf rows per batch, movement_aggregates,
+    10 s watermark, noop sink) at 4 cores, median of 3 alternating runs
+    per n, with the FileSystem-API manager ``get_spark`` sets:
+
+    - n=2: batch p50 261 ms, state commit 2 ms, 365 forks per drain;
+    - n=4: batch p50 248 ms, state commit 7 ms, 567 forks;
+    - n=8: batch p50 287 ms, state commit 17 ms, 971 forks.
+
+    (State commit is summed over the partition tasks.) One run per n under
+    the FileContext manager read 540 / 421 / 514 ms and 1,781 / 2,783 /
+    4,787 forks, so there the commit dominated: the r13 three-way A/B of
+    the outer join at sf0.1 took 19 s at 32 partitions, 5.4 s at 8 and
+    ~3.9 s at 4, with identical results (state partitioning never affects
+    values). Now 2 and 4 are within run-to-run noise and 8 pays for its
+    forks. Default 4; a drain whose per-batch COMPUTE parallelism matters
+    more than its commit count passes a higher n explicitly — the one
+    current case is the applyInPandasWithState
     sessionizer (queries/sessions.py), which runs one Python worker per
     partition and drains fastest at n=8 (r13 three-way A/B: 2.5 s at 8 vs
     3.1 at 4 vs 4.6 at 2). Production streaming jobs size this explicitly

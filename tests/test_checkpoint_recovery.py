@@ -11,7 +11,12 @@ import shutil
 from pyspark.sql import functions as F
 
 from kinesis_demo_spark.io import load_table
-from kinesis_demo_spark.streaming.pipeline import run_foreach_batch_upsert
+from kinesis_demo_spark.plans.movements import movement_aggregates
+from kinesis_demo_spark.streaming.pipeline import (
+    drain_state_partitions,
+    run_foreach_batch_upsert,
+    stream_events,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -57,6 +62,76 @@ def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
         .select("user_id", F.col("w.start").alias("window_start"), "cnt", "sum_value")
     )
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in batch.collect()}
+
+
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+)
+
+
+def test_checkpoint_from_the_file_context_manager_resumes(spark, tmp_path):
+    """A checkpoint written by Spark's default FileContext checkpoint manager
+    resumes under the session's FileSystem-API manager: the second half of
+    the file sequence drains from the same offsets and state, the last
+    emitted count per window equals the batch aggregate of every file, and
+    every state delta keeps both checksum files (Spark's ``N.delta.crc``
+    and Hadoop's ``.N.delta.crc`` sidecar), whichever manager wrote it."""
+    rows = load_table(spark, SF, "events").orderBy("ts", "event_id").collect()
+    bounds = [len(rows) * k // 4 for k in range(5)]
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    ckpt = str(tmp_path / "ckpt")
+    emitted = {}
+
+    def keep_latest(delta, batch_id):
+        for r in delta.select("user_id", "window_start", "cnt").collect():
+            emitted[(r.user_id, r.window_start)] = r.cnt
+
+    def run():
+        with drain_state_partitions(spark, 2):
+            q = (
+                movement_aggregates(
+                    stream_events(spark, src, max_files_per_trigger=1, glob="*.parquet")
+                    .withWatermark("ts", "10 seconds"))
+                .writeStream.foreachBatch(keep_latest)
+                .outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+    session_manager = spark.conf.get(_MANAGER_CONF)
+    for seq in (0, 1):
+        _copy_half(spark, rows, src, bounds[seq], bounds[seq + 1], seq)
+    spark.conf.set(_MANAGER_CONF, _FILE_CONTEXT_MANAGER)
+    try:
+        run()
+    finally:
+        # back to the session's own manager; unset would fall back to
+        # Spark's default, which is the FileContext manager
+        spark.conf.set(_MANAGER_CONF, session_manager)
+    first = dict(emitted)
+    assert first
+
+    for seq in (2, 3):
+        _copy_half(spark, rows, src, bounds[seq], bounds[seq + 1], seq)
+    run()
+
+    batch = movement_aggregates(spark.createDataFrame(rows)).select("user_id", "window_start", "cnt")
+    assert emitted == {(r.user_id, r.window_start): r.cnt for r in batch.collect()}
+    assert emitted != first  # the second run resumed and emitted the new files' windows
+
+    deltas = glob.glob(os.path.join(ckpt, "state", "0", "*", "*.delta"))
+    assert {int(os.path.basename(d).split(".")[0]) for d in deltas} >= {1, 2, 3, 4}
+    for d in deltas:
+        head, name = os.path.split(d)
+        assert os.path.exists(d + ".crc"), d  # Spark's checkpoint checksum
+        assert os.path.exists(os.path.join(head, f".{name}.crc")), d  # Hadoop's sidecar
 
 
 def test_python_stream_source_restart_is_exactly_once(spark, tmp_path):

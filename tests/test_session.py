@@ -39,3 +39,17 @@ def test_driver_heap_env_override_wins(monkeypatch):
 
 def test_engine_session_turns_off_call_site_capture(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_engine_session_checkpoints_through_the_file_system_manager(spark, tmp_path):
+    """A local checkpoint resolves to the FileSystem-API checkpoint manager,
+    whose rename forks no process on a host without libhadoop."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )

@@ -293,10 +293,7 @@ def test_serving_loop_concurrent_polls_under_budget(spark):
     smoke scale: concurrent cursor-walking polls against the cached serving
     table all succeed, stats are well-formed, and every request lands far
     under the reference's 2 s refresh budget."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/tools")
-    from serving_loop import run_serving_loop
+    from tools.serving_loop import run_serving_loop
 
     # budget 10 s, not the production 2 s: this asserts the harness plumbing
     # (concurrent actions, cursor walk, invariant check) — pytest runs share
@@ -474,33 +471,60 @@ def test_available_now_trigger_lives_only_in_the_drivers():
 def test_steady_tail_summarizes_progress_after_warm_up():
     """The streaming tools' shared steady-tail summary (no Spark): the first
     third of the progress dicts is warm-up and never counted; an empty tail
-    reports no batch or state figures instead of indexing an empty list."""
+    reports no batch, phase or state figures instead of indexing an empty
+    list. Phase and state-commit columns are medians over the tail."""
     from tools.stream_throughput import steady_tail
 
-    def progress(rows, ms, state_rows=None):
+    def progress(rows, ms, state_rows=None, phase_ms=None):
         p = {"numInputRows": rows, "batchDuration": ms}
+        if phase_ms is not None:
+            p["durationMs"] = {
+                "latestOffset": phase_ms,
+                "addBatch": 10 * phase_ms,
+                "walCommit": phase_ms + 1,
+                "commitOffsets": phase_ms + 2,
+                "triggerExecution": ms,
+            }
         if state_rows is not None:
-            p["stateOperators"] = [{"numRowsTotal": state_rows, "memoryUsedBytes": 10 * state_rows}]
+            p["stateOperators"] = [{
+                "numRowsTotal": state_rows,
+                "memoryUsedBytes": 10 * state_rows,
+                "commitTimeMs": 3 * phase_ms,
+            }]
         return p
 
-    warm = [progress(1, 9000, 999)]
-    steady = [progress(1000, 500, 40), progress(3000, 1500, 70)]
+    warm = [progress(1, 9000, 999, 900)]
+    steady = [progress(1000, 500, 40, 4), progress(3000, 1500, 70, 8),
+              progress(2000, 1000, 50, 30)]
     assert steady_tail(warm + steady) == {
         "achieved_rows_s": 2000,
-        "batches": 2,
-        "batch_ms_p50": 1500,
+        "batches": 3,
+        "batch_ms_p50": 1000,
         "batch_ms_p99": 1500,
         "batch_ms_max": 1500,
+        "latest_offset_ms_p50": 8,
+        "add_batch_ms_p50": 80,
+        "wal_commit_ms_p50": 9,
+        "commit_offsets_ms_p50": 10,
+        "state_commit_ms_p50": 24,
         "state_rows_total": 70,
         "state_memory_bytes": 700,
     }
-    assert steady_tail([progress(10, 100)] * 3)["state_rows_total"] is None
+    stateless = steady_tail([progress(10, 100)] * 3)
+    assert stateless["state_rows_total"] is None
+    assert stateless["state_commit_ms_p50"] is None
+    assert stateless["add_batch_ms_p50"] is None
     assert steady_tail([]) == {
         "achieved_rows_s": 0,
         "batches": 0,
         "batch_ms_p50": None,
         "batch_ms_p99": None,
         "batch_ms_max": None,
+        "latest_offset_ms_p50": None,
+        "add_batch_ms_p50": None,
+        "wal_commit_ms_p50": None,
+        "commit_offsets_ms_p50": None,
+        "state_commit_ms_p50": None,
         "state_rows_total": None,
         "state_memory_bytes": None,
     }

@@ -29,7 +29,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -43,11 +46,23 @@ from kinesis_demo_spark.streaming.pipeline import (
 )
 
 
+# The ``durationMs`` phases the steady tail reports a median of, keyed as
+# perfbench's ``stream.*`` metrics name them.
+_PHASES = {
+    "latestOffset": "latest_offset",
+    "addBatch": "add_batch",
+    "walCommit": "wal_commit",
+    "commitOffsets": "commit_offsets",
+}
+
+
 def steady_tail(progresses: list[dict]) -> dict:
     """Summarize a query's progress dicts over the steady tail — every batch
     after the first third (stream warm-up): achieved rows/s, batch-duration
-    percentiles and peak state size. An empty tail reports 0 rows/s and
-    None for every batch and state figure."""
+    percentiles, the median of each phase in ``_PHASES`` and of the state
+    operator's ``commitTimeMs`` (summed over its partition tasks, so not
+    wall time), and peak state size. An empty tail reports 0 rows/s and
+    None for every batch, phase and state figure."""
     tail = progresses[len(progresses) // 3 :]
     rows = sum(p["numInputRows"] for p in tail)
     dur_s = sum(p["batchDuration"] for p in tail) / 1000.0
@@ -56,6 +71,9 @@ def steady_tail(progresses: list[dict]) -> dict:
     def pct(f):
         return batch_ms[min(len(batch_ms) - 1, int(f * len(batch_ms)))] if batch_ms else None
 
+    def median(xs):
+        return statistics.median(xs) if xs else None
+
     st = [p["stateOperators"][0] for p in tail if p.get("stateOperators")]
     return {
         "achieved_rows_s": round(rows / dur_s) if dur_s else 0,
@@ -63,6 +81,10 @@ def steady_tail(progresses: list[dict]) -> dict:
         "batch_ms_p50": pct(0.50),
         "batch_ms_p99": pct(0.99),
         "batch_ms_max": batch_ms[-1] if batch_ms else None,
+        **{f"{key}_ms_p50": median([p["durationMs"][ph] for p in tail
+                                    if ph in p.get("durationMs", {})])
+           for ph, key in _PHASES.items()},
+        "state_commit_ms_p50": median([s["commitTimeMs"] for s in st]),
         "state_rows_total": max(s["numRowsTotal"] for s in st) if st else None,
         "state_memory_bytes": max(s["memoryUsedBytes"] for s in st) if st else None,
     }
@@ -116,10 +138,13 @@ def seal(out_path: str) -> dict:
     sf1-scale key cardinality (15 000 distinct users, the /tmp/sf1 events
     fixture's cardinality). A rung is SUSTAINED when the steady tail
     achieves >= 95% of offered AND p99 batch duration stays under the 1 s
-    trigger. Records per rung: achieved rows/s, p50/p99/max batch ms, state
-    rows and state memory bytes (the per-window collect_list state the
+    trigger. Records per rung: achieved rows/s, p50/p99/max batch ms, the
+    median of each micro-batch phase and of the state commit, state rows
+    and state memory bytes (the per-window collect_list state the
     reference's DynamoDB upsert held as items). The ceiling is the last
-    sustained rung."""
+    sustained rung; the record names the core count it ran on. Each rung
+    starts from a fresh checkpoint: a reused one would resume the previous
+    run's offsets, state and state-partition count."""
     from kinesis_demo_spark.plans.movements import movement_aggregates
 
     spark = get_spark("stream-throughput-seal")
@@ -127,6 +152,7 @@ def seal(out_path: str) -> dict:
     rungs = []
     ceiling = None
     for offered in (10_000, 50_000, 100_000, 200_000, 400_000, 800_000):
+        ckpt = tempfile.mkdtemp(prefix=f"stream_seal_ckpt_{offered}_")
         events = stream_synthetic_events(
             spark, rows_per_second=offered, n_users=15_000
         ).withWatermark("ts", "10 seconds")
@@ -135,12 +161,13 @@ def seal(out_path: str) -> dict:
             agg.writeStream.format("noop")
             .outputMode("update")
             .trigger(processingTime="1 second")
-            .option("checkpointLocation", f"/tmp/stream_seal_ckpt_{offered}")
+            .option("checkpointLocation", ckpt)
             .start()
         )
         time.sleep(25)
         progresses = [json.loads(p.json) for p in q.recentProgress]
         q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
         rung = {"offered_rows_s": offered, **steady_tail(progresses)}
         if not rung["batches"]:
             break
@@ -156,6 +183,7 @@ def seal(out_path: str) -> dict:
         "metric": "stream_movs_state_throughput",
         "shape": "rate -> movement_aggregates (count + sorted collect_list state), "
                  "watermark 10s, trigger 1s, update mode, n_users=15000 (sf1 events cardinality)",
+        "cores": spark.sparkContext.defaultParallelism,
         "ceiling_rows_s": ceiling["achieved_rows_s"] if ceiling else 0,
         "ceiling_batch_ms_p99": ceiling["batch_ms_p99"] if ceiling else None,
         "ceiling_state_rows": ceiling["state_rows_total"] if ceiling else None,

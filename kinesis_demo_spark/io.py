@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import from_arrow_type
 
 from .schemas import TABLES
+from .session import CHECKPOINT_MANAGER_CONF, RUNTIME_CONFS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
@@ -33,8 +34,8 @@ _EVENT_TS_COLS = {"events": ("ts",)}
 
 
 def ensure_runtime_confs(spark: SparkSession) -> None:
-    """Runtime-settable confs the engine's plans depend on, applied
-    defensively in case the caller (e.g. the driver harness) built the
+    """Apply ``session.RUNTIME_CONFS``, the runtime confs the engine's plans
+    depend on, in case the caller (e.g. the driver harness) built the
     session without them. The session timezone is a hard requirement —
     event-time window math must match the DuckDB oracle's naive (UTC)
     timestamps, and a wrong value silently shifts every window boundary.
@@ -45,25 +46,16 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     fixture makes the scan itself fail (Spark rejects nanos timestamps
     without it); ``load_table`` detects that case in the footer, before any
     scan, and raises an actionable error naming the conf instead of Spark's
-    bare parquet-type message."""
-    best_effort = {
-        # TIMESTAMP(NANOS) fixtures scan as int64 (normalized below) instead
-        # of failing outright.
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # naive TIMESTAMP(MICROS) fixtures scan as TIMESTAMP_LTZ directly
-        # (UTC session = same instants) instead of TIMESTAMP_NTZ.
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    }
-    for key, want in best_effort.items():
+    bare parquet-type message. The checkpoint manager is set only where the
+    session leaves it unset: a manager the caller chose explicitly stays."""
+    for key, want in RUNTIME_CONFS.items():
         try:
+            if key == CHECKPOINT_MANAGER_CONF and spark.conf.get(key, None) is not None:
+                continue
             spark.conf.set(key, want)
         except Exception:
-            pass  # locked session — load_table's normalization covers it
-    want_tz = "UTC"
-    try:
-        spark.conf.set("spark.sql.session.timeZone", want_tz)
-    except Exception:
-        pass  # locked session — verified below
+            pass  # locked: load_table's normalization covers the parquet confs
+    want_tz = RUNTIME_CONFS["spark.sql.session.timeZone"]
     try:
         have = spark.conf.get("spark.sql.session.timeZone", None)
     except Exception:

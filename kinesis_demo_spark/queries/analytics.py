@@ -17,7 +17,7 @@ below with an error-bound test in tests/test_analytics.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import h60, h60_sql
@@ -484,9 +484,73 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return est.join(exact, "user_id").select("user_id", "exact_cnt", "cms_est")
 
 
-@register(
-    "timeseries_hourly_gapfill",
-    oracle="""
+# --- hourly-series kernels (the timeseries family) ------------------------------
+
+
+def _hour(ntz: bool, of=lambda ts: ts) -> Column:
+    """The hour of ``of(ts)``: ``date_trunc`` of the instant, or with ``ntz``
+    the TIMESTAMP_NTZ wall-clock hour (``trunc_hour_ntz``), which a DST
+    session zone can neither shift nor split."""
+    ts = F.col("ts").cast("timestamp_ntz") if ntz else F.col("ts")
+    return trunc_hour_ntz(of(ts)) if ntz else F.date_trunc("hour", of(ts))
+
+
+def _hourly(ev: DataFrame, ntz: bool = False, **aggs: Column) -> DataFrame:
+    """The per-user hourly rollup: one (user_id, hour, *aggs) row per hour
+    that holds an event — one map-side-combinable hash aggregate."""
+    return ev.groupBy("user_id", _hour(ntz).alias("hour")).agg(
+        *[c.alias(name) for name, c in aggs.items()]
+    )
+
+
+def _dense_hourly(ev: DataFrame, ntz: bool = False, **aggs: Column) -> DataFrame:
+    """The dense hourly series: one (user_id, hour, *aggs) row for EVERY
+    hour from the user's first event to their last, an empty hour's
+    aggregates zero-filled. Per-user bounds (one partial agg) explode
+    through ``sequence(h0, h1, interval 1 hour)`` into the grid, which a
+    LEFT join on (user_id, hour) fills from ``_hourly``. The grid is
+    Theta(users x span): bounded by the time span, never by event count.
+    Both shuffles hash on user_id."""
+    bounds = ev.groupBy("user_id").agg(
+        _hour(ntz, F.min).alias("h0"), _hour(ntz, F.max).alias("h1")
+    )
+    grid = bounds.select(
+        "user_id", F.explode(F.expr("sequence(h0, h1, interval 1 hour)")).alias("hour")
+    )
+    return grid.join(_hourly(ev, ntz, **aggs), ["user_id", "hour"], "left").select(
+        "user_id", "hour", *[F.coalesce(name, F.lit(0)).alias(name) for name in aggs]
+    )
+
+
+def _pearson(pairs: DataFrame) -> DataFrame:
+    """(user_a, user_b, n_hours, corr): the Pearson correlation of each
+    pair's co-observed values ``nx``, ``ny``. The power sums are BIGINT
+    (map-side-combined partials) and the correlation is one fixed IEEE
+    expression, the same in both engines, so it is value-hash exact. A pair
+    where either side has zero variance is dropped: its correlation is
+    undefined."""
+    sums = pairs.groupBy("user_a", "user_b").agg(
+        F.count(F.lit(1)).alias("n_hours"),
+        F.sum("nx").alias("sx"),
+        F.sum("ny").alias("sy"),
+        F.sum(F.col("nx") * F.col("nx")).alias("sxx"),
+        F.sum(F.col("ny") * F.col("ny")).alias("syy"),
+        F.sum(F.col("nx") * F.col("ny")).alias("sxy"),
+    )
+    n = F.col("n_hours")
+    denx = n * F.col("sxx") - F.col("sx") * F.col("sx")
+    deny = n * F.col("syy") - F.col("sy") * F.col("sy")
+    corr = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double") / (
+        F.sqrt(denx.cast("double")) * F.sqrt(deny.cast("double"))
+    )
+    return sums.filter((denx > 0) & (deny > 0)).select(
+        "user_a", "user_b", "n_hours", corr.alias("corr")
+    )
+
+
+# The DuckDB side of ``_dense_hourly``'s grid: every dense-series oracle
+# opens with these two CTEs.
+_HOURLY_GRID_SQL = """
 WITH bounds AS (
   SELECT user_id, date_trunc('hour', min(ts)) AS h0, date_trunc('hour', max(ts)) AS h1
   FROM events GROUP BY user_id
@@ -494,7 +558,12 @@ WITH bounds AS (
 grid AS (
   SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour FROM bounds
 ),
-agg AS (
+"""
+
+
+@register(
+    "timeseries_hourly_gapfill",
+    oracle=_HOURLY_GRID_SQL + """agg AS (
   SELECT user_id, date_trunc('hour', ts) AS hour,
          count(*) AS n_events,
          CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
@@ -513,12 +582,10 @@ def timeseries_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline consumes must be gap-free; sparse rollups silently drop the
     zeros that carry the signal).
 
-    Spark side: per-user bounds (one partial agg), ``sequence(h0, h1,
-    interval 1 hour)`` exploded into the grid — grid size is bounded by the
-    time span, never by event count — then a LEFT join back to the hourly
-    aggregate on (user_id, hour). Both shuffles hash on user_id; at 100 TB
-    the grid side is tiny (|users| x |hours|) relative to the fact scan, and
-    the decimal sums keep the join's zero-fill arithmetic bit-exact.
+    Spark side: ``_dense_hourly`` over the count and the decimal value sum.
+    At 100 TB the grid side is tiny (|users| x |hours|) relative to the
+    fact scan, and the decimal sums keep the join's zero-fill arithmetic
+    bit-exact.
 
     The DENSE grid is this query's contract (VERDICT r9 #8): the output is
     one row per (user, hour-in-span) — Theta(users x span), 11x the
@@ -530,25 +597,10 @@ def timeseries_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     timeseries_gapfill_runs below — the run-length-encoded twin whose
     output is Theta(non-empty hours) and whose dense expansion is proven
     equal to this query (tests/test_analytics.py)."""
-    ev = _events(spark, sf_dir)
-    hour = F.date_trunc("hour", F.col("ts"))
-    bounds = ev.groupBy("user_id").agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        "user_id",
-        F.explode(F.expr("sequence(h0, h1, interval 1 hour)")).alias("hour"),
-    )
-    agg = ev.groupBy("user_id", hour.alias("hour")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-    )
-    return grid.join(agg, ["user_id", "hour"], "left").select(
-        "user_id",
-        "hour",
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        F.coalesce("sum_value", F.lit(0.0)).alias("sum_value"),
+    return _dense_hourly(
+        _events(spark, sf_dir),
+        n_events=F.count(F.lit(1)),
+        sum_value=F.sum(F.col("value").cast(D2)).cast("double"),
     )
 
 
@@ -591,16 +643,13 @@ def timeseries_gapfill_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap rows' hour arithmetic is integer-exact interval math; both engines
     emit identical timestamps and BIGINT run lengths, so the whole encoding
     value-hash-checks."""
-    from pyspark.sql.window import Window as W
-
-    ev = _events(spark, sf_dir)
-    hour = F.date_trunc("hour", F.col("ts"))
-    agg = ev.groupBy("user_id", hour.alias("hour")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+    agg = _hourly(
+        _events(spark, sf_dir),
+        n_events=F.count(F.lit(1)),
+        sum_value=F.sum(F.col("value").cast(D2)).cast("double"),
     )
     nn = agg.withColumn(
-        "nxt", F.lead("hour").over(W.partitionBy("user_id").orderBy("hour"))
+        "nxt", F.lead("hour").over(Window.partitionBy("user_id").orderBy("hour"))
     )
     islands = nn.select(
         "user_id",
@@ -630,17 +679,9 @@ def timeseries_gapfill_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 TS_SIM_TOP_USERS = 20
 
 
-@register(
-    "timeseries_user_similarity",
-    oracle=f"""
-WITH bounds AS (
-  SELECT user_id, date_trunc('hour', min(ts)) AS h0, date_trunc('hour', max(ts)) AS h1
-  FROM events GROUP BY user_id
-),
-grid AS (
-  SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour FROM bounds
-),
-agg AS (
+# The similarity pair's DuckDB text: the dense hourly count series (``series``)
+# and the Pearson score of the power sums in ``pairs`` (``_pearson``).
+_HOURLY_COUNTS_SQL = _HOURLY_GRID_SQL + """agg AS (
   SELECT user_id, date_trunc('hour', ts) AS hour, count(*) AS n_events
   FROM events GROUP BY 1, 2
 ),
@@ -648,7 +689,20 @@ series AS (
   SELECT g.user_id, g.hour, coalesce(a.n_events, 0) AS n
   FROM grid g LEFT JOIN agg a ON a.user_id = g.user_id AND a.hour = g.hour
 ),
-active AS (
+"""
+_PEARSON_SQL = """
+SELECT user_a, user_b, n_hours,
+       CAST(n_hours * sxy - sx * sy AS DOUBLE)
+         / (sqrt(CAST(n_hours * sxx - sx * sx AS DOUBLE))
+            * sqrt(CAST(n_hours * syy - sy * sy AS DOUBLE))) AS corr
+FROM pairs
+WHERE (n_hours * sxx - sx * sx) > 0 AND (n_hours * syy - sy * sy) > 0
+"""
+
+
+@register(
+    "timeseries_user_similarity",
+    oracle=_HOURLY_COUNTS_SQL + f"""active AS (
   SELECT user_id FROM (
     SELECT user_id, sum(n) AS total FROM series GROUP BY user_id
     ORDER BY total DESC, user_id LIMIT {TS_SIM_TOP_USERS}
@@ -665,19 +719,12 @@ pairs AS (
   WHERE x.user_id IN (SELECT user_id FROM active)
     AND y.user_id IN (SELECT user_id FROM active)
   GROUP BY 1, 2
-)
-SELECT user_a, user_b, n_hours,
-       CAST(n_hours * sxy - sx * sy AS DOUBLE)
-         / (sqrt(CAST(n_hours * sxx - sx * sx AS DOUBLE))
-            * sqrt(CAST(n_hours * syy - sy * sy AS DOUBLE))) AS corr
-FROM pairs
-WHERE (n_hours * sxx - sx * sx) > 0 AND (n_hours * syy - sy * sy) > 0
-""",
+)""" + _PEARSON_SQL,
 )
 def timeseries_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series similarity search over user activity patterns (the
     stream-similarity question of PAPERS.md's EDBT'19 entry, Spark-first):
-    align every user's DENSE hourly event-count series (the gap-fill grid —
+    align every user's DENSE hourly event-count series (``_dense_hourly`` —
     zero hours carry signal for correlation), prune candidates to the
     top-{TS_SIM_TOP_USERS} most-active users (TakeOrderedAndProject, the same
     prune-then-exact-score shape the ANN family uses), and compute exact
@@ -691,7 +738,6 @@ def timeseries_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``timeseries_user_similarity_bucketed`` below (activity-signature
     banding, the LSH analogue — no top-K gate, no all-pairs join)."""
     ev = _events(spark, sf_dir)
-    hour = F.date_trunc("hour", F.col("ts"))
     # PRUNE FIRST (r10, closes the sealed scaling line's worst exponent —
     # 0.86 over sf0.1->1): a user's series total equals their raw event
     # count (the grid's zero hours add nothing), so the top-K gate needs
@@ -706,43 +752,10 @@ def timeseries_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(TS_SIM_TOP_USERS)
         .select("user_id")
     )
-    evk = ev.join(F.broadcast(active), "user_id")
-    bounds = evk.groupBy("user_id").agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        "user_id", F.explode(F.expr("sequence(h0, h1, interval 1 hour)")).alias("hour")
-    )
-    agg = evk.groupBy("user_id", hour.alias("hour")).agg(F.count(F.lit(1)).alias("n_events"))
-    s = grid.join(agg, ["user_id", "hour"], "left").select(
-        "user_id", "hour", F.coalesce("n_events", F.lit(0)).alias("n")
-    )
-    x = s.select(F.col("user_id").alias("user_a"), "hour", F.col("n").alias("nx"))
-    y = s.select(F.col("user_id").alias("user_b"), "hour", F.col("n").alias("ny"))
-    pairs = (
-        x.join(y, "hour")
-        .filter(F.col("user_a") < F.col("user_b"))
-        .groupBy("user_a", "user_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_hours"),
-            F.sum("nx").alias("sx"),
-            F.sum("ny").alias("sy"),
-            F.sum(F.col("nx") * F.col("nx")).alias("sxx"),
-            F.sum(F.col("ny") * F.col("ny")).alias("syy"),
-            F.sum(F.col("nx") * F.col("ny")).alias("sxy"),
-        )
-    )
-    n = F.col("n_hours")
-    denx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    deny = n * F.col("syy") - F.col("sy") * F.col("sy")
-    corr = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double") / (
-        F.sqrt(denx.cast("double")) * F.sqrt(deny.cast("double"))
-    )
-    return (
-        pairs.filter((denx > 0) & (deny > 0))
-        .select("user_a", "user_b", "n_hours", corr.alias("corr"))
-    )
+    s = _dense_hourly(ev.join(F.broadcast(active), "user_id"), n_events=F.count(F.lit(1)))
+    x = s.select(F.col("user_id").alias("user_a"), "hour", F.col("n_events").alias("nx"))
+    y = s.select(F.col("user_id").alias("user_b"), "hour", F.col("n_events").alias("ny"))
+    return _pearson(x.join(y, "hour").filter(F.col("user_a") < F.col("user_b")))
 
 
 # Full-corpus candidate generation for the time-series similarity search —
@@ -771,23 +784,7 @@ _SIG_BANDS_SQL = " ".join(
 
 @register(
     "timeseries_user_similarity_bucketed",
-    oracle=f"""
-WITH bounds AS (
-  SELECT user_id, date_trunc('hour', min(ts)) AS h0, date_trunc('hour', max(ts)) AS h1
-  FROM events GROUP BY user_id
-),
-grid AS (
-  SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour FROM bounds
-),
-agg AS (
-  SELECT user_id, date_trunc('hour', ts) AS hour, count(*) AS n_events
-  FROM events GROUP BY 1, 2
-),
-series AS (
-  SELECT g.user_id, g.hour, coalesce(a.n_events, 0) AS n
-  FROM grid g LEFT JOIN agg a ON a.user_id = g.user_id AND a.hour = g.hour
-),
-prof AS (
+    oracle=_HOURLY_COUNTS_SQL + f"""prof AS (
   SELECT user_id, {_PROF_COLS_SQL} FROM events GROUP BY user_id
 ),
 sigs AS (
@@ -811,14 +808,7 @@ pairs AS (
   JOIN series x ON x.user_id = c.user_a
   JOIN series y ON y.user_id = c.user_b AND y.hour = x.hour
   GROUP BY 1, 2
-)
-SELECT user_a, user_b, n_hours,
-       CAST(n_hours * sxy - sx * sy AS DOUBLE)
-         / (sqrt(CAST(n_hours * sxx - sx * sx AS DOUBLE))
-            * sqrt(CAST(n_hours * syy - sy * sy AS DOUBLE))) AS corr
-FROM pairs
-WHERE (n_hours * sxx - sx * sx) > 0 AND (n_hours * syy - sy * sy) > 0
-""",
+)""" + _PEARSON_SQL,
 )
 def timeseries_user_similarity_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL-CORPUS time-series similarity search — the scale path that
@@ -835,18 +825,7 @@ def timeseries_user_similarity_bucketed(spark: SparkSession, sf_dir: str) -> Dat
     arithmetic as the top-K variant, so the approximate path keeps a
     value-hash-exact DuckDB oracle."""
     ev = _events(spark, sf_dir)
-    hour = F.date_trunc("hour", F.col("ts"))
-    bounds = ev.groupBy("user_id").agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        "user_id", F.explode(F.expr("sequence(h0, h1, interval 1 hour)")).alias("hour")
-    )
-    agg = ev.groupBy("user_id", hour.alias("hour")).agg(F.count(F.lit(1)).alias("n_events"))
-    series = grid.join(agg, ["user_id", "hour"], "left").select(
-        "user_id", "hour", F.coalesce("n_events", F.lit(0)).alias("n")
-    )
+    series = _dense_hourly(ev, n_events=F.count(F.lit(1)))
 
     hod = F.hour("ts")
     prof = ev.groupBy("user_id").agg(
@@ -883,31 +862,9 @@ def timeseries_user_similarity_bucketed(spark: SparkSession, sf_dir: str) -> Dat
         .select("user_a", "user_b")
         .distinct()
     )
-    x = series.select(F.col("user_id").alias("user_a"), "hour", F.col("n").alias("nx"))
-    y = series.select(F.col("user_id").alias("user_b"), "hour", F.col("n").alias("ny"))
-    pairs = (
-        cand.join(x, "user_a")
-        .join(y, ["user_b", "hour"])
-        .groupBy("user_a", "user_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_hours"),
-            F.sum("nx").alias("sx"),
-            F.sum("ny").alias("sy"),
-            F.sum(F.col("nx") * F.col("nx")).alias("sxx"),
-            F.sum(F.col("ny") * F.col("ny")).alias("syy"),
-            F.sum(F.col("nx") * F.col("ny")).alias("sxy"),
-        )
-    )
-    n = F.col("n_hours")
-    denx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    deny = n * F.col("syy") - F.col("sy") * F.col("sy")
-    corr = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double") / (
-        F.sqrt(denx.cast("double")) * F.sqrt(deny.cast("double"))
-    )
-    return (
-        pairs.filter((denx > 0) & (deny > 0))
-        .select("user_a", "user_b", "n_hours", corr.alias("corr"))
-    )
+    x = series.select(F.col("user_id").alias("user_a"), "hour", F.col("n_events").alias("nx"))
+    y = series.select(F.col("user_id").alias("user_b"), "hour", F.col("n_events").alias("ny"))
+    return _pearson(cand.join(x, "user_a").join(y, ["user_b", "hour"]))
 
 
 # --- snapshot diff (CDC over the keyed serving store) ---------------------------
@@ -3329,15 +3286,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_autocorr_components",
-    oracle="""
-WITH bounds AS (
-  SELECT user_id, date_trunc('hour', min(ts)) AS h0, date_trunc('hour', max(ts)) AS h1
-  FROM events GROUP BY user_id
-),
-grid AS (
-  SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour FROM bounds
-),
-agg AS (
+    oracle=_HOURLY_GRID_SQL + """agg AS (
   SELECT user_id, date_trunc('hour', ts) AS hour,
          CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS x
   FROM events GROUP BY 1, 2
@@ -3394,25 +3343,14 @@ def ts_autocorr_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE expression per row, identical on both engines — no libm, no
     order-dependent accumulation, value-hash exact.
 
-    Scale shape: gapfilled grid as in timeseries_hourly_gapfill (grid is
-    |users| x |hours|, independent of event count), one per-user window for
+    Scale shape: the ``_dense_hourly`` grid (|users| x |hours|,
+    independent of event count), one per-user window for
     the two lags (partition-local sort, no global ordering), one hash
     aggregate for the sufficient statistics. Constant-width state per user;
     at 100 TB the lag window's input is the already-downsampled hourly
     series, not the raw stream."""
-    ev = _events(spark, sf_dir)
-    bounds = ev.groupBy("user_id").agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    grid = bounds.select(
-        "user_id", F.explode(F.expr("sequence(h0, h1, interval 1 hour)")).alias("hour")
-    )
-    agg = ev.groupBy("user_id", F.date_trunc("hour", F.col("ts")).alias("hour")).agg(
-        (F.sum(F.col("value").cast(D2)) * 100).cast("long").alias("x")
-    )
-    series = grid.join(agg, ["user_id", "hour"], "left").select(
-        "user_id", "hour", F.coalesce("x", F.lit(0)).alias("x")
+    series = _dense_hourly(
+        _events(spark, sf_dir), x=(F.sum(F.col("value").cast(D2)) * 100).cast("long")
     )
     w = Window.partitionBy("user_id").orderBy("hour")
     lagged = series.select(
@@ -4460,15 +4398,7 @@ DECOMP_MA = 25          # centered moving-average width (12 back, 12 ahead)
 DECOMP_PERIOD = 24      # hour-of-day seasonality
 
 
-_DECOMP_ORACLE = f"""
-WITH bounds AS (
-  SELECT user_id, date_trunc('hour', min(ts)) AS h0, date_trunc('hour', max(ts)) AS h1
-  FROM events GROUP BY user_id
-),
-grid AS (
-  SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour FROM bounds
-),
-agg AS (
+_DECOMP_ORACLE = _HOURLY_GRID_SQL + f"""agg AS (
   SELECT user_id, date_trunc('hour', ts) AS hour,
          sum(CAST(value AS DECIMAL(18,2))) AS y
   FROM events GROUP BY 1, 2
@@ -4530,9 +4460,10 @@ def timeseries_classical_decomposition(spark: SparkSession, sf_dir: str) -> Data
     membership is integer-exact; rows without a full window are excluded
     by count, not null-padded.
 
-    Scale: inherits the gapfill grid contract (Theta(users x span) rows —
-    trend and seasonal are DEFINED on the dense series; sparse input would
-    change the answer, not just the cost): one user-keyed bounded-frame
+    Scale: inherits the ``_dense_hourly`` grid contract (Theta(users x
+    span) rows — trend and seasonal are DEFINED on the dense series;
+    sparse input would change the answer, not just the cost): one
+    user-keyed bounded-frame
     window ({DECOMP_MA} rows of state per user) and one (user,
     hour-of-day)-partitioned unbounded window for the seasonal index —
     chosen over groupBy + join-back by measurement (one fewer full-grid
@@ -4543,29 +4474,13 @@ def timeseries_classical_decomposition(spark: SparkSession, sf_dir: str) -> Data
     is super-linear in its contracted output. At 100 TB both windows are
     streaming-friendly sliding/partition aggregates over a
     date-partitioned grid."""
-    ev = _events(spark, sf_dir)
     # NTZ wall-clock domain end-to-end (ADVICE r12 #4): date_trunc/sequence
     # on instant timestamps silently coerce through the session timezone, so
     # a DST gap/repeat hour would split the hourly buckets vs the oracle's
     # naive date_trunc the moment io.py's UTC enforcement relaxed. Same fix
     # class as timeseries_seasonal_naive_eval (ADVICE r11 #4); sequence()
     # is NTZ-native in Spark 4 (element type stays timestamp_ntz).
-    hntz = F.col("ts").cast("timestamp_ntz")
-    hour = trunc_hour_ntz(hntz)
-    bounds = ev.groupBy("user_id").agg(
-        trunc_hour_ntz(F.min(hntz)).alias("h0"),
-        trunc_hour_ntz(F.max(hntz)).alias("h1"),
-    )
-    grid = bounds.select(
-        "user_id",
-        F.explode(F.expr("sequence(h0, h1, interval 1 hour)")).alias("hour"),
-    )
-    agg = ev.groupBy("user_id", hour.alias("hour")).agg(
-        F.sum(F.col("value").cast(D2)).alias("y")
-    )
-    dense = grid.join(agg, ["user_id", "hour"], "left").select(
-        "user_id", "hour", F.coalesce("y", F.lit(0).cast(D2)).alias("y")
-    )
+    dense = _dense_hourly(_events(spark, sf_dir), ntz=True, y=F.sum(F.col("value").cast(D2)))
     # Scale-adaptive fan-out before the window sort (r14, guide §2.5/§5):
     # the dense grid is the one genuinely row-heavy intermediate in the
     # fleet (~1M rows at sf0.1, Theta(users x span) by contract), and the
@@ -4680,15 +4595,9 @@ def timeseries_decomposition_sparse(spark: SparkSession, sf_dir: str) -> DataFra
     the difference between feasible and not. Companion precedent:
     timeseries_gapfill_runs cut the gapfill family's top-decade scaling
     exponent 0.74 -> 0.36 with the same contract change."""
-    from pyspark.sql.window import Window as W
-
-    ev = _events(spark, sf_dir)
-    hntz = F.col("ts").cast("timestamp_ntz")
     half = DECOMP_MA // 2
-    agg = ev.groupBy("user_id", trunc_hour_ntz(hntz).alias("hour")).agg(
-        F.sum(F.col("value").cast(D2)).alias("y")
-    )
-    wu = W.partitionBy("user_id")
+    agg = _hourly(_events(spark, sf_dir), ntz=True, y=F.sum(F.col("value").cast(D2)))
+    wu = Window.partitionBy("user_id")
     base = (
         agg.withColumn("h0", F.min("hour").over(wu))
         .withColumn("h1", F.max("hour").over(wu))
@@ -4696,7 +4605,7 @@ def timeseries_decomposition_sparse(spark: SparkSession, sf_dir: str) -> DataFra
         .withColumn("bigx", F.expr("timestampdiff(HOUR, h0, h1)"))
         .withColumn("hod0", F.hour("h0").cast("int"))
     )
-    wr = W.partitionBy("user_id").orderBy("x").rangeBetween(-half, half)
+    wr = Window.partitionBy("user_id").orderBy("x").rangeBetween(-half, half)
     base = base.withColumn("trend_sum", F.sum("y").over(wr))
     mid = base.filter(
         (F.col("x") >= half) & (F.col("x") <= F.col("bigx") - half)

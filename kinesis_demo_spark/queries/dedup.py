@@ -766,9 +766,53 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- SimHash ---------------------------------------------------------------------------
 
 
+def band_hamming_pairs(
+    docs: DataFrame, sig: str, bits: int, bands: int, max_hamming: int
+) -> DataFrame:
+    """(doc_a, doc_b, hamming) for every pair of ``docs(doc_id, <sig>)``
+    whose ``bits``-bit signatures differ in at most ``max_hamming`` bits.
+
+    Signatures are banded into ``bands`` x ``bits // bands``-bit keys with
+    integer ``%`` + ``div`` (exact at any width on both engines);
+    max_hamming < bands guarantees at least one identical band
+    (pigeonhole), so the band self-join finds EVERY qualifying pair — LSH
+    used as an exact algorithm, never a cross join. Shared by SimHash and
+    the perceptual-hash near-dups (queries/multimodal.py)."""
+    band_w = bits // bands
+    band_rows = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(band).alias("band"),
+                    F.expr(
+                        f"({sig} % {1 << ((band + 1) * band_w)}) div {1 << (band * band_w)}"
+                    ).alias("band_bits"),
+                )
+                for band in range(bands)
+            ]
+        )
+    )
+    # persist: both self-join sides consume the banded signatures; without
+    # caching the whole signature stage runs twice (see _shingled)
+    banded = track_persist(
+        docs.select("doc_id", sig, band_rows.alias("b")).select("doc_id", sig, "b.band", "b.band_bits")
+    )
+    x = banded.select(F.col("doc_id").alias("doc_a"), F.col(sig).alias("sig_a"), "band", "band_bits")
+    y = banded.select(F.col("doc_id").alias("doc_b"), F.col(sig).alias("sig_b"), "band", "band_bits")
+    hamming = F.bit_count(F.expr("sig_a ^ sig_b"))
+    return (
+        x.join(y, ["band", "band_bits"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", hamming.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
+
+
 def _simhash_pairs(docs: DataFrame, bits: int, bands: int, max_hamming: int) -> DataFrame:
     """(doc_a, doc_b, hamming) for every doc pair whose ``bits``-bit
-    tf-weighted SimHash signatures differ in at most ``max_hamming`` bits.
+    tf-weighted SimHash signatures differ in at most ``max_hamming`` bits
+    (``band_hamming_pairs``).
 
     The signature is computed entirely as per-doc array expressions: one md5
     per token into a hash array, then ONE aggregate-fold over that array
@@ -777,13 +821,7 @@ def _simhash_pairs(docs: DataFrame, bits: int, bands: int, max_hamming: int) -> 
     |tokens| x bits rows through an exchange for the same answer. Bit
     extraction is pure integer arithmetic on BOTH engines, exact at any
     width (a double divide-then-truncate is not above 2^53): bit b of h
-    tests ``h % 2^(b+1) >= 2^b``, band bits via ``%`` + ``div``.
-
-    Signatures are banded into ``bands`` x ``bits // bands``-bit keys;
-    max_hamming < bands guarantees at least one identical band
-    (pigeonhole), so the band join finds EVERY qualifying pair — LSH used as
-    an exact algorithm, never a cross join."""
-    band_w = bits // bands
+    tests ``h % 2^(b+1) >= 2^b``."""
     tok_h = spread(docs.select("doc_id", "text")).select(
         "doc_id", F.transform(F.split("text", " "), lambda w: h60(w) % (1 << bits)).alias("hws")
     )
@@ -803,36 +841,7 @@ def _simhash_pairs(docs: DataFrame, bits: int, bands: int, max_hamming: int) -> 
         lambda acc, x: acc + x,
     )
     sim = tok_h.select("doc_id", simhash.alias("simhash"))
-    band_rows = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(band).alias("band"),
-                    F.expr(
-                        f"(simhash % {1 << ((band + 1) * band_w)}) div {1 << (band * band_w)}"
-                    ).alias("band_bits"),
-                )
-                for band in range(bands)
-            ]
-        )
-    )
-    # persist: both self-join sides consume the banded signatures; without
-    # caching the whole per-token SimHash fold runs twice (see _shingled)
-    banded = track_persist(
-        sim.select("doc_id", "simhash", band_rows.alias("b")).select(
-            "doc_id", "simhash", "b.band", "b.band_bits"
-        )
-    )
-    x = banded.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "band", "band_bits")
-    y = banded.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "band", "band_bits")
-    hamming = F.bit_count(F.expr("sim_a ^ sim_b"))
-    return (
-        x.join(y, ["band", "band_bits"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return band_hamming_pairs(sim, "simhash", bits, bands, max_hamming)
 
 
 def _simhash_oracle(bits: int, bands: int, max_hamming: int) -> str:

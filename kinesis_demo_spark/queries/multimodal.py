@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..io import load_table, spread, track_persist
 from ..operators.multimodal import decode_features, frame_sample
 from ..registry import register
+from .dedup import band_hamming_pairs
 
 FORMATS = ("png", "jpeg", "wav")
 
@@ -227,43 +228,7 @@ def phash_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda a, b: a + b,
     )
     ph = hashed.select("doc_id", phash.alias("phash"))
-    return _band_hamming_pairs(ph)
-
-
-def _band_hamming_pairs(ph: DataFrame) -> DataFrame:
-    """ph(doc_id, phash) -> (doc_a, doc_b, hamming <= {PHASH_MAX_HAMMING})
-    via the exact {PHASH_BANDS}-band pigeonhole join (two hashes within
-    hamming d < bands must agree on >= 1 whole band) — shared by the
-    byte-sampled and decoded-pixel phash variants."""
-    band_rows = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(band).alias("band"),
-                    F.expr(
-                        f"(phash % {1 << ((band + 1) * _PHASH_BAND_BITS)}) "
-                        f"div {1 << (band * _PHASH_BAND_BITS)}"
-                    ).alias("band_bits"),
-                )
-                for band in range(PHASH_BANDS)
-            ]
-        )
-    )
-    bands = track_persist(
-        ph.select("doc_id", "phash", band_rows.alias("b")).select(
-            "doc_id", "phash", "b.band", "b.band_bits"
-        )
-    )
-    x = bands.select(F.col("doc_id").alias("doc_a"), F.col("phash").alias("ph_a"), "band", "band_bits")
-    y = bands.select(F.col("doc_id").alias("doc_b"), F.col("phash").alias("ph_b"), "band", "band_bits")
-    hamming = F.bit_count(F.expr("ph_a ^ ph_b"))
-    return (
-        x.join(y, ["band", "band_bits"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
-        .distinct()
-    )
+    return band_hamming_pairs(ph, "phash", PHASH_PIXELS, PHASH_BANDS, PHASH_MAX_HAMMING)
 
 
 # --- REAL decode path (pure-numpy BMP codec, VERDICT r5 #6) --------------------------
@@ -469,7 +434,7 @@ def phash_image_neardup_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id")
     media = docs.mapInPandas(_neardup_bmp_batches, _BMP_SCHEMA)
     ph = media.mapInPandas(phash_decoded_batches, PHASH_SCHEMA)
-    return _band_hamming_pairs(ph)
+    return band_hamming_pairs(ph, "phash", PHASH_PIXELS, PHASH_BANDS, PHASH_MAX_HAMMING)
 
 
 # --- REAL frame sampling over a video-ish container (r9) ----------------------------

@@ -11,7 +11,7 @@ plans hold on a multi-executor cluster at 100 TB:
 - Streaming checkpoints written through the FileSystem-API checkpoint file
   manager: the same temp-file-then-rename protocol as Spark's default
   FileContext manager, without a forked ``readlink`` per rename on a host
-  without libhadoop (see the conf's comment in ``get_spark``).
+  without libhadoop (see the conf's comment in ``RUNTIME_CONFS``).
 """
 
 from __future__ import annotations
@@ -19,6 +19,45 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+# Runtime SQL confs the engine's plans and streams depend on. get_spark
+# builds every engine session with them; io.ensure_runtime_confs applies
+# them to a session the engine did not build (the driver contract's own).
+RUNTIME_CONFS = {
+    # Event-time windows must match the DuckDB oracle's naive timestamps.
+    "spark.sql.session.timeZone": "UTC",
+    # Fixture timestamp columns must surface as UTC instants whatever
+    # physical type a fixture generation uses: TIMESTAMP(NANOS) scans as
+    # int64 (io.load_table converts), naive TIMESTAMP(MICROS) scans as
+    # TIMESTAMP_LTZ directly rather than TIMESTAMP_NTZ.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Write streaming checkpoints (offset, commit and source logs, state
+    # store deltas) through the FileSystem API, not Spark's default
+    # FileContext manager. Without libhadoop, FileContext's rename stats
+    # both paths with getFileLinkStatus, and on the local file system
+    # each stat forks a `readlink` process: about 90 per micro-batch of
+    # perfbench's serve_and_drain drain. On a 4-core host one 300-byte
+    # createAtomic + close took 31-34 ms through the FileContext
+    # manager against 0.04 ms for a Python write + rename;
+    # fc.rename(OVERWRITE) alone took 25 ms and fs.rename 0.9 ms.
+    # Safe because both managers write to a temp file and rename it into
+    # place, and both refuse an existing destination when
+    # overwriteIfPossible is false: FileSystemBasedCheckpointFileManager
+    # .renameTempFile checks exists, then calls rename, and LocalFs's
+    # FileContext rename is itself a check followed by File.renameTo.
+    # Spark's fallback warning is about a non-atomic FileSystem.rename;
+    # rename(2) is atomic on a local POSIX file system. The files are
+    # the same either way: N.delta, its N.delta.crc checksum and
+    # Hadoop's .N.delta.crc sidecar, with identical sizes.
+    CHECKPOINT_MANAGER_CONF: (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+}
 
 
 def default_parallelism() -> int:
@@ -87,7 +126,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
-        .config("spark.sql.session.timeZone", "UTC")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or default_shuffle_partitions(cores)),
@@ -115,12 +153,6 @@ def get_spark(
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Fixture timestamp columns must surface as UTC instants whatever
-        # physical type a fixture generation uses: TIMESTAMP(NANOS) scans as
-        # int64 (io.load_table converts), naive TIMESTAMP(MICROS) scans as
-        # TIMESTAMP_LTZ directly rather than TIMESTAMP_NTZ.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # No Python call-site capture per DataFrame API call. With it on,
         # PySpark wraps every functions.* and Column call to read a conf,
         # set and clear a JVM-side origin, and walk the Python stack: one
@@ -131,30 +163,7 @@ def get_spark(
         # it. PySpark reads this conf once per process, from the first
         # active session.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # Write streaming checkpoints (offset, commit and source logs, state
-        # store deltas) through the FileSystem API, not Spark's default
-        # FileContext manager. Without libhadoop, FileContext's rename stats
-        # both paths with getFileLinkStatus, and on the local file system
-        # each stat forks a `readlink` process: about 90 per micro-batch of
-        # perfbench's serve_and_drain drain. On a 4-core host one 300-byte
-        # createAtomic + close took 31-34 ms through the FileContext
-        # manager against 0.04 ms for a Python write + rename;
-        # fc.rename(OVERWRITE) alone took 25 ms and fs.rename 0.9 ms.
-        # Safe because both managers write to a temp file and rename it into
-        # place, and both refuse an existing destination when
-        # overwriteIfPossible is false: FileSystemBasedCheckpointFileManager
-        # .renameTempFile checks exists, then calls rename, and LocalFs's
-        # FileContext rename is itself a check followed by File.renameTo.
-        # Spark's fallback warning is about a non-atomic FileSystem.rename;
-        # rename(2) is atomic on a local POSIX file system. The files are
-        # the same either way: N.delta, its N.delta.crc checksum and
-        # Hadoop's .N.delta.crc sidecar, with identical sizes.
-        .config(
-            "spark.sql.streaming.checkpointFileManagerClass",
-            "org.apache.spark.sql.execution.streaming.checkpointing."
-            "FileSystemBasedCheckpointFileManager",
-        )
     )
-    for k, v in (extra_confs or {}).items():
+    for k, v in {**RUNTIME_CONFS, **(extra_confs or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -111,6 +111,8 @@ def test_checkpoint_from_the_file_context_manager_resumes(spark, tmp_path):
     spark.conf.set(_MANAGER_CONF, _FILE_CONTEXT_MANAGER)
     try:
         run()
+        # stream_events keeps a manager the session chose explicitly
+        assert spark.conf.get(_MANAGER_CONF) == _FILE_CONTEXT_MANAGER
     finally:
         # back to the session's own manager; unset would fall back to
         # Spark's default, which is the FileContext manager

@@ -7,7 +7,9 @@ import os
 
 import pytest
 
-from kinesis_demo_spark.session import default_driver_memory
+from kinesis_demo_spark.io import SMOKE_SF_DIR
+from kinesis_demo_spark.session import CHECKPOINT_MANAGER_CONF, default_driver_memory
+from kinesis_demo_spark.streaming.pipeline import stream_events
 
 
 def _host_with(monkeypatch, phys_bytes: int) -> None:
@@ -41,15 +43,33 @@ def test_engine_session_turns_off_call_site_capture(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
+_MANAGERS = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _checkpoint_manager(session, path) -> str:
+    """The class of the checkpoint file manager ``session`` writes ``path``
+    through."""
+    jvm = session._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)),
+        session._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return manager.getClass().getName()
+
+
 def test_engine_session_checkpoints_through_the_file_system_manager(spark, tmp_path):
     """A local checkpoint resolves to the FileSystem-API checkpoint manager,
     whose rename forks no process on a host without libhadoop."""
-    jvm = spark._jvm
-    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
-        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
-        spark._jsparkSession.sessionState().newHadoopConf(),
-    )
-    assert manager.getClass().getName() == (
-        "org.apache.spark.sql.execution.streaming.checkpointing."
-        "FileSystemBasedCheckpointFileManager"
-    )
+    assert _checkpoint_manager(spark, tmp_path) == _MANAGERS + "FileSystemBasedCheckpointFileManager"
+
+
+def test_foreign_session_checkpoints_through_the_file_system_manager(spark, tmp_path):
+    """A session whose manager conf is unset falls back to Spark's
+    FileContext manager; the engine's stream reader sets the FileSystem-API
+    manager on it, as on any session the engine did not build (the driver
+    contract's own)."""
+    foreign = spark.newSession()
+    foreign.conf.unset(CHECKPOINT_MANAGER_CONF)
+    assert _checkpoint_manager(foreign, tmp_path) == _MANAGERS + "FileContextBasedCheckpointFileManager"
+    stream_events(foreign, SMOKE_SF_DIR)
+    assert _checkpoint_manager(foreign, tmp_path) == _MANAGERS + "FileSystemBasedCheckpointFileManager"

@@ -472,11 +472,15 @@ def test_steady_tail_summarizes_progress_after_warm_up():
     """The streaming tools' shared steady-tail summary (no Spark): the first
     third of the progress dicts is warm-up and never counted; an empty tail
     reports no batch, phase or state figures instead of indexing an empty
-    list. Phase and state-commit columns are medians over the tail."""
+    list. Phase and state-commit columns are medians over the tail.
+    Achieved rows/s is per wall second from the first tail batch's start to
+    the last one's end, idle time between batches included: 6000 rows over
+    the 4 s from 10:00:01 to 10:00:05, not over the 3 s of summed batch
+    durations."""
     from tools.stream_throughput import steady_tail
 
-    def progress(rows, ms, state_rows=None, phase_ms=None):
-        p = {"numInputRows": rows, "batchDuration": ms}
+    def progress(rows, ms, state_rows=None, phase_ms=None, start="2026-01-01T10:00:00.000Z"):
+        p = {"numInputRows": rows, "batchDuration": ms, "timestamp": start}
         if phase_ms is not None:
             p["durationMs"] = {
                 "latestOffset": phase_ms,
@@ -494,10 +498,11 @@ def test_steady_tail_summarizes_progress_after_warm_up():
         return p
 
     warm = [progress(1, 9000, 999, 900)]
-    steady = [progress(1000, 500, 40, 4), progress(3000, 1500, 70, 8),
-              progress(2000, 1000, 50, 30)]
+    steady = [progress(1000, 500, 40, 4, "2026-01-01T10:00:01.000Z"),
+              progress(3000, 1500, 70, 8, "2026-01-01T10:00:02.000Z"),
+              progress(2000, 1000, 50, 30, "2026-01-01T10:00:04.000Z")]
     assert steady_tail(warm + steady) == {
-        "achieved_rows_s": 2000,
+        "achieved_rows_s": 1500,
         "batches": 3,
         "batch_ms_p50": 1000,
         "batch_ms_p99": 1500,

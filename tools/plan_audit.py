@@ -29,6 +29,14 @@ in hash order (``profile_events_columns``, ``tpch_q21_waiting_suppliers``),
 and ``prf_query_expansion`` embeds the AQE plan of a cached index built by
 an earlier query.
 
+PLANS.json is a 32-core record: ``repartition(defaultParallelism)`` and the
+core-derived shuffle-partition count are part of the optimized plan, so an
+audit compared with it runs with ``SPARK_GRAFT_CPUS=32`` whatever the host
+(at 4 cores 117 fingerprints differ from the record).
+``tests/test_plans.py::test_every_plan_matches_the_plans_record`` runs the
+whole registry that way at sf0.001 and compares every ``fingerprint`` (bar
+the three above) and every ``n_build_jobs`` with the record.
+
 Output: one summary JSON line to stdout plus the most-shuffling queries
 to stderr; ``--json PATH`` writes the full map to a sidecar (PLANS.json) so
 plan-shape regressions show up in review diffs. ``--only name[,name...]``

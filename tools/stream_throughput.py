@@ -34,6 +34,7 @@ import statistics
 import sys
 import tempfile
 import time
+from datetime import datetime
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -56,16 +57,28 @@ _PHASES = {
 }
 
 
+def _epoch_s(progress: dict) -> float:
+    """A progress dict's trigger start (``timestamp``, ISO-8601 UTC) in
+    epoch seconds."""
+    return datetime.fromisoformat(progress["timestamp"]).timestamp()
+
+
 def steady_tail(progresses: list[dict]) -> dict:
     """Summarize a query's progress dicts over the steady tail — every batch
     after the first third (stream warm-up): achieved rows/s, batch-duration
     percentiles, the median of each phase in ``_PHASES`` and of the state
     operator's ``commitTimeMs`` (summed over its partition tasks, so not
-    wall time), and peak state size. An empty tail reports 0 rows/s and
+    wall time), and peak state size. Achieved rows/s is the tail's rows per
+    wall second, from the first tail batch's start (its progress
+    ``timestamp``) to the last one's end, so the idle time between the
+    batches of a fixed trigger counts. An empty tail reports 0 rows/s and
     None for every batch, phase and state figure."""
     tail = progresses[len(progresses) // 3 :]
     rows = sum(p["numInputRows"] for p in tail)
-    dur_s = sum(p["batchDuration"] for p in tail) / 1000.0
+    wall_s = (
+        _epoch_s(tail[-1]) + tail[-1]["batchDuration"] / 1000.0 - _epoch_s(tail[0])
+        if tail else 0
+    )
     batch_ms = sorted(p["batchDuration"] for p in tail)
 
     def pct(f):
@@ -76,7 +89,7 @@ def steady_tail(progresses: list[dict]) -> dict:
 
     st = [p["stateOperators"][0] for p in tail if p.get("stateOperators")]
     return {
-        "achieved_rows_s": round(rows / dur_s) if dur_s else 0,
+        "achieved_rows_s": round(rows / wall_s) if wall_s else 0,
         "batches": len(tail),
         "batch_ms_p50": pct(0.50),
         "batch_ms_p99": pct(0.99),
